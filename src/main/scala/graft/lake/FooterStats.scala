@@ -2,11 +2,10 @@ package graft.lake
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -26,8 +25,8 @@ import org.apache.spark.sql.types._
   * cost pruning opportunity, never correctness:
   *
   *  - INT96 timestamps carry no usable footer stats (undefined sort
-  *    order; parquet deprecates them) → None. The writer forces
-  *    TIMESTAMP_MICROS output instead.
+  *    order; parquet deprecates them) → None. [[LakeFileWriter]] always
+  *    writes TIMESTAMP_MICROS instead.
   *  - Non-ASCII string bounds → None: parquet orders binary stats by
   *    unsigned UTF-8 bytes, the pruner compares with java.lang.String —
   *    the two orderings agree only on ASCII, so keeping a non-ASCII bound
@@ -37,22 +36,33 @@ import org.apache.spark.sql.types._
   */
 object FooterStats {
 
+  /** Columns eligible for min/max stats (atomic comparable types). */
+  def statFields(schema: StructType): Seq[StructField] =
+    schema.fields.toSeq.filter(f => f.dataType match {
+      case _: NumericType | StringType | DateType | TimestampType => true
+      case _ => false
+    })
+
   /** Read (rowCount, stats for `fields`) from one local parquet file. */
   def read(file: java.nio.file.Path, fields: Seq[StructField]): (Long, Map[String, ColumnStats]) = {
-    val in = HadoopInputFile.fromPath(new HPath(file.toUri), new Configuration())
+    val in = HadoopInputFile.fromPath(new HPath(file.toUri), LakeIOConf.conf)
     val reader = ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rowCount = blocks.map(_.getRowCount).sum
-      val chunksByName: Map[String, Seq[ColumnChunkMetaData]] =
-        blocks.flatMap(_.getColumns.asScala)
-          .groupBy(_.getPath.toDotString)
-          .map { case (k, v) => k -> v.toSeq }
-      val stats = fields.flatMap { f =>
-        chunksByName.get(f.name).flatMap(aggregate(f, _)).map(f.name -> _)
-      }.toMap
-      (rowCount, stats)
-    } finally reader.close()
+    try fromFooter(reader.getFooter, fields) finally reader.close()
+  }
+
+  /** (rowCount, stats for `fields`) of a footer already in memory — the
+    * one a writer just produced, or one read by [[read]]. */
+  def fromFooter(footer: ParquetMetadata, fields: Seq[StructField]): (Long, Map[String, ColumnStats]) = {
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rowCount = blocks.map(_.getRowCount).sum
+    val chunksByName: Map[String, Seq[ColumnChunkMetaData]] =
+      blocks.flatMap(_.getColumns.asScala)
+        .groupBy(_.getPath.toDotString)
+        .map { case (k, v) => k -> v.toSeq }
+    val stats = fields.flatMap { f =>
+      chunksByName.get(f.name).flatMap(aggregate(f, _)).map(f.name -> _)
+    }.toMap
+    (rowCount, stats)
   }
 
   /** Fold one column's chunk statistics across all row groups. */

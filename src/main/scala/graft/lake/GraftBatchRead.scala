@@ -20,12 +20,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * directly and does not route through the V1 fallback, so the COW scan
   * must produce InternalRows on executors itself.
   *
-  * Row-based parquet-mr reader over the snapshot's (pruned) file list —
-  * one InputPartition per data file, readers run fully distributed. The
-  * hot SELECT path stays on the V1 bridge (vectorized, codegen); this
-  * reader only feeds rewrites, whose cost is dominated by the write side.
-  * Null-fills columns missing from old files (schema evolution) like the
-  * main read path.
+  * One InputPartition per data file of the snapshot's (pruned) file
+  * list; readers run fully distributed. Each wraps Spark's own parquet
+  * reader (ParquetScanBridge: vectorized where the schema allows, with
+  * null-fill for columns missing from old files) and applies position,
+  * equality and deletion-vector deletes inside the reader; only the
+  * delete files themselves are read with parquet-mr `Group` readers. The
+  * hot SELECT path is [[GraftVectorScan]]; the V1 bridge remains only for
+  * `_file` and pending merge-on-read deletes there.
   */
 /** One equality-delete file a reader must apply: tuples at `path` hold key
   * VALUES over `cols` (physical names); rows of data files with commit

@@ -1,27 +1,19 @@
 package graft.lake
 
-import java.util.UUID
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-/** Native executor-side parquet write path (DSv2 `BatchWrite`), used by
-  * row-level operation rewrites (MERGE / UPDATE): Spark's ReplaceData exec
-  * requires a real BatchWrite — the V1 insert fallback is not applied.
+/** Executor-side write path (DSv2 `BatchWrite`) of the row-level
+  * operation rewrites (MERGE / UPDATE) and dynamic partition overwrite:
+  * Spark's ReplaceData / OverwritePartitionsDynamic execs require a real
+  * BatchWrite — the V1 insert fallback is not applied.
   *
-  * Each task writes one parquet file per partition-value tuple it sees
-  * (hash-partitioned input ⇒ few tuples per task), tracks rowCount +
-  * min/max/null stats inline, and ships `DataFile` entries back as commit
+  * Each task writes through [[LakeFileWriter]] — the same writer as every
+  * other lake write — one parquet file per partition-value tuple it sees
+  * (hash-partitioned input ⇒ few tuples per task), straight into `data/`,
+  * and ships `DataFile` entries with footer stats back as commit
   * messages; the driver-side commit atomically swaps the operation's
   * scanned files for the new files in one snapshot. Task retries are safe:
   * only files named in commit messages are registered, strays are swept by
@@ -37,11 +29,15 @@ class GraftBatchWrite(
   override def toBatch: BatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // bind the partition-value expressions on the DRIVER (needs the
-    // analyzer + session conf); the bound trees serialize to executors
+    // bind the partition-value expressions and resolve the file settings
+    // on the DRIVER (both need the session); they serialize to executors.
+    // Physical names throughout: the parquet schema, the stats keys, and
+    // the partition-source lookups all match what every other writer
+    // produces, regardless of column renames (ordinals are unchanged)
     val phys = SchemaNames.toPhysical(
       DataType.fromJson(schemaJson).asInstanceOf[StructType])
-    new GraftDataWriterFactory(tableDirStr, schemaJson, spec,
+    new GraftDataWriterFactory(tableDirStr,
+      LakeFileWriter(org.apache.spark.sql.SparkSession.active, phys), spec,
       RowPartitionEval.bind(spec, phys))
   }
 
@@ -70,50 +66,32 @@ final case class GraftCommitMessage(files: Seq[DataFile]) extends WriterCommitMe
 
 final class GraftDataWriterFactory(
     tableDirStr: String,
-    schemaJson: String,
+    files: LakeFileWriter,
     spec: Seq[PartitionField],
-    pvExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+    pvExprs: Seq[Expression])
   extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    // physical names throughout: the parquet schema, the stats keys, and
-    // the partition-source lookups all match what every other writer
-    // produces, regardless of column renames (ordinals are unchanged)
-    new GraftDataWriter(tableDirStr,
-      SchemaNames.toPhysical(
-        DataType.fromJson(schemaJson).asInstanceOf[StructType]), spec, pvExprs)
+    new GraftDataWriter(tableDirStr, files, spec, pvExprs)
 }
 
 final class GraftDataWriter(
     tableDirStr: String,
-    schema: StructType,
+    files: LakeFileWriter,
     spec: Seq[PartitionField],
-    pvExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+    pvExprs: Seq[Expression])
   extends DataWriter[InternalRow] {
 
-  private val messageType: MessageType = ParquetSchema.fromStruct(schema)
-  private val factory = new SimpleGroupFactory(messageType)
+  private val out = files.task(
+    java.nio.file.Paths.get(tableDirStr).resolve("data").toString,
+    clustered = false)
+  private val width = files.schema.length
 
-  /** pvExprs with ordinals shifted by the rewrite-row prefix offset —
-    * computed on the first row (the offset is constant per write). */
-  private var shifted: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = _
-
-  /** One open file per partition-value tuple seen by this task. */
-  private val writers = scala.collection.mutable.Map.empty[
-    Map[String, String], (org.apache.parquet.hadoop.ParquetWriter[
-      org.apache.parquet.example.data.Group], String, FileStats)]
-
-  private def writerFor(pv: Map[String, String]) =
-    writers.getOrElseUpdate(pv, {
-      val name = s"data/${UUID.randomUUID()}.parquet"
-      val path = java.nio.file.Paths.get(tableDirStr).resolve(name)
-      val w = ExampleParquetWriter.builder(new HPath(path.toString))
-        .withType(messageType)
-        .withConf(new Configuration(false))
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-      (w, name, new FileStats(schema))
-    })
+  /** pvExprs with ordinals shifted by the rewrite-row prefix offset, and
+    * the data-column view at that offset — built on the first row (the
+    * offset is constant per write). */
+  private var shifted: Seq[Expression] = _
+  private var data: ProjectingInternalRow = _
 
   override def write(row: InternalRow): Unit = {
     // ReplaceData hands the writer the RAW rewrite-query output when the
@@ -123,236 +101,36 @@ final class GraftDataWriter(
     // a metadata projection also exists. The data columns are the trailing
     // schema.length fields — read at this offset. (Exact-result specs pin
     // this contract; a layout change breaks them loudly, not silently.)
-    val off = row.numFields - schema.length
-    require(off >= 0,
-      s"row has ${row.numFields} fields but table schema has ${schema.length}")
-    if (shifted == null) shifted = pvExprs.map(RowPartitionEval.shift(_, off))
+    if (data == null) {
+      val off = row.numFields - width
+      require(off >= 0,
+        s"row has ${row.numFields} fields but table schema has $width")
+      shifted = pvExprs.map(RowPartitionEval.shift(_, off))
+      data = ProjectingInternalRow(files.schema, off until off + width)
+    }
     val pv = spec.zip(shifted).map { case (f, e) =>
       f.name -> String.valueOf(e.eval(row))
     }.toMap
-    val (w, _, stats) = writerFor(pv)
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(off + i))
-        GroupValues.add(g, i, schema.fields(i).dataType, row, off + i)
-      i += 1
-    }
-    stats.update(row, off)
-    w.write(g)
+    data.project(row)
+    out.write(pv, data)
   }
 
-  override def commit(): WriterCommitMessage = {
-    val files = writers.toSeq.map { case (pv, (w, name, stats)) =>
-      w.close()
-      val size = java.nio.file.Files.size(
-        java.nio.file.Paths.get(tableDirStr).resolve(name))
-      DataFile(name, stats.rowCount, size, pv, stats.result(),
-        seq = Snapshot.UnassignedSeq)
-    }
-    GraftCommitMessage(files)
-  }
+  override def commit(): WriterCommitMessage =
+    GraftCommitMessage(out.commit().map(f =>
+      DataFile(s"data/${f.name}", f.rowCount, f.sizeBytes, f.partitionValues,
+        f.stats, seq = Snapshot.UnassignedSeq)))
 
-  override def abort(): Unit = writers.values.foreach { case (w, name, _) =>
-    scala.util.Try(w.close())
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(tableDirStr).resolve(name))
-  }
+  override def abort(): Unit = out.abort()
 
   override def close(): Unit = ()
 }
 
-/** Inline per-file stats accumulation (numeric/date/timestamp min-max +
-  * null counts; strings skipped — absent stats are conservatively "might
-  * match" for the pruner). */
-final class FileStats(schema: StructType) {
-  var rowCount: Long = 0L
-  private val mins = new Array[Long](schema.length)
-  private val maxs = new Array[Long](schema.length)
-  private val dmins = new Array[Double](schema.length)
-  private val dmaxs = new Array[Double](schema.length)
-  private val nulls = new Array[Long](schema.length)
-  private val seen = new Array[Boolean](schema.length)
-  java.util.Arrays.fill(dmins, Double.PositiveInfinity)
-  java.util.Arrays.fill(dmaxs, Double.NegativeInfinity)
-  java.util.Arrays.fill(mins, Long.MaxValue)
-  java.util.Arrays.fill(maxs, Long.MinValue)
-
-  def update(row: InternalRow, off: Int = 0): Unit = {
-    rowCount += 1
-    var i = 0
-    while (i < schema.length) {
-      if (row.isNullAt(off + i)) nulls(i) += 1
-      else schema.fields(i).dataType match {
-        case IntegerType | DateType =>
-          val v = row.getInt(off + i).toLong
-          mins(i) = math.min(mins(i), v); maxs(i) = math.max(maxs(i), v)
-          seen(i) = true
-        case LongType | TimestampType | TimestampNTZType =>
-          val v = row.getLong(off + i)
-          mins(i) = math.min(mins(i), v); maxs(i) = math.max(maxs(i), v)
-          seen(i) = true
-        case DoubleType =>
-          val v = row.getDouble(off + i)
-          dmins(i) = math.min(dmins(i), v); dmaxs(i) = math.max(dmaxs(i), v)
-          seen(i) = true
-        case FloatType =>
-          val v = row.getFloat(off + i).toDouble
-          dmins(i) = math.min(dmins(i), v); dmaxs(i) = math.max(dmaxs(i), v)
-          seen(i) = true
-        case _ => // string/decimal/binary: no inline stats
-      }
-      i += 1
-    }
-  }
-
-  def result(): Map[String, ColumnStats] = {
-    schema.fields.zipWithIndex.flatMap { case (f, i) =>
-      f.dataType match {
-        case IntegerType | DateType | LongType | TimestampType | TimestampNTZType
-            if seen(i) =>
-          Some(f.name -> ColumnStats(Some(mins(i).toString),
-            Some(maxs(i).toString), Some(nulls(i))))
-        case DoubleType | FloatType if seen(i) =>
-          Some(f.name -> ColumnStats(Some(dmins(i).toString),
-            Some(dmaxs(i).toString), Some(nulls(i))))
-        case _ if nulls(i) > 0 =>
-          Some(f.name -> ColumnStats(None, None, Some(nulls(i))))
-        case _ => None
-      }
-    }.toMap
-  }
-}
-
-/** Parquet MessageType for a Spark StructType. Nested types use the
-  * standard (non-legacy) encodings Spark itself writes — 3-level LIST
-  * (`optional group (LIST) { repeated group list { optional element } }`)
-  * and MAP (`repeated group key_value { required key; optional value }`) —
-  * so files from this writer and from the Spark datasource path are
-  * interchangeable under both the vectorized SELECT reader and the COW
-  * rewrite reader. */
-object ParquetSchema {
-  import org.apache.parquet.schema.{Type => PType}
-  import org.apache.parquet.schema.Type.Repetition
-
-  def fromStruct(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(typeFor(f.name, f.dataType,
-      Repetition.OPTIONAL)))
-    b.named("graft_schema")
-  }
-
-  def typeFor(name: String, dt: DataType, rep: Repetition): PType = {
-    def prim(t: PrimitiveTypeName) = Types.primitive(t, rep)
-    dt match {
-      case IntegerType => prim(PrimitiveTypeName.INT32).named(name)
-      case LongType => prim(PrimitiveTypeName.INT64).named(name)
-      case DoubleType => prim(PrimitiveTypeName.DOUBLE).named(name)
-      case FloatType => prim(PrimitiveTypeName.FLOAT).named(name)
-      case BooleanType => prim(PrimitiveTypeName.BOOLEAN).named(name)
-      case StringType => prim(PrimitiveTypeName.BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case BinaryType => prim(PrimitiveTypeName.BINARY).named(name)
-      case DateType => prim(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.dateType()).named(name)
-      case TimestampType => prim(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case TimestampNTZType => prim(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(false,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case d: DecimalType if d.precision <= 18 =>
-        prim(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(name)
-      case ArrayType(et, _) =>
-        Types.buildGroup(rep).as(LogicalTypeAnnotation.listType())
-          .addField(Types.repeatedGroup()
-            .addField(typeFor("element", et, Repetition.OPTIONAL))
-            .named("list"))
-          .named(name)
-      case st: StructType =>
-        val gb = Types.buildGroup(rep)
-        st.fields.foreach(f =>
-          gb.addField(typeFor(f.name, f.dataType, Repetition.OPTIONAL)))
-        gb.named(name)
-      case MapType(kt, vt, _) =>
-        Types.buildGroup(rep).as(LogicalTypeAnnotation.mapType())
-          .addField(Types.repeatedGroup()
-            .addField(typeFor("key", kt, Repetition.REQUIRED))
-            .addField(typeFor("value", vt, Repetition.OPTIONAL))
-            .named("key_value"))
-          .named(name)
-      case other =>
-        throw new UnsupportedOperationException(
-          s"row-level write of column type $other not supported yet")
-    }
-  }
-}
-
-/** Recursive Spark-value → parquet-example-Group writer. InternalRow,
-  * ArrayData, and MapData key/value arrays all implement
-  * SpecializedGetters, so one ordinal-addressed routine covers every
-  * nesting level. */
-object GroupValues {
-  import org.apache.parquet.example.data.Group
-
-  def add(g: Group, fieldIdx: Int, dt: DataType, src: SpecializedGetters,
-      ord: Int): Unit = dt match {
-    case IntegerType | DateType => g.add(fieldIdx, src.getInt(ord))
-    case LongType | TimestampType | TimestampNTZType =>
-      g.add(fieldIdx, src.getLong(ord))
-    case DoubleType => g.add(fieldIdx, src.getDouble(ord))
-    case FloatType => g.add(fieldIdx, src.getFloat(ord))
-    case BooleanType => g.add(fieldIdx, src.getBoolean(ord))
-    case StringType => g.add(fieldIdx,
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(
-        src.getUTF8String(ord).getBytes))
-    case BinaryType => g.add(fieldIdx,
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(src.getBinary(ord)))
-    case d: DecimalType =>
-      g.add(fieldIdx, src.getDecimal(ord, d.precision, d.scale).toUnscaledLong)
-    case ArrayType(et, _) =>
-      val listG = g.addGroup(fieldIdx)
-      val arr = src.getArray(ord)
-      var j = 0
-      while (j < arr.numElements()) {
-        val entry = listG.addGroup(0) // repeated "list" group
-        if (!arr.isNullAt(j)) add(entry, 0, et, arr, j)
-        j += 1
-      }
-    case st: StructType =>
-      val sg = g.addGroup(fieldIdx)
-      val sr = src.getStruct(ord, st.length)
-      var j = 0
-      while (j < st.length) {
-        if (!sr.isNullAt(j)) add(sg, j, st.fields(j).dataType, sr, j)
-        j += 1
-      }
-    case MapType(kt, vt, _) =>
-      val mapG = g.addGroup(fieldIdx)
-      val m = src.getMap(ord)
-      val keys = m.keyArray()
-      val vals = m.valueArray()
-      var j = 0
-      while (j < m.numElements()) {
-        val kv = mapG.addGroup(0) // repeated "key_value" group
-        add(kv, 0, kt, keys, j)
-        if (!vals.isNullAt(j)) add(kv, 1, vt, vals, j)
-        j += 1
-      }
-    case other =>
-      throw new UnsupportedOperationException(
-        s"row-level write of column type $other not supported yet")
-  }
-}
-
 /** Row-side partition values for the executor write path: evaluates the
-  * SAME Catalyst expression the staged writer stages —
+  * SAME Catalyst expression [[GraftWriter.writeFiles]] computes —
   * `coalesce(PartitionTransforms.valueColumn(f), '__null__')` — analyzed
   * (implicit casts, session time zone) on the DRIVER and bound to row
-  * ordinals, then shipped to executors. Tuples from this writer and the
-  * staged writer agree BY CONSTRUCTION for every transform and type,
+  * ordinals, then shipped to executors. Tuples from this writer and
+  * `writeFiles` agree BY CONSTRUCTION for every transform and type,
   * including the timezone-sensitive date transforms and format-sensitive
   * identity casts a hand-mirrored reimplementation gets subtly wrong —
   * and dynamic-overwrite partition matching is only correct if they

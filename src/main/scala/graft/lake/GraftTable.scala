@@ -200,7 +200,7 @@ class GraftTable(
             SchemaNames.readLogicalWithProvenance(spark, s.schema, paths), s)
           .filter(fnot(coalesce(cond, lit(false))))
           .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-        GraftWriter.writeFiles(spark, store, s.schema, s.partitionSpec, kept)
+        GraftWriter.writeFiles(spark, store, s, kept)
       }
     // drop tuples that referenced the rewritten files (folded in above)
     val keptDeletes =
@@ -1149,15 +1149,13 @@ final class GraftWriteBuilder(store: SnapshotStore)
                       head)
                     .filter(fnot(coalesce(cond, lit(false))))
                     .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-                  GraftWriter.writeFiles(spark, store, head.schema,
-                    head.partitionSpec, kept)
+                  GraftWriter.writeFiles(spark, store, head, kept)
                 }
               // same CHECK enforcement as plain INSERT — this branch
               // writes through writeFiles directly, bypassing insert();
               // generated columns recompute BEFORE the check wrap so a
               // CHECK referencing one sees the real value (ADVICE r2)
-              val added = GraftWriter.writeFiles(spark, store, head.schema,
-                head.partitionSpec,
+              val added = GraftWriter.writeFiles(spark, store, head,
                 GraftWriter.enforceChecks(
                   GraftWriter.applyGenerated(data, head.generated),
                   head.checks))

@@ -6,51 +6,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Physical write path: stage parquet → collect per-file stats → move into
-  * `data/` → atomic snapshot commit (SURVEY.md §3.3).
+/** Physical write path: write parquet into a staging dir with
+  * [[LakeFileWriter]] → move the files into `data/` → atomic snapshot
+  * commit (SURVEY.md §3.3).
   *
   * Partitioned tables: the partition VALUE is computed into synthetic
-  * `__gp<i>` columns and the staging write uses `partitionBy(__gp*)`, so
-  * every staged file belongs to exactly one partition tuple (read back from
-  * its directory path). The synthetic columns are dropped by partitionBy;
-  * all ORIGINAL columns (including the transform's source column) stay in
-  * the data file, so reads need no partition-value reconstruction.
+  * `__gp<i>` STRING columns and rows are sorted within tasks on them, so
+  * each task writes one file per partition tuple, whose value strings are
+  * recorded as they are (an empty string stays ''). The synthetic columns
+  * are not written; all ORIGINAL columns (including the transform's
+  * source column) stay in the data file, so reads need no
+  * partition-value reconstruction.
   *
-  * Stats come from each staged file's parquet footer ([[FooterStats]]) —
-  * constant work per file, no data re-read, the same source Iceberg
-  * manifests are built from.
+  * Row counts and stats come from the footer each task has just written
+  * ([[FooterStats]]) — constant work per file, no data re-read, the same
+  * source Iceberg manifests are built from.
   */
 object GraftWriter {
 
   private val PartColPrefix = "__gp"
 
-  /** Columns eligible for min/max stats (atomic comparable types). */
-  private def statFields(schema: StructType): Seq[StructField] =
-    schema.fields.toSeq.filter(f => f.dataType match {
-      case _: NumericType | StringType | DateType | TimestampType => true
-      case _ => false
-    })
-
-  /** Write `df` as new data files of the table; returns the DataFile
-    * entries (paths relative to the table dir). */
+  /** Write `df` as new data files of the table whose current snapshot is
+    * `head` (schema, partition spec, generated columns and write
+    * properties all come from it); returns the DataFile entries (paths
+    * relative to the table dir). */
   def writeFiles(
       spark: SparkSession,
       store: SnapshotStore,
-      schema: StructType,
-      spec: Seq[PartitionField],
+      head: Snapshot,
       df: DataFrame): Seq[DataFile] = {
 
+    val schema = head.schema
+    val spec = head.partitionSpec
     val staging = store.tableDir.resolve(s".staging-${UUID.randomUUID()}")
-    // ONE head read per write: every table-property lookup below shares it
-    // (each head() re-reads and re-parses the snapshot JSON)
-    val headOpt = store.head()
     try {
       // GENERATED ALWAYS AS columns are (re)computed here — the single
       // choke point every batch write passes through — overriding whatever
       // the incoming rows carried (that IS the ALWAYS semantics; the
       // analyzer hands us NULL for them on INSERT).
-      val genApplied =
-        applyGenerated(df, headOpt.map(_.generated).getOrElse(Map.empty))
+      val genApplied = applyGenerated(df, head.generated)
       // Align to table schema by name (Spark has already resolved/ordered
       // for SQL inserts; this also covers direct API writes) + cast, and
       // rename to PHYSICAL column names — data files always carry the
@@ -79,8 +73,7 @@ object GraftWriter {
       // z-column, so min/max pruning works on all of them — the
       // multi-dimensional analogue of the linear sort below (Iceberg/Delta
       // OPTIMIZE ZORDER).
-      val orderSpec = headOpt
-        .flatMap(_.properties.get("graft.sort-order"))
+      val orderSpec = head.properties.get("graft.sort-order")
         .map(_.trim).getOrElse("")
       def physical(logical: String): String =
         schema.fields.find(_.name == logical) match {
@@ -119,49 +112,24 @@ object GraftWriter {
       // per tuple per append); `range` orders tuples across tasks, which
       // also bounds skew when one partition dominates. A sort-order table
       // clusters by (partition, sort keys) already — strictly stronger —
-      // so the mode only applies when no sort order is set.
-      val distMode = headOpt
-        .flatMap(_.properties.get("graft.write.distribution-mode"))
-        .getOrElse("none")
+      // so the mode only applies when no sort order is set. Either way
+      // rows are sorted within tasks on the partition tuple, so a task
+      // writes one tuple at a time: one open file, one file per tuple.
+      val distMode =
+        head.properties.getOrElse("graft.write.distribution-mode", "none")
       val clustered =
         if (sortKeys.nonEmpty) {
           val keys = partCols.map(col) ++ sortKeys
           withParts.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
-        } else distMode match {
-          case "hash" if spec.nonEmpty =>
-            withParts.repartition(partCols.map(col): _*)
-          case "range" if spec.nonEmpty =>
-            withParts.repartitionByRange(partCols.map(col): _*)
-          case "none" | _ => withParts
-        }
+        } else if (spec.isEmpty) withParts
+        else (distMode match {
+          case "hash" => withParts.repartition(partCols.map(col): _*)
+          case "range" => withParts.repartitionByRange(partCols.map(col): _*)
+          case _ => withParts
+        }).sortWithinPartitions(partCols.map(col): _*)
 
-      // INT96 (Spark's compatibility default) has no usable footer stats;
-      // MICROS is the standard type and what the stat domain expects. No
-      // per-write option exists for this, so set + restore the session
-      // conf: a concurrent non-lake write seeing MICROS is harmless-but-
-      // different, so restore narrowly around our own write. (A concurrent
-      // LAKE write racing the restore at worst stages INT96 files, which
-      // just yields no timestamp stats — pruning loss, never wrongness.)
-      val tsConf = "spark.sql.parquet.outputTimestampType"
-      val prevTs = spark.conf.get(tsConf)
-      spark.conf.set(tsConf, "TIMESTAMP_MICROS")
-      try {
-        if (spec.nonEmpty)
-          clustered.write.partitionBy(partCols: _*).parquet(staging.toString)
-        else clustered.write.parquet(staging.toString)
-      } finally spark.conf.set(tsConf, prevTs)
-
-      val sf = statFields(SchemaNames.toPhysical(schema))
-
-      // Move staged files into data/, deriving partition values from the
-      // hive-style staging layout. Row counts + column stats come from each
-      // file's parquet FOOTER (FooterStats) — constant work per file; the
-      // previous implementation re-read and re-aggregated everything it had
-      // just written, doubling the IO of every write. In a distributed
-      // deployment this loop is per-task on the executors that wrote the
-      // files; locally the driver walks the staging dir.
-      val staged = store.io.listTree(staging)
-        .filter(_.toString.endsWith(".parquet"))
+      val written = LakeFileWriter(spark, SchemaNames.toPhysical(schema))
+        .writeFrame(clustered, staging, spec.map(_.name))
 
       // Per-file bloom filters for `graft.bloom-columns` (STRING columns
       // only — the hash inserted must be byte-identical to the hash probed,
@@ -170,8 +138,7 @@ object GraftWriter {
       // Spark's own BloomFilterAggregate (the runtime-filter sketch), so
       // lookup uses the same xxhash64 domain. Opt-in per table because the
       // extra read pass is only worth it for point-lookup-heavy columns.
-      val bloomCols: Seq[String] = headOpt
-        .flatMap(_.properties.get("graft.bloom-columns"))
+      val bloomCols: Seq[String] = head.properties.get("graft.bloom-columns")
         .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(Seq.empty)
         .map { logical =>
@@ -190,8 +157,7 @@ object GraftWriter {
       // they answer "how many distinct values" from METADATA ONLY, feeding
       // the `t.stats` table and the optimizer's columnStats (join
       // reordering / broadcast decisions under CBO).
-      val ndvCols: Seq[String] = headOpt
-        .flatMap(_.properties.get("graft.ndv-columns"))
+      val ndvCols: Seq[String] = head.properties.get("graft.ndv-columns")
         .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(Seq.empty)
         .map { logical =>
@@ -206,18 +172,17 @@ object GraftWriter {
           }
         }
       // One column-pruned pass over the staged files computes BOTH sketch
-      // families, grouped by file.
+      // families, grouped by file name.
       val (bloomsByFile, ndvByFile): (Map[String, Map[String, String]],
           Map[String, Map[String, String]]) =
-        if ((bloomCols.isEmpty && ndvCols.isEmpty) || staged.isEmpty)
+        if ((bloomCols.isEmpty && ndvCols.isEmpty) || written.isEmpty)
           (Map.empty, Map.empty)
         else {
           import org.apache.spark.sql.graftbridge.ColumnBridge
           import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
           import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-          val numBits = headOpt
-            .flatMap(_.properties.get("graft.bloom-bits"))
-            .map(_.toLong).getOrElse(65536L)
+          val numBits = head.properties.get("graft.bloom-bits")
+            .map(longSetting("graft.bloom-bits", _)).getOrElse(65536L)
           val bloomAggs = bloomCols.map { c =>
             ColumnBridge.column(new BloomFilterAggregate(
               new XxHash64(Seq(ColumnBridge.expression(col(c)))),
@@ -240,51 +205,27 @@ object GraftWriter {
           (sliceOf(1, bloomCols), sliceOf(1 + bloomCols.size, ndvCols))
         }
 
-      staged.map { p =>
-        val rel = staging.relativize(p).toString
-        val pvs: Map[String, String] = rel.split('/').dropRight(1)
-          .flatMap { seg =>
-            seg.split("=", 2) match {
-              case Array(k, v) if k.startsWith(PartColPrefix) =>
-                val idx = k.stripPrefix(PartColPrefix).toInt
-                val dec = unescapePathName(v)
-                Some(spec(idx).name -> dec)
-              case _ => None
-            }
-          }.toMap
-        val newName = s"${UUID.randomUUID()}.parquet"
-        val target = store.dataDir.resolve(newName)
-        val size = store.io.size(p)
-        val (cnt, stats) = FooterStats.read(p, sf)
-        store.io.publish(p, target)
-        DataFile(s"data/$newName", cnt, size, pvs, stats,
-          blooms = bloomsByFile.getOrElse(p.getFileName.toString, Map.empty),
-          ndv = ndvByFile.getOrElse(p.getFileName.toString, Map.empty),
+      written.map { f =>
+        store.io.publish(staging.resolve(f.name), store.dataDir.resolve(f.name))
+        DataFile(s"data/${f.name}", f.rowCount, f.sizeBytes, f.partitionValues,
+          f.stats,
+          blooms = bloomsByFile.getOrElse(f.name, Map.empty),
+          ndv = ndvByFile.getOrElse(f.name, Map.empty),
           seq = Snapshot.UnassignedSeq,
           sortedBy = plainSortCols)
       }
     } finally store.io.deleteTree(staging)
   }
 
-  /** Inverse of Hive/Spark `escapePathName`: decode ONLY %XX escapes.
-    * URLDecoder is wrong here — it maps a literal '+' to a space, but Hive
-    * path escaping never encodes '+', so a partition value containing '+'
-    * would be recorded wrong and equality pruning would skip its file. */
-  private[lake] def unescapePathName(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val code =
-          try Integer.parseInt(s.substring(i + 1, i + 3), 16)
-          catch { case _: NumberFormatException => -1 }
-        if (code >= 0) { sb.append(code.toChar); i += 3 }
-        else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+  /** Parse a whole-number `graft.*` setting (a table property or a
+    * session conf), naming the key and the bad value when it does not
+    * parse. */
+  private[graft] def longSetting(key: String, value: String): Long =
+    try value.trim.toLong
+    catch {
+      case e: NumberFormatException => throw new IllegalArgumentException(
+        s"$key must be a whole number, got '$value'", e)
     }
-    sb.toString
-  }
 
   /** (Re)compute GENERATED ALWAYS AS columns over `df`. Deterministic
     * expressions over unchanged source columns make re-application
@@ -345,7 +286,7 @@ object GraftWriter {
       overwrite: Boolean): Snapshot = {
     val head = store.head().getOrElse(
       throw new IllegalStateException(s"table not initialized: ${store.tableDir}"))
-    val newFiles = writeFiles(spark, store, head.schema, head.partitionSpec,
+    val newFiles = writeFiles(spark, store, head,
       enforceChecks(
         applyGenerated(fillIdentity(df, head), head.generated), head.checks))
     // advance each identity column's high-water mark from the WRITTEN

@@ -87,8 +87,7 @@ object IncrementalAgg {
         (coalesce(col("s"), lit(0.0)) + coalesce(col("ds"), lit(0.0))).as("s")): _*)
       .filter(col("n") > 0) // fully-deleted groups drop out
 
-    val newFiles = GraftWriter.writeFiles(spark, mvStore, mvHead.schema,
-      mvHead.partitionSpec, merged)
+    val newFiles = GraftWriter.writeFiles(spark, mvStore, mvHead, merged)
     mvStore.commit { prev =>
       val p = prev.getOrElse(mvHead)
       require(p.properties.getOrElse(WatermarkKey, "0").toLong == lastVersion,
@@ -177,8 +176,7 @@ object IncrementalAgg {
     val merged = existing.join(affected, keys, "left_anti")
       .unionByName(recomputed)
 
-    val newFiles = GraftWriter.writeFiles(spark, mvStore, mvHead.schema,
-      mvHead.partitionSpec, merged)
+    val newFiles = GraftWriter.writeFiles(spark, mvStore, mvHead, merged)
     mvStore.commit { prev =>
       val p = prev.getOrElse(mvHead)
       require(p.properties.getOrElse(WatermarkKey, "0").toLong == lastVersion,

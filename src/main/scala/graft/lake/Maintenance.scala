@@ -37,8 +37,7 @@ object Maintenance {
         head)
       .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
       .coalesce(math.max(1, small.map(_.sizeBytes).sum / smallFileThresholdBytes).toInt)
-    val rewritten = GraftWriter.writeFiles(spark, store, head.schema,
-      head.partitionSpec, df)
+    val rewritten = GraftWriter.writeFiles(spark, store, head, df)
     val keptDeletes = PositionDeletes.retain(spark, store, head.deleteFiles, keep)
     store.commit { prev =>
       val p = prev.getOrElse(head)
@@ -85,7 +84,7 @@ object Maintenance {
             SchemaNames.readLogicalWithProvenance(spark, head.schema, paths),
             head)
           .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-        GraftWriter.writeFiles(spark, store, head.schema, head.partitionSpec, live)
+        GraftWriter.writeFiles(spark, store, head, live)
       }
     store.commit { prev =>
       val p = prev.getOrElse(head)

@@ -4,13 +4,15 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
-/** Storage seam for the lake's non-Spark file operations: snapshot JSON,
-  * manifest chunks, version hints, refs, external-location pointers, and
-  * the stage→publish moves of data/delete files. The heavy DATA plane
-  * (parquet scan/write) already flows through Spark's Hadoop FileSystem
-  * layer, which is object-store-ready by URI (s3a://, abfs://, ...); this
-  * trait covers the side where ATOMICITY semantics carry the commit
-  * protocol, so an object-store backend maps cleanly:
+/** Storage seam for the lake's metadata and commit-visible file
+  * operations: snapshot JSON, manifest chunks, version hints, refs,
+  * external-location pointers, and the stage→publish moves of data/delete
+  * files. The DATA plane is outside it: parquet scans go through Spark's
+  * Hadoop FileSystem layer, and [[LakeFileWriter]] tasks write parquet as
+  * local files (java.nio) into a staging directory, from which `publish`
+  * moves them into `data/`. This trait covers the side where ATOMICITY
+  * semantics carry the commit protocol, so an object-store backend maps
+  * cleanly:
   *
   *  - `createExclusive` → conditional PUT (if-none-match: *) — the commit
   *    race arbiter

@@ -102,28 +102,20 @@ object PositionDeletes {
           "left_anti")
     }
 
-  /** Shared staging protocol for delete files: write `df` to a temp dir,
-    * move each non-empty parquet into `data/` under a fresh name built
-    * from `suffix`, and register it via `mk`. The staging dir is always
-    * cleaned up. */
-  private def stageDeleteFiles(store: SnapshotStore, df: DataFrame,
-      suffix: String)(mk: (String, Long, Long) => DeleteFile): Seq[DeleteFile] = {
+  /** Shared staging protocol for delete files: write `df` with
+    * [[LakeFileWriter]] into a staging dir (one file per non-empty task,
+    * named `<uuid>-<suffix>.parquet`), move each into `data/`, and
+    * register it via `mk`. The staging dir is always cleaned up. */
+  private def stageDeleteFiles(spark: SparkSession, store: SnapshotStore,
+      df: DataFrame, suffix: String)(mk: (String, Long, Long) => DeleteFile): Seq[DeleteFile] = {
     val staging = store.tableDir.resolve(s".staging-del-${UUID.randomUUID()}")
     try {
-      df.write.parquet(staging.toString)
-      val staged = store.io.listTree(staging)
-        .filter(_.toString.endsWith(".parquet"))
-      staged.flatMap { p =>
-        val (cnt, _) = FooterStats.read(p, Seq.empty)
-        if (cnt == 0) None
-        else {
-          val newName = s"${UUID.randomUUID()}-$suffix.parquet"
-          val target = store.dataDir.resolve(newName)
-          val size = store.io.size(p)
-          store.io.publish(p, target)
-          Some(mk(s"data/$newName", cnt, size))
+      LakeFileWriter(spark, df.schema, s"-$suffix")
+        .writeFrame(df, staging, Seq.empty)
+        .map { f =>
+          store.io.publish(staging.resolve(f.name), store.dataDir.resolve(f.name))
+          mk(s"data/${f.name}", f.rowCount, f.sizeBytes)
         }
-      }
     } finally store.io.deleteTree(staging)
   }
 
@@ -134,7 +126,7 @@ object PositionDeletes {
     * (empty when the DataFrame is empty). */
   def writeDeleteFiles(spark: SparkSession, store: SnapshotStore,
       tuples: DataFrame): Seq[DeleteFile] =
-    stageDeleteFiles(store,
+    stageDeleteFiles(spark, store,
       tuples
         .select(col(FilePathCol).cast(StringType), col(PosCol).cast(LongType))
         .sort(FilePathCol, PosCol),
@@ -150,7 +142,7 @@ object PositionDeletes {
     * ordering (only files older than this commit are affected). */
   def writeEqualityDeleteFiles(spark: SparkSession, store: SnapshotStore,
       keys: DataFrame, physCols: Seq[String]): Seq[DeleteFile] =
-    stageDeleteFiles(store,
+    stageDeleteFiles(spark, store,
       keys.select(physCols.map(col): _*)
         .distinct()
         .coalesce(1), // key sets are small by design; one file per commit

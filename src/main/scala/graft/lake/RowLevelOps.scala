@@ -54,7 +54,7 @@ final class GraftRowLevelOperation(
 
   /** The rewrite scan must be a real DSv2 Batch (Spark's ReplaceData
     * planning calls toBatch directly — the V1 fallback is not applied on
-    * this path), so it uses the native parquet-mr reader. */
+    * this path), so it uses the native executor-side GraftBatchScan. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new org.apache.spark.sql.connector.read.ScanBuilder
       with org.apache.spark.sql.connector.read.SupportsPushDownFilters

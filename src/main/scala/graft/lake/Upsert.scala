@@ -55,8 +55,8 @@ object Upsert {
     // generated columns recompute BEFORE the check wrap so a CHECK
     // referencing one sees the real value (ADVICE r2)
     val prepared = GraftWriter.applyGenerated(nullGuarded, head.generated)
-    val newFiles = GraftWriter.writeFiles(spark, store, schema,
-      head.partitionSpec, GraftWriter.enforceChecks(prepared, head.checks))
+    val newFiles = GraftWriter.writeFiles(spark, store, head,
+      GraftWriter.enforceChecks(prepared, head.checks))
     // key tuples under PHYSICAL names (what delete files store)
     val keyDf = nullGuarded.select(keys.zip(physKeys).map { case (l, p) =>
       col(l).as(p)

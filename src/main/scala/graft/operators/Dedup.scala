@@ -192,9 +192,9 @@ object Dedup {
       .union(pairs.select(col("id_b").as("doc_id"))).distinct()
     val candArr = arr.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
     val hintOk = hintBroadcast || {
-      val cap = docs.sparkSession.conf
-        .get(JaccardBroadcastMaxBytesKey,
-          JaccardBroadcastMaxBytesDefault.toString).toLong
+      val cap = docs.sparkSession.conf.getOption(JaccardBroadcastMaxBytesKey)
+        .map(graft.lake.GraftWriter.longSetting(JaccardBroadcastMaxBytesKey, _))
+        .getOrElse(JaccardBroadcastMaxBytesDefault)
       candArr.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
     }
     val hint: DataFrame => DataFrame =

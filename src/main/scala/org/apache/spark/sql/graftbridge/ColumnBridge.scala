@@ -30,4 +30,11 @@ object ColumnBridge {
       preds: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Array[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(preds)
+
+  /** `schema` with every field and nested element nullable
+    * (private[spark] `StructType.asNullable`): the schema lake files are
+    * written with, as Spark's own file sources do. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    schema.asNullable
 }

@@ -106,4 +106,16 @@ class BloomSpec extends AnyFunSuite {
     val head = new SnapshotStore(Paths.get(wh, "t", "plain")).head().get
     assert(head.files.forall(_.blooms.isEmpty))
   }
+
+  test("a malformed graft.bloom-bits fails the write naming the key and the value") {
+    spark.sql("""CREATE TABLE bl.t.badbits (k STRING) USING iceberg
+                 TBLPROPERTIES ('graft.bloom-columns' = 'k', 'graft.bloom-bits' = '64k')""")
+    val e = intercept[Exception] {
+      spark.sql("INSERT INTO bl.t.badbits VALUES ('a')")
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("graft.bloom-bits") && m.contains("'64k'")),
+      s"unnamed parse failure: $msgs")
+  }
 }

@@ -72,4 +72,17 @@ class ExactJaccardPlanSpec extends SparkSpec {
       .contains("BroadcastHashJoin"),
       "estimate-gated hint did not apply under the cap")
   }
+
+  test("a malformed broadcast cap fails naming the key and the value") {
+    val (docs, pairs) = fixtures
+    val key = graft.operators.Dedup.JaccardBroadcastMaxBytesKey
+    spark.conf.set(key, "64MB")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        graft.operators.Dedup.exactJaccard(docs, pairs, hintBroadcast = false)
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("'64MB'"),
+        e.getMessage)
+    } finally spark.conf.unset(key)
+  }
 }
