@@ -56,8 +56,7 @@ object Changes {
       * names changed files, but the rows a reader actually saw at a
       * version exclude its pending deletes. */
     def readFiles(files: Seq[DataFile], asOf: Snapshot): DataFrame = {
-      val df = SchemaNames.readLogicalWithProvenance(spark, schema,
-        files.map(f => store.tableDir.resolve(f.path).toString))
+      val df = SchemaNames.readLogicalWithProvenance(spark, store, schema, files)
       PositionDeletes.applySnapshotDeletes(spark, store, df, asOf,
           readSchema = schema)
         .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
@@ -88,9 +87,9 @@ object Changes {
       val parentDelSet = parentDeletes.map(_.path).toSet
       val newDeleteFiles = snap.deleteFiles.filterNot(f => parentDelSet.contains(f.path))
       // Position tuples diff at TUPLE level, not file level: retain()
-      // rewrites surviving tuples into NEW files on every COW/compact
-      // commit, so a path diff would re-emit long-deleted rows as fresh
-      // deletes. exceptAll against the parent's tuples leaves exactly the
+      // rewrites the surviving tuples of every tuple file a COW/compact
+      // commit touches into NEW files, so a path diff would re-emit
+      // long-deleted rows as fresh deletes. exceptAll against the parent's tuples leaves exactly the
       // tuples this commit ADDED (both sides are KB-sized by design).
       val newPosTuples: Option[DataFrame] =
         (PositionDeletes.tuples(spark, store,
@@ -114,8 +113,8 @@ object Changes {
             touchedNames.contains(PositionDeletes.fileName(f.path)))
           if (touched.isEmpty) None
           else {
-            val data = SchemaNames.readLogicalWithProvenance(spark, schema,
-              touched.map(f => store.tableDir.resolve(f.path).toString))
+            val data = SchemaNames.readLogicalWithProvenance(spark, store,
+              schema, touched)
             Some(data.join(t,
               data(PositionDeletes.NameCol) === t(PositionDeletes.NameCol) &&
                 data(PositionDeletes.RowPosCol) === t(PositionDeletes.RowPosCol),

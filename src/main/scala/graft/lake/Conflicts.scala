@@ -1,0 +1,157 @@
+package graft.lake
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.sources.{Filter, In}
+
+/** The one commit-time conflict check for statements that plan on one
+  * snapshot (`base`) and commit on whatever head the commit loop finds —
+  * row-level DELETE / UPDATE / MERGE, partition-filtered overwrite,
+  * compaction and the delete rewrites. Iceberg's optimistic commits work
+  * the same way: a statement is validated against what it read, and
+  * fails only when a concurrent commit could change its result
+  * (iceberg.apache.org/docs/latest/reliability/). A statement planned on
+  * `base` commits on a newer head unless one of these rules fires:
+  *
+  *  1. schema, partition spec, CHECKs, generated or identity columns
+  *     changed;
+  *  2. a data file the statement read or replaces, or a delete file it
+  *     replaces, is no longer live;
+  *  3. a delete file added or removed since `base` may apply to a data
+  *     file the statement read — position files by their footer
+  *     `file_path` range, deletion vectors by their index, equality files
+  *     by their key values against the data file's stats;
+  *  4. a data file added since `base` might match the statement's pushed
+  *     filter (any added file, when it pushed none — a MERGE whose only
+  *     target predicate is its join stays serializable). Compaction and
+  *     the delete rewrites do not change which rows exist, so they skip it.
+  *
+  * A rule that fires aborts with "concurrent commit ..." (callers re-run
+  * the statement, which re-plans on the new head). Otherwise the commit
+  * is `head` with the statement's own edits: head's files minus the
+  * replaced ones plus the new ones, head's delete files minus the ones
+  * the statement replaced plus the ones it wrote.
+  */
+object Conflicts {
+
+  /** What one statement did, relative to the snapshot it planned on.
+    *
+    * @param read           data files whose rows the statement read
+    * @param replaced       data files the commit removes
+    * @param added          data files the commit adds
+    * @param deletesRemoved delete files the commit removes
+    * @param deletesAdded   delete files the commit adds
+    * @param filter         the statement's pushed filters over PHYSICAL
+    *                       column names, for rule 4; None skips rule 4 */
+  final case class Footprint(
+      base: Snapshot,
+      read: Seq[DataFile] = Seq.empty,
+      replaced: Seq[DataFile] = Seq.empty,
+      added: Seq[DataFile] = Seq.empty,
+      deletesRemoved: Seq[DeleteFile] = Seq.empty,
+      deletesAdded: Seq[DeleteFile] = Seq.empty,
+      filter: Option[Seq[Filter]] = None) {
+
+    /** This footprint with `base`'s delete files replaced by `kept` (the
+      * output of [[PositionDeletes.retain]]): entries of `base` missing
+      * from `kept` are removed, entries of `kept` new to `base` added. */
+    def retaining(kept: Seq[DeleteFile]): Footprint = {
+      val before = base.deleteFiles.map(_.path).toSet
+      val after = kept.map(_.path).toSet
+      copy(
+        deletesRemoved = deletesRemoved ++
+          base.deleteFiles.filterNot(d => after.contains(d.path)),
+        deletesAdded = deletesAdded ++
+          kept.filterNot(d => before.contains(d.path)))
+    }
+  }
+
+  /** `head` with the statement applied, or an abort when a rule fires.
+    * Called inside the commit closure, so a lost race re-validates
+    * against the next head. */
+  def rebase(store: SnapshotStore, op: String, head: Snapshot,
+      fp: Footprint): Snapshot = {
+    if (head.version != fp.base.version)
+      conflict(store, head, fp).foreach { why =>
+        throw new IllegalStateException(
+          s"concurrent commit during $op on ${store.tableDir}: $why " +
+            s"(planned on v${fp.base.version}, head is v${head.version}); retry")
+      }
+    val gone = fp.replaced.map(_.path).toSet
+    val goneDeletes = fp.deletesRemoved.map(_.path).toSet
+    head.copy(
+      timestampMs = System.currentTimeMillis(),
+      // an edit-free commit passes head's list through by reference, so a
+      // sharded table's lazy file list is never materialized
+      files =
+        if (gone.isEmpty && fp.added.isEmpty) head.files
+        else head.files.filterNot(f => gone.contains(f.path)) ++ fp.added,
+      deleteFiles =
+        head.deleteFiles.filterNot(d => goneDeletes.contains(d.path)) ++
+          fp.deletesAdded)
+  }
+
+  /** The first rule `head` breaks for `fp`, described; None = no conflict. */
+  private def conflict(store: SnapshotStore, head: Snapshot,
+      fp: Footprint): Option[String] = {
+    val base = fp.base
+    def unversioned(s: Snapshot) = s.identity.map { case (c, id) =>
+      c -> id.copy(lastValue = None) }
+    val live = head.files.iterator.map(_.path).toSet
+    val liveDeletes = head.deleteFiles.map(_.path).toSet
+    val baseDeletes = base.deleteFiles.map(_.path).toSet
+    def rule1 = Option.when(head.schemaJson != base.schemaJson ||
+        head.partitionSpec != base.partitionSpec || head.checks != base.checks ||
+        head.generated != base.generated || unversioned(head) != unversioned(base))(
+      "rule 1: the table's schema, partition spec or constraints changed")
+    def rule2 =
+      (fp.read ++ fp.replaced).find(f => !live.contains(f.path))
+        .map(f => s"rule 2: data file ${f.path} is no longer live")
+        .orElse(fp.deletesRemoved.find(d => !liveDeletes.contains(d.path))
+          .map(d => s"rule 2: delete file ${d.path} is no longer live"))
+    def rule3 = {
+      val changed =
+        head.deleteFiles.filterNot(d => baseDeletes.contains(d.path)) ++
+          base.deleteFiles.filterNot(d => liveDeletes.contains(d.path))
+      if (fp.read.isEmpty) None
+      else changed.iterator.flatMap(d => fp.read.find(mayApply(store, head, d))
+          .map(f => s"rule 3: delete file ${d.path} may apply to ${f.path}"))
+        .nextOption()
+    }
+    def rule4 = fp.filter.flatMap { fs =>
+      val before = base.files.iterator.map(_.path).toSet
+      head.files.find(f => !before.contains(f.path) &&
+          fs.forall(StatsPruner.mightMatch(f, _, head.partitionSpec)))
+        .map(f => s"rule 4: added data file ${f.path} may match the statement's filter")
+    }
+    rule1.orElse(rule2).orElse(rule3).orElse(rule4)
+  }
+
+  /** Which data files can delete file `d` remove rows of? Loads `d`'s
+    * metadata once. Conservative: metadata that cannot be read answers
+    * "every file". */
+  private def mayApply(store: SnapshotStore, head: Snapshot,
+      d: DeleteFile): DataFile => Boolean =
+    try d.kind match {
+      case "position" =>
+        val (lo, hi) = PositionDeletes.nameRange(store, d)
+        f => { val name = PositionDeletes.fileName(f.path); lo <= name && name <= hi }
+      case DeletionVectors.Kind =>
+        val names = DeletionVectors.readIndex(store, d).map(_.name).toSet
+        f => names.contains(PositionDeletes.fileName(f.path))
+      case "equality" =>
+        val types = d.equalityColumns.map(c => head.schema.fields
+          .find(SchemaNames.physicalName(_) == c).get.dataType)
+        val keys = EqDeleteTupleCache.get(
+          store.tableDir.resolve(d.path).toString, d.equalityColumns, types)
+          .toArray(Array.empty[Seq[Any]])
+        // per-column IN over the key values: a superset of the tuple
+        // match, so a miss on any column rules the file out
+        val perColumn = d.equalityColumns.indices.map(i => In(d.equalityColumns(i),
+          keys.map(k => CatalystTypeConverters.convertToScala(k(i), types(i))).distinct))
+        f => f.seq < d.seq && keys.nonEmpty &&
+          perColumn.forall(StatsPruner.mightMatch(f, _, head.partitionSpec))
+      case _ => _ => true
+    } catch { case NonFatal(_) => _ => true }
+}

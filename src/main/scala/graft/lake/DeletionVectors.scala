@@ -256,8 +256,7 @@ object DeletionVectors {
     if (tuplesPos.isEmpty && dvs.isEmpty) return None
     var df: DataFrame = null
     if (tuplesPos.nonEmpty) {
-      val paths = tuplesPos.map(f => store.tableDir.resolve(f.path).toString)
-      df = spark.read.schema(PositionDeletes.tupleSchema).parquet(paths: _*)
+      df = PositionDeletes.readTuples(spark, store, tuplesPos)
         .select(
           element_at(split(col(PositionDeletes.FilePathCol), "/"), -1)
             .as(PositionDeletes.NameCol),

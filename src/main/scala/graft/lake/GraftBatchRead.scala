@@ -138,7 +138,24 @@ final class GraftBatchScan(
     onRuntimePrune(narrowed)
   }
 
+  /** Partitions planned for one file set: Spark asks more than once per
+    * statement (each BatchScanExec copy, before and after runtime
+    * filtering), and planning runs a Spark job when position deletes are
+    * pending. */
+  @volatile private var planned: (Seq[DataFile], Array[InputPartition]) = null
+
   override def planInputPartitions(): Array[InputPartition] = {
+    val files = currentFiles
+    val memo = planned
+    if (memo != null && memo._1 == files) memo._2
+    else {
+      val parts = plan(files)
+      planned = (files, parts)
+      parts
+    }
+  }
+
+  private def plan(files: Seq[DataFile]): Array[InputPartition] = {
     // merge-on-read: each reader must skip its file's deleted rows so COW
     // rewrites never resurrect them. Position deletes ride in the
     // partitions as concrete index arrays while the backlog is small
@@ -149,7 +166,6 @@ final class GraftBatchScan(
     // the rows they match are unbounded, so a driver-side conversion to
     // positions cannot be capped.
     val spark = org.apache.spark.sql.SparkSession.active
-    val files = currentFiles
     val pos = snapshot.deleteFiles.filter(_.positional)
     val eq = snapshot.deleteFiles.filter(_.kind == "equality")
     val eqRefs = eq.map(e => EqDeleteRef(

@@ -466,8 +466,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               val spark = org.apache.spark.sql.SparkSession.active
               if (prev.files.nonEmpty) {
                 val bad = PositionDeletes.applySnapshotDeletes(spark, st,
-                  SchemaNames.readLogicalWithProvenance(spark, prev.schema,
-                    prev.files.map(f => st.tableDir.resolve(f.path).toString)),
+                  SchemaNames.readLogicalWithProvenance(spark, st, prev.schema,
+                    prev.files),
                   prev)
                   .filter(org.apache.spark.sql.functions.not(
                     org.apache.spark.sql.functions.coalesce(

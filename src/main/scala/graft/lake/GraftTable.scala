@@ -127,14 +127,11 @@ class GraftTable(
         case Some((physCols, keysDf)) =>
           val newDeletes = PositionDeletes.writeEqualityDeleteFiles(
             spark, store, keysDf, physCols)
+          val fp = Conflicts.Footprint(s, deletesAdded = newDeletes,
+            filter = Some(physFilters.toSeq))
           store.commit { prev =>
-            val p = prev.getOrElse(s)
-            require(p.version == s.version,
-              s"concurrent commit during DELETE on $tableName; retry")
-            p.copy(
-              timestampMs = System.currentTimeMillis(),
+            Conflicts.rebase(store, "DELETE", prev.getOrElse(s), fp).copy(
               operation = "delete",
-              deleteFiles = p.deleteFiles ++ newDeletes,
               summary = Map(
                 "delete-mode" -> "merge-on-read",
                 "delete-kind" -> "equality",
@@ -151,8 +148,7 @@ class GraftTable(
       val newDeletes: Seq[DeleteFile] =
         if (touched.isEmpty) Seq.empty
         else {
-          val paths = touched.map(f => store.tableDir.resolve(f.path).toString)
-          val data = SchemaNames.readLogicalWithProvenance(spark, s.schema, paths)
+          val data = SchemaNames.readLogicalWithProvenance(spark, store, s.schema, touched)
           // apply EXISTING deletes first so re-deleting an already-deleted
           // row never records a duplicate tuple (keeps totalRows exact)
           val live = PositionDeletes.applySnapshotDeletes(spark, store, data, s)
@@ -170,56 +166,48 @@ class GraftTable(
               col(PositionDeletes.RowPosCol).as(PositionDeletes.PosCol))
           PositionDeletes.writeDeleteFiles(spark, store, tuples)
         }
+      // the tuples name rows of `touched`: those files must stay live,
+      // and no concurrent delete may have reached them first
+      val fp = Conflicts.Footprint(s, read = touched, deletesAdded = newDeletes,
+        filter = Some(physFilters.toSeq))
       store.commit { prev =>
-        val p = prev.getOrElse(s)
-        require(p.version == s.version,
-          s"concurrent commit during DELETE on $tableName; retry")
-        p.copy(
-          timestampMs = System.currentTimeMillis(),
+        val next = Conflicts.rebase(store, "DELETE", prev.getOrElse(s), fp)
+        next.copy(
           operation = "delete",
-          deleteFiles = p.deleteFiles ++ newDeletes,
           summary = Map(
             "delete-mode" -> "merge-on-read",
             "added-delete-files" -> newDeletes.size.toString,
             "added-position-deletes" -> newDeletes.map(_.rowCount).sum.toString,
-            "total-records" ->
-              (p.dataFileRows -
-                (p.deleteFiles ++ newDeletes).map(_.rowCount).sum).toString))
+            "total-records" -> next.totalRows.toString))
       }
       return
     }
     val rewritten: Seq[DataFile] =
       if (touched.isEmpty) Seq.empty
       else {
-        val paths = touched.map(f => store.tableDir.resolve(f.path).toString)
         // SQL DELETE removes only rows where cond IS TRUE; rows where it
         // evaluates NULL (e.g. `c = 5` on a NULL c) must be KEPT. Pending
         // MOR deletes on the touched files are folded into the rewrite
         // (the kept rows are the LIVE complement of the condition).
         val kept = PositionDeletes.applySnapshotDeletes(spark, store,
-            SchemaNames.readLogicalWithProvenance(spark, s.schema, paths), s)
+            SchemaNames.readLogicalWithProvenance(spark, store, s.schema, touched), s)
           .filter(fnot(coalesce(cond, lit(false))))
           .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
         GraftWriter.writeFiles(spark, store, s, kept)
       }
     // drop tuples that referenced the rewritten files (folded in above)
-    val keptDeletes =
-      PositionDeletes.retain(spark, store, s.deleteFiles, untouched)
+    val fp = Conflicts.Footprint(s, read = touched, replaced = touched,
+        added = rewritten, filter = Some(physFilters.toSeq))
+      .retaining(PositionDeletes.retain(spark, store, s.deleteFiles,
+        untouched, touched))
     store.commit { prev =>
-      val p = prev.getOrElse(s)
-      // retry-safe only versus the snapshot we planned from
-      require(p.version == s.version,
-        s"concurrent commit during DELETE on $tableName; retry")
-      p.copy(
-        timestampMs = System.currentTimeMillis(),
+      val next = Conflicts.rebase(store, "DELETE", prev.getOrElse(s), fp)
+      next.copy(
         operation = "delete",
-        files = untouched ++ rewritten,
-        deleteFiles = keptDeletes,
         summary = Map(
           "deleted-candidate-files" -> touched.size.toString,
           "rewritten-files" -> rewritten.size.toString,
-          "total-records" -> ((untouched ++ rewritten).map(_.rowCount).sum -
-            keptDeletes.map(_.rowCount).sum).toString))
+          "total-records" -> next.totalRows.toString))
     }
   }
 
@@ -1042,12 +1030,11 @@ final class GraftRelation(
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], required).rdd
     } else {
-      val paths = files.map(f => store.tableDir.resolve(f.path).toString)
       val hasDeletes = snapshot.deleteFiles.nonEmpty
       var df: DataFrame =
         if (hasDeletes)
-          SchemaNames.readLogicalWithProvenance(spark, fullSchema, paths)
-        else SchemaNames.readLogical(spark, fullSchema, paths)
+          SchemaNames.readLogicalWithProvenance(spark, store, fullSchema, files)
+        else SchemaNames.readLogical(spark, store, fullSchema, files)
       // `_file` metadata column (SupportsMetadataColumns) is served from
       // the parquet reader's provenance function
       if (required.fieldNames.contains("_file"))
@@ -1139,13 +1126,12 @@ final class GraftWriteBuilder(store: SnapshotStore)
               val keptFiles =
                 if (touched.isEmpty) Seq.empty
                 else {
-                  val paths = touched.map(f => store.tableDir.resolve(f.path).toString)
                   // NULL-evaluating rows are outside the overwritten region
                   // and must survive (same NULL semantics as DELETE).
                   // Pending MOR deletes fold into the rewrite.
                   val kept = PositionDeletes.applySnapshotDeletes(spark, store,
                       SchemaNames.readLogicalWithProvenance(
-                        spark, head.schema, paths),
+                        spark, store, head.schema, touched),
                       head)
                     .filter(fnot(coalesce(cond, lit(false))))
                     .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
@@ -1159,15 +1145,17 @@ final class GraftWriteBuilder(store: SnapshotStore)
                 GraftWriter.enforceChecks(
                   GraftWriter.applyGenerated(data, head.generated),
                   head.checks))
-              val keptDeletes = PositionDeletes.retain(spark, store,
-                head.deleteFiles, untouched)
+              // rows a concurrent commit adds inside the filter would
+              // survive an overwrite that never read them: rule 4 aborts
+              val fp = Conflicts.Footprint(head, read = touched,
+                  replaced = touched, added = keptFiles ++ added,
+                  filter = Some(physFs.toSeq))
+                .retaining(PositionDeletes.retain(spark, store,
+                  head.deleteFiles, untouched, touched))
               store.commit { prev =>
-                val p = prev.getOrElse(head)
-                p.copy(
-                  timestampMs = System.currentTimeMillis(),
+                Conflicts.rebase(store, "INSERT OVERWRITE",
+                    prev.getOrElse(head), fp).copy(
                   operation = "overwrite",
-                  files = untouched ++ keptFiles ++ added,
-                  deleteFiles = keptDeletes,
                   summary = Map(
                     "replaced-files" -> touched.size.toString,
                     "added-files" -> added.size.toString))
@@ -1207,7 +1195,8 @@ final class GraftWriteBuilder(store: SnapshotStore)
           completeNew.contains(f.partitionValues))
       // tuples referencing replaced partitions' files die with them
       val keptDeletes = PositionDeletes.retain(
-        org.apache.spark.sql.SparkSession.active, store, p.deleteFiles, kept)
+        org.apache.spark.sql.SparkSession.active, store, p.deleteFiles, kept,
+        replaced)
       p.copy(
         timestampMs = System.currentTimeMillis(),
         operation = "overwrite",

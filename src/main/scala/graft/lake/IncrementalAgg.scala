@@ -78,8 +78,7 @@ object IncrementalAgg {
       if (mvHead.files.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], mvSchema)
-      else SchemaNames.readLogical(spark, mvHead.schema,
-        mvHead.files.map(f => mvStore.tableDir.resolve(f.path).toString))
+      else SchemaNames.readLogical(spark, mvStore, mvHead.schema, mvHead.files)
 
     val merged = existing.join(delta, keys, "full_outer")
       .select(keys.map(col) ++ Seq(
@@ -155,8 +154,8 @@ object IncrementalAgg {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
       else PositionDeletes.applySnapshotDeletes(spark, srcStore,
-          SchemaNames.readLogicalWithProvenance(spark, srcSchema,
-            srcHead.files.map(f => srcStore.tableDir.resolve(f.path).toString)),
+          SchemaNames.readLogicalWithProvenance(spark, srcStore, srcSchema,
+            srcHead.files),
           srcHead, readSchema = srcSchema)
         .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
     val recomputed = live.join(affected, keys, "left_semi")
@@ -171,8 +170,7 @@ object IncrementalAgg {
       if (mvHead.files.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], mvSchema)
-      else SchemaNames.readLogical(spark, mvHead.schema,
-        mvHead.files.map(f => mvStore.tableDir.resolve(f.path).toString))
+      else SchemaNames.readLogical(spark, mvStore, mvHead.schema, mvHead.files)
     val merged = existing.join(affected, keys, "left_anti")
       .unionByName(recomputed)
 

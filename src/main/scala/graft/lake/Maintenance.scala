@@ -30,29 +30,25 @@ object Maintenance {
     val small = head.files.filter(_.sizeBytes < smallFileThresholdBytes)
     if (small.size <= 1) return head // nothing to gain
     val keep = head.files.filterNot(small.contains)
-    val paths = small.map(f => store.tableDir.resolve(f.path).toString)
     // pending MOR delete tuples on compacted files fold into the rewrite
     val df = PositionDeletes.applySnapshotDeletes(spark, store,
-        SchemaNames.readLogicalWithProvenance(spark, head.schema, paths),
+        SchemaNames.readLogicalWithProvenance(spark, store, head.schema, small),
         head)
       .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
       .coalesce(math.max(1, small.map(_.sizeBytes).sum / smallFileThresholdBytes).toInt)
     val rewritten = GraftWriter.writeFiles(spark, store, head, df)
-    val keptDeletes = PositionDeletes.retain(spark, store, head.deleteFiles, keep)
+    // same rows, new files: concurrent appends rebase through untouched
+    val fp = Conflicts.Footprint(head, read = small, replaced = small,
+        added = rewritten)
+      .retaining(PositionDeletes.retain(spark, store, head.deleteFiles, keep, small))
     store.commit { prev =>
-      val p = prev.getOrElse(head)
-      require(p.version == head.version,
-        "concurrent commit during compaction; retry")
-      p.copy(
-        timestampMs = System.currentTimeMillis(),
+      val next = Conflicts.rebase(store, "compaction", prev.getOrElse(head), fp)
+      next.copy(
         operation = "replace",
-        files = keep ++ rewritten,
-        deleteFiles = keptDeletes,
         summary = Map(
           "compacted-files" -> small.size.toString,
           "new-files" -> rewritten.size.toString,
-          "total-records" -> ((keep ++ rewritten).map(_.rowCount).sum -
-            keptDeletes.map(_.rowCount).sum).toString))
+          "total-records" -> next.totalRows.toString))
     }
   }
 
@@ -79,29 +75,26 @@ object Maintenance {
     val rewritten: Seq[DataFile] =
       if (touched.isEmpty) Seq.empty
       else {
-        val paths = touched.map(f => store.tableDir.resolve(f.path).toString)
         val live = PositionDeletes.applySnapshotDeletes(spark, store,
-            SchemaNames.readLogicalWithProvenance(spark, head.schema, paths),
+            SchemaNames.readLogicalWithProvenance(spark, store, head.schema, touched),
             head)
           .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
         GraftWriter.writeFiles(spark, store, head, live)
       }
+    // every delete file of `head` is folded in; ones committed since
+    // stay pending on the rebased snapshot
+    val fp = Conflicts.Footprint(head, read = touched, replaced = touched,
+      added = rewritten, deletesRemoved = head.deleteFiles)
     store.commit { prev =>
-      val p = prev.getOrElse(head)
-      require(p.version == head.version,
-        "concurrent commit during rewrite_deletes; retry")
-      p.copy(
-        timestampMs = System.currentTimeMillis(),
+      val next = Conflicts.rebase(store, "rewrite_deletes", prev.getOrElse(head), fp)
+      next.copy(
         operation = "replace",
-        files = untouched ++ rewritten,
-        deleteFiles = Seq.empty,
         summary = Map(
           "rewritten-files" -> touched.size.toString,
           "removed-delete-files" -> head.deleteFiles.size.toString,
           "applied-position-deletes" ->
             head.deleteFiles.map(_.rowCount).sum.toString,
-          "total-records" ->
-            (untouched ++ rewritten).map(_.rowCount).sum.toString))
+          "total-records" -> next.totalRows.toString))
     }
   }
 
@@ -122,21 +115,18 @@ object Maintenance {
       (positional.size == 1 && positional.head.kind == DeletionVectors.Kind))
       return head
     val dv = DeletionVectors.consolidate(spark, store, positional)
+    val fp = Conflicts.Footprint(head, deletesRemoved = positional,
+      deletesAdded = dv.toSeq)
     store.commit { prev =>
-      val p = prev.getOrElse(head)
-      require(p.version == head.version,
-        "concurrent commit during rewrite_delete_vectors; retry")
-      val eq = p.deleteFiles.filter(_.kind == "equality")
-      p.copy(
-        timestampMs = System.currentTimeMillis(),
+      val next = Conflicts.rebase(store, "rewrite_delete_vectors",
+        prev.getOrElse(head), fp)
+      next.copy(
         operation = "replace",
-        deleteFiles = dv.toSeq ++ eq,
         summary = Map(
           "consolidated-delete-files" -> positional.size.toString,
           "deletion-vectors" -> dv.size.toString,
           "vector-positions" -> dv.map(_.rowCount).sum.toString,
-          "total-records" -> (p.dataFileRows -
-            dv.map(_.rowCount).sum).toString))
+          "total-records" -> next.totalRows.toString))
     }
   }
 
@@ -282,9 +272,8 @@ object Maintenance {
     }
     val ndvAggs = ndvCols.map(c => hll_sketch_agg(col(c), 12).as(s"__ndv_$c"))
     val aggs = bloomAggs ++ ndvAggs
-    val rows = spark.read
-      .schema(SchemaNames.toPhysical(head.schema))
-      .parquet(missing.map(f => store.tableDir.resolve(f.path).toString): _*)
+    val rows = SchemaNames.readFiles(spark, store,
+        SchemaNames.toPhysical(head.schema), missing.map(f => f.path -> f.sizeBytes))
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()

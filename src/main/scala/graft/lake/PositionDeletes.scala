@@ -58,6 +58,12 @@ object PositionDeletes {
       .map(_.toLong)
       .getOrElse(BroadcastMaxBytesDefault)
 
+  /** Raw `(file_path, pos)` rows of position tuple files. */
+  private[lake] def readTuples(spark: SparkSession, store: SnapshotStore,
+      tupleFiles: Seq[DeleteFile]): DataFrame =
+    SchemaNames.readFiles(spark, store, tupleSchema,
+      tupleFiles.map(f => f.path -> f.sizeBytes))
+
   /** All position-shaped deletes of `deleteFiles` — raw tuple parquet
     * files AND consolidated deletion vectors — as a `(NameCol, RowPosCol)`
     * frame (file paths reduced to names for provenance joins). None when
@@ -69,8 +75,7 @@ object PositionDeletes {
     if (tupleFiles.isEmpty && dvs.isEmpty) return None
     val parts = Seq.newBuilder[DataFrame]
     if (tupleFiles.nonEmpty) {
-      val paths = tupleFiles.map(f => store.tableDir.resolve(f.path).toString)
-      parts += spark.read.schema(tupleSchema).parquet(paths: _*)
+      parts += readTuples(spark, store, tupleFiles)
         .select(
           element_at(split(col(FilePathCol), "/"), -1).as(NameCol),
           col(PosCol).as(RowPosCol))
@@ -159,12 +164,14 @@ object PositionDeletes {
   /** Load one equality-column group's tuple files as a frame with columns
     * `__geq_<physName>` plus [[DelSeqCol]] (each file's commit sequence),
     * broadcast while the group stays small. Shared by the anti-join
-    * (delete application) and the semi-join (CDC / position conversion). */
+    * (delete application) and the semi-join (CDC / position conversion).
+    * Keys are read as `types`, the columns' current types. */
   private def eqTupleFrame(spark: SparkSession, store: SnapshotStore,
-      cols: Seq[String], group: Seq[DeleteFile]): DataFrame = {
+      cols: Seq[String], types: Seq[DataType], group: Seq[DeleteFile]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, lit}
+    val schema = StructType(cols.zip(types).map { case (c, t) => StructField(c, t) })
     val parts = group.map { g =>
-      spark.read.parquet(store.tableDir.resolve(g.path).toString)
+      SchemaNames.readFiles(spark, store, schema, Seq(g.path -> g.sizeBytes))
         .toDF(cols.map(c => s"__geq_$c"): _*)
         .withColumn(DelSeqCol, lit(g.seq))
     }
@@ -201,7 +208,7 @@ object PositionDeletes {
           throw new IllegalStateException(
             s"equality-delete column '$c' no longer exists in the table " +
               "schema; run rewrite_deletes before dropping delete-key columns")))
-        val tup = eqTupleFrame(spark, store, cols, group)
+        val tup = eqTupleFrame(spark, store, cols, logical.map(sch(_).dataType), group)
         val keyEq = cols.zip(logical).map { case (p, l) =>
           df(l) === tup(s"__geq_$p")
         }.reduce(_ && _)
@@ -215,25 +222,35 @@ object PositionDeletes {
   /** Rewrite `deleteFiles` keeping only entries still needed over the
     * surviving data files — called by commits that REMOVE data files (COW
     * rewrites, compaction) so no dangling tuples accumulate and
-    * `Snapshot.totalRows`'s subtraction stays exact. Position tuple files
-    * are rewritten to the surviving tuple subset; deletion vectors keep
-    * their blob form (replaced files' entries dropped by index surgery,
-    * surviving bitmaps byte-copied); an equality file survives
-    * as-is while ANY surviving data file is older than it (its keys may
-    * still mask rows there). Cheap by construction: delete files are small
-    * (else `rewrite_deletes` should have folded them in). Returns the
-    * replacement entries; the caller commits them. */
+    * `Snapshot.totalRows`'s subtraction stays exact. A position tuple file
+    * whose footer name range covers no `replaced` file is kept as it is;
+    * the others are rewritten to their surviving tuple subset. Deletion
+    * vectors keep their blob form (replaced files' entries dropped by
+    * index surgery, surviving bitmaps byte-copied); an equality file
+    * survives as-is while ANY surviving data file is older than it (its
+    * keys may still mask rows there). Cheap by construction: delete files
+    * are small (else `rewrite_deletes` should have folded them in), and
+    * a commit that touches none of a file's data files leaves it alone —
+    * which also keeps the commit's delete edits narrow for
+    * [[Conflicts]]. Returns the replacement entries; the caller commits
+    * them. */
   def retain(spark: SparkSession, store: SnapshotStore,
       deleteFiles: Seq[DeleteFile],
-      survivingFiles: Seq[DataFile]): Seq[DeleteFile] = {
+      survivingFiles: Seq[DataFile],
+      replacedFiles: Seq[DataFile]): Seq[DeleteFile] = {
     if (deleteFiles.isEmpty) return Seq.empty
     val (eq, pos) = deleteFiles.partition(_.kind == "equality")
     val (dvs, tupleFiles) = pos.partition(_.kind == DeletionVectors.Kind)
     val survivingNames = survivingFiles.map(f => fileName(f.path)).toSet
-    // raw tuple files: rewrite the surviving subset as tuple files
+    val replacedNames = replacedFiles.map(f => fileName(f.path))
+    val (touched, untouched) = tupleFiles.partition { d =>
+      val (lo, hi) = nameRange(store, d)
+      replacedNames.exists(n => lo <= n && n <= hi)
+    }
+    // touched tuple files: rewrite the surviving subset as tuple files
     val tuplesKept =
-      if (tupleFiles.isEmpty) Seq.empty
-      else tuples(spark, store, tupleFiles) match {
+      if (touched.isEmpty) Seq.empty
+      else tuples(spark, store, touched) match {
         case None => Seq.empty
         case Some(t) =>
           val kept = t.filter(col(NameCol).isin(survivingNames.toSeq: _*))
@@ -260,7 +277,7 @@ object PositionDeletes {
       }
     }
     val eqKept = eq.filter(e => survivingFiles.exists(_.seq < e.seq))
-    tuplesKept ++ dvKept ++ eqKept
+    untouched ++ tuplesKept ++ dvKept ++ eqKept
   }
 
   /** Rows of a provenance-carrying read over `files` that MATCH any
@@ -276,8 +293,7 @@ object PositionDeletes {
     val relevant = files.filter(f => eqFiles.exists(e => f.seq < e.seq))
     if (eqFiles.isEmpty || relevant.isEmpty) return None
     val sch = Option(readSchema).getOrElse(snap.schema)
-    val data = SchemaNames.readLogicalWithProvenance(spark, sch,
-      relevant.map(f => store.tableDir.resolve(f.path).toString))
+    val data = SchemaNames.readLogicalWithProvenance(spark, store, sch, relevant)
     val seqLookup = broadcast(spark.createDataFrame(
       (snap.files ++ files).distinct.map(f => (fileName(f.path), f.seq)))
       .toDF(NameCol, FileSeqCol))
@@ -289,7 +305,7 @@ object PositionDeletes {
         val logical = cols.map(c => physToLogical.getOrElse(c,
           throw new IllegalStateException(
             s"equality-delete column '$c' no longer exists in the table schema")))
-        val tup = eqTupleFrame(spark, store, cols, group)
+        val tup = eqTupleFrame(spark, store, cols, logical.map(sch(_).dataType), group)
         val keyEq = cols.zip(logical).map { case (p, l) =>
           withSeq(l) === tup(s"__geq_$p")
         }.reduce(_ && _)
@@ -330,8 +346,7 @@ object PositionDeletes {
     val fromTuples: Map[String, Array[Long]] =
       if (pos.isEmpty) Map.empty
       else {
-        val paths = pos.map(f => store.tableDir.resolve(f.path).toString)
-        spark.read.schema(tupleSchema).parquet(paths: _*)
+        readTuples(spark, store, pos)
           .select(
             element_at(split(col(FilePathCol), "/"), -1).as(NameCol),
             col(PosCol))
@@ -365,8 +380,7 @@ object PositionDeletes {
     val fromTuples: Set[String] =
       if (pos.isEmpty) Set.empty
       else {
-        val paths = pos.map(f => store.tableDir.resolve(f.path).toString)
-        spark.read.schema(tupleSchema).parquet(paths: _*)
+        readTuples(spark, store, pos)
           .select(element_at(split(col(FilePathCol), "/"), -1).as(NameCol))
           .distinct()
           .collect()

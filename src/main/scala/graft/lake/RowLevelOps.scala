@@ -41,6 +41,11 @@ final class GraftRowLevelOperation(
     * scan builder narrows it. */
   @volatile private[lake] var scannedFiles: Seq[DataFile] = base.files
 
+  /** Filters the rewrite scan was given — the commit's conflict filter
+    * (none pushed, e.g. a MERGE matching on its join alone: every
+    * concurrently added file conflicts). */
+  @volatile private var scanFilters: Array[Filter] = Array.empty
+
   override def command(): Command = cmd
 
   /** Ask the rewrite plan to carry `_file` per row: resolved against the
@@ -76,6 +81,7 @@ final class GraftRowLevelOperation(
           // commit swaps exactly the files the rewrite scan read
           onRuntimePrune = narrowed => scannedFiles = narrowed)
         scannedFiles = scan.prunedFiles
+        scanFilters = filters
         scan
       }
     }
@@ -93,19 +99,19 @@ final class GraftRowLevelOperation(
           val surviving = base.files.filterNot(f => replacedSet.contains(f.path))
           // MOR tuples for replaced files were applied by the rewrite scan
           // (GraftPartitionReader skips them); keep only tuples that still
-          // reference a surviving file
-          val keptDeletes = PositionDeletes.retain(
-            org.apache.spark.sql.SparkSession.active, store,
-            base.deleteFiles, surviving)
+          // reference a surviving file. A file the scan pruned holds no
+          // match and no concurrent delete can add one, so the replaced
+          // set is what this statement read.
+          val fp = Conflicts.Footprint(base, read = replaced,
+              replaced = replaced, added = newFiles,
+              filter = Some(scanFilters.toSeq.map(SchemaNames.renameFilter(
+                _, SchemaNames.renameMap(base.schema)))))
+            .retaining(PositionDeletes.retain(
+              org.apache.spark.sql.SparkSession.active, store,
+              base.deleteFiles, surviving, replaced))
           store.commit { prev =>
-            val p = prev.getOrElse(base)
-            require(p.version == base.version,
-              s"concurrent commit during ${cmd.name()} on ${store.tableDir}")
-            p.copy(
-              timestampMs = System.currentTimeMillis(),
+            Conflicts.rebase(store, cmd.name(), prev.getOrElse(base), fp).copy(
               operation = cmd.name().toLowerCase,
-              files = p.files.filterNot(f => replacedSet.contains(f.path)) ++ newFiles,
-              deleteFiles = keptDeletes,
               summary = Map(
                 "replaced-files" -> replaced.size.toString,
                 "added-files" -> newFiles.size.toString))

@@ -47,15 +47,16 @@ object SchemaNames {
   def hasRenames(schema: StructType): Boolean =
     schema.fields.exists(f => physicalName(f) != f.name)
 
-  /** Read parquet files under the table's PHYSICAL column names and hand
-    * back a DataFrame with the LOGICAL ones (positional rename; a no-op
-    * select for never-renamed tables). THE one way to read lake data
-    * files with Spark's reader — every driver-side read path (V1 scan,
+  /** Read `files` under the table's PHYSICAL column names and hand back
+    * a DataFrame with the LOGICAL ones (positional rename; a no-op select
+    * for never-renamed tables). THE one way to read lake data files with
+    * Spark's reader — every driver-side read path (V1 scan,
     * delete/overwrite rewrites, compaction) must go through it so a
-    * change to the rename convention happens in exactly one place. */
-  def readLogical(spark: org.apache.spark.sql.SparkSession,
-      schema: StructType, paths: Seq[String]): org.apache.spark.sql.DataFrame =
-    spark.read.schema(toPhysical(schema)).parquet(paths: _*)
+    * change to the rename convention happens in exactly one place. Paths
+    * and sizes come from the snapshot: no file is listed or stat'ed. */
+  def readLogical(spark: org.apache.spark.sql.SparkSession, store: SnapshotStore,
+      schema: StructType, files: Seq[DataFile]): org.apache.spark.sql.DataFrame =
+    readFiles(spark, store, toPhysical(schema), files.map(f => f.path -> f.sizeBytes))
       .toDF(schema.fieldNames.toIndexedSeq: _*)
 
   /** [[readLogical]] plus two provenance columns from the parquet reader's
@@ -63,15 +64,26 @@ object SchemaNames {
     * and the row's 0-based index within it ([[PositionDeletes.RowPosCol]]) —
     * the join identity of merge-on-read position deletes. */
   def readLogicalWithProvenance(spark: org.apache.spark.sql.SparkSession,
-      schema: StructType, paths: Seq[String]): org.apache.spark.sql.DataFrame = {
+      store: SnapshotStore, schema: StructType,
+      files: Seq[DataFile]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, split}
-    val phys = spark.read.schema(toPhysical(schema)).parquet(paths: _*)
+    val phys = readFiles(spark, store, toPhysical(schema),
+      files.map(f => f.path -> f.sizeBytes))
     val cols = schema.fields.toSeq.map(f => col(physicalName(f)).as(f.name)) ++ Seq(
       element_at(split(col("_metadata.file_path"), "/"), -1)
         .as(PositionDeletes.NameCol),
       col("_metadata.row_index").as(PositionDeletes.RowPosCol))
     phys.select(cols: _*)
   }
+
+  /** Lake files given as (table-relative path, size) read with
+    * `physSchema`, planned from the recorded sizes (no listing). */
+  private[lake] def readFiles(spark: org.apache.spark.sql.SparkSession,
+      store: SnapshotStore, physSchema: StructType,
+      files: Seq[(String, Long)]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftbridge.ParquetScanBridge.snapshotFrame(spark,
+      files.map { case (p, size) => store.tableDir.resolve(p).toUri.toString -> size },
+      physSchema)
 
   /** Rewrite a V1 filter's attribute names through `m` (logical →
     * physical). Identity when `m` is empty. */

@@ -228,7 +228,9 @@ final class SnapshotStore(val tableDir: Path,
     try swapHint(v) catch { case _: java.io.IOException => () }
 
   /** Optimistic-concurrency commit: builds the next snapshot from the
-    * current head, retries on lost races. Returns the committed snapshot. */
+    * current head, retries on lost races. Returns the committed snapshot.
+    * A builder whose statement planned on an older snapshot validates
+    * the head it is handed through [[Conflicts.rebase]]. */
   def commit(build: Option[Snapshot] => Snapshot, maxRetries: Int = 10): Snapshot =
     commitLoop(maxRetries) { head0 =>
       val next0 = build(head0)

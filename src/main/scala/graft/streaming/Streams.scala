@@ -364,9 +364,8 @@ object Streams {
             else {
               val index = graft.lake.PositionDeletes.applySnapshotDeletes(
                 spark, store,
-                graft.lake.SchemaNames.readLogicalWithProvenance(spark,
-                  head.schema,
-                  head.files.map(f => store.tableDir.resolve(f.path).toString)),
+                graft.lake.SchemaNames.readLogicalWithProvenance(spark, store,
+                  head.schema, head.files),
                 head)
               val dup = index
                 .join(broadcast(firstPerFp.select("fp")), Seq("fp"), "left_semi")

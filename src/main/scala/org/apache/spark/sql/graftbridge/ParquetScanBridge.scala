@@ -2,10 +2,11 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -25,6 +26,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * calls at plan time.
   */
 object ParquetScanBridge {
+
+  /** A DataFrame over exactly `files` ((path, size) straight from the
+    * snapshot) read with `dataSchema`: Spark's parquet file relation over
+    * a [[SnapshotFileIndex]]. `spark.read.parquet(paths)` would build an
+    * InMemoryFileIndex that stats every path on the driver and, above 32
+    * paths, runs a "Listing leaf files" Spark job; this frame plans from
+    * the sizes the snapshot already records. The parquet `_metadata`
+    * column (file path, row index) works as on any file source. */
+  def snapshotFrame(
+      spark: SparkSession,
+      files: Seq[(String, Long)],
+      dataSchema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new SnapshotFileIndex(spark, files),
+      StructType(Nil), dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
 
   /** Spark's own parquet `PartitionReaderFactory` in ROW mode: vectorized
     * columnar DECODE internally (where the schema supports it) behind the

@@ -266,6 +266,36 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(live == 4L, s"expected 4 live rows, got $live")
   }
 
+  test("compact and COW DELETE summary total-records match totalRows with eq-deletes pending") {
+    import spark.implicits._
+    sql("CREATE TABLE advreg.t.sumeq2 (k INT, v STRING) USING iceberg")
+    // one big old file stays out of the compaction below, so the
+    // equality deletes that may still mask rows in it stay pending
+    sql("INSERT INTO advreg.t.sumeq2 SELECT id, concat('big', id) FROM range(10, 5000)")
+    sql("INSERT INTO advreg.t.sumeq2 VALUES (1,'a'), (2,'b'), (3,'c')")
+    val store = new SnapshotStore(Paths.get(wh, "t", "sumeq2"))
+    Upsert.into(spark, store, Seq((1, "a2"), (10, "big2")).toDF("k", "v"), Seq("k"))
+    sql("INSERT INTO advreg.t.sumeq2 VALUES (4,'d')")
+    val big = store.head().get.files.map(_.sizeBytes).max
+    val compacted = Maintenance.compact(spark, store, smallFileThresholdBytes = big)
+    assert(compacted.operation == "replace", "test setup: nothing was compacted")
+    assert(compacted.deleteFiles.exists(_.kind == "equality"),
+      "test setup: no equality deletes pending after compact")
+    assert(compacted.summary("total-records").toLong == compacted.totalRows,
+      s"compact summary says ${compacted.summary("total-records")}, " +
+        s"totalRows says ${compacted.totalRows}")
+    sql("DELETE FROM advreg.t.sumeq2 WHERE k = 4")
+    val deleted = store.head().get
+    assert(deleted.operation == "delete" &&
+      deleted.deleteFiles.exists(_.kind == "equality"),
+      "test setup: no COW DELETE over pending equality deletes")
+    assert(deleted.summary("total-records").toLong == deleted.totalRows,
+      s"COW DELETE summary says ${deleted.summary("total-records")}, " +
+        s"totalRows says ${deleted.totalRows}")
+    val live = sql("SELECT count(*) FROM advreg.t.sumeq2").collect().head.getLong(0)
+    assert(live == 4990L + 3L, s"expected 4993 live rows, got $live")
+  }
+
   // ---- round-5 pins (ADVICE round 4) ----
 
   test("winnow fingerprints: doc shorter than k yields 0 fingerprints, NULL min_fp") {

@@ -21,10 +21,12 @@ import graft.lake._
   * Retry contract exercised here: plain appends/upserts retry internally
   * (commitLoop re-runs `attempt` against the new head — the new files are
   * head-independent). Operations whose PLAN depends on the head they read
-  * (COW DELETE, compaction, identity inserts) abort loudly with
-  * "concurrent commit ..." instead of committing a stale rewrite; the
-  * caller re-runs the whole statement, which re-plans against the new
-  * head. Both flavors must converge under contention.
+  * (COW DELETE, compaction) rebase onto the new head when no concurrent
+  * commit conflicts with what they read (graft.lake.Conflicts), and abort
+  * loudly with "concurrent commit ..." when one does, instead of
+  * committing a stale rewrite; identity inserts abort on any concurrent
+  * insert. The caller re-runs an aborted statement, which re-plans
+  * against the new head. Both flavors must converge under contention.
   */
 class ConcurrentStressSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -44,8 +46,8 @@ class ConcurrentStressSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Re-run `op` until it commits: head-pinned operations (COW delete,
-    * compaction) abort on a concurrent commit by contract and must be
-    * re-planned; anything else propagates. */
+    * compaction) abort on a conflicting concurrent commit by contract and
+    * must be re-planned; anything else propagates. */
   private def retrying[T](what: String, attempts: Int = 40)(op: => T): T = {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Seq.empty

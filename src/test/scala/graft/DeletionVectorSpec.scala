@@ -157,12 +157,14 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // retain with every vectored file surviving is an identity — no new
     // blob is written, the original DeleteFile entry rides through
-    val kept = PositionDeletes.retain(spark, st, after.deleteFiles, after.files)
+    val kept = PositionDeletes.retain(spark, st, after.deleteFiles, after.files,
+      Seq.empty)
     assert(kept == after.deleteFiles, s"identity retain rewrote: $kept")
     // ...and with no vectored file surviving the vector is dropped
+    val (vectored, unvectored) = after.files.partition(f =>
+      idx.map(_.name).contains(PositionDeletes.fileName(f.path)))
     val dead = PositionDeletes.retain(spark, st, after.deleteFiles,
-      after.files.filter(f => !idx.map(_.name).contains(
-        PositionDeletes.fileName(f.path))))
+      unvectored, vectored)
     assert(dead.isEmpty, s"stale vector survived: $dead")
   }
 

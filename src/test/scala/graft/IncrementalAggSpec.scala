@@ -27,8 +27,8 @@ class IncrementalAggSpec extends AnyFunSuite {
   private def mvContent(): Seq[(String, Long, Double)] = {
     val h = mvStore.head().get
     if (h.files.isEmpty) Seq.empty
-    else SchemaNames.readLogical(spark, h.schema,
-        h.files.map(f => mvStore.tableDir.resolve(f.path).toString))
+    else SchemaNames.readLogical(spark, mvStore, h.schema,
+        h.files)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .toSeq.sortBy(_._1)
   }
@@ -75,8 +75,8 @@ class IncrementalAggSpec extends AnyFunSuite {
     val src = new SnapshotStore(Paths.get(wh, "t", "ctas"))
     val mvs = new SnapshotStore(Paths.get(wh, "t", "ctas_mv"))
     IncrementalAgg.refresh(spark, src, mvs, Seq("cat"), "v")
-    val got = SchemaNames.readLogical(spark, mvs.head().get.schema,
-      mvs.head().get.files.map(f => mvs.tableDir.resolve(f.path).toString))
+    val got = SchemaNames.readLogical(spark, mvs, mvs.head().get.schema,
+      mvs.head().get.files)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq == Seq(("x", 2L, 4.0)))
   }
@@ -104,8 +104,8 @@ class IncrementalAggSpec extends AnyFunSuite {
     def mv(): Seq[(String, Long, Double, Double, Double)] = {
       val h = mvs.head().get
       if (h.files.isEmpty) Seq.empty
-      else SchemaNames.readLogical(spark, h.schema,
-          h.files.map(f => mvs.tableDir.resolve(f.path).toString))
+      else SchemaNames.readLogical(spark, mvs, h.schema,
+          h.files)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getDouble(3), r.getDouble(4)))
@@ -157,8 +157,8 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(out.getLong(1) == src.currentVersion().get)
     val mvs = new SnapshotStore(Paths.get(wh, "t", "gsales_mv"))
     val h = mvs.head().get
-    val got = SchemaNames.readLogical(spark, h.schema,
-        h.files.map(f => mvs.tableDir.resolve(f.path).toString))
+    val got = SchemaNames.readLogical(spark, mvs, h.schema,
+        h.files)
       .collect().map(r => (r.getString(0), r.getDouble(3))).toMap
     assert(got("e") == 6.5)
   }
@@ -178,8 +178,8 @@ class IncrementalAggSpec extends AnyFunSuite {
     val mvs = new SnapshotStore(Paths.get(wh, "t", "corpus_mv"))
     IncrementalAgg.refresh(spark, src, mvs, Seq("cat"), "v")
     def mv(): Seq[(String, Long, Double)] =
-      SchemaNames.readLogical(spark, mvs.head().get.schema,
-          mvs.head().get.files.map(f => mvs.tableDir.resolve(f.path).toString))
+      SchemaNames.readLogical(spark, mvs, mvs.head().get.schema,
+          mvs.head().get.files)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
         .toSeq.sortBy(_._1)
     assert(mv() == Seq(("a", 2L, 3.0), ("b", 2L, 7.0)))

@@ -122,8 +122,8 @@ class PlanQualitySpec extends SparkSpec {
     val head = store.head().get
     assert(head.deleteFiles.nonEmpty, "positional tuples must be pending")
     val inner = graft.lake.PositionDeletes.applySnapshotDeletes(spark, store,
-      graft.lake.SchemaNames.readLogicalWithProvenance(spark, head.schema,
-        head.files.map(f => store.tableDir.resolve(f.path).toString)),
+      graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
+        head.files),
       head)
     val p = inner.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
@@ -349,8 +349,8 @@ class PlanQualitySpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val inner = graft.lake.PositionDeletes.applySnapshotDeletes(spark, store,
-        graft.lake.SchemaNames.readLogicalWithProvenance(spark, head.schema,
-          head.files.map(f => store.tableDir.resolve(f.path).toString)),
+        graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
+          head.files),
         head)
       val p = inner.queryExecution
         .explainString(ExplainMode.fromString("formatted"))

@@ -158,8 +158,8 @@ class StreamingSpec extends SparkSpec {
       val head = store.head().get
       val df = graft.lake.PositionDeletes.applySnapshotDeletes(spark,
         store,
-        graft.lake.SchemaNames.readLogicalWithProvenance(spark, head.schema,
-          head.files.map(f => store.tableDir.resolve(f.path).toString)),
+        graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
+          head.files),
         head)
       df.select("user_id", "seq_no", "value").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -199,8 +199,8 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     def indexDocs(): Set[Long] = {
       val head = store.head().get
-      graft.lake.SchemaNames.readLogicalWithProvenance(spark, head.schema,
-        head.files.map(f => store.tableDir.resolve(f.path).toString))
+      graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
+        head.files)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     }
     val stream = input.toDF().toDF("doc_id", "text")
@@ -242,8 +242,8 @@ class StreamingSpec extends SparkSpec {
     val stream = input.toDF().toDF("doc_id", "text")
     def index(): Map[String, Long] = {
       val head = store.head().get
-      graft.lake.SchemaNames.readLogicalWithProvenance(spark, head.schema,
-        head.files.map(f => store.tableDir.resolve(f.path).toString))
+      graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
+        head.files)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     // md5(NULL) is NULL and equi-joins drop NULL keys — without the

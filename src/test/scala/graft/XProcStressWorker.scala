@@ -21,8 +21,10 @@ import graft.lake._
 object XProcStressWorker {
 
   /** Same retry contract as ConcurrentStressSpec: head-pinned plans (COW
-    * delete, compaction) abort loudly on a concurrent commit and must be
-    * re-planned by the caller; anything else propagates. */
+    * delete, compaction) rebase over concurrent commits they do not
+    * conflict with (graft.lake.Conflicts) and abort loudly with
+    * "concurrent commit" on one they do, to be re-planned by the caller;
+    * anything else propagates. */
   private def retrying[T](what: String, attempts: Int = 60)(op: => T): T = {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
