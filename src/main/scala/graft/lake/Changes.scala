@@ -55,12 +55,8 @@ object Changes {
       * position tuples and equality keys subtracted) — a file-set diff
       * names changed files, but the rows a reader actually saw at a
       * version exclude its pending deletes. */
-    def readFiles(files: Seq[DataFile], asOf: Snapshot): DataFrame = {
-      val df = SchemaNames.readLogicalWithProvenance(spark, store, schema, files)
-      PositionDeletes.applySnapshotDeletes(spark, store, df, asOf,
-          readSchema = schema)
-        .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-    }
+    def readFiles(files: Seq[DataFile], asOf: Snapshot): DataFrame =
+      GraftTable.liveRows(spark, store, asOf, files, schema)
 
     val parts = versions.flatMap { v =>
       val snap = store.read(v)
@@ -123,12 +119,8 @@ object Changes {
           }
         }
       val morDeletedEq: Option[DataFrame] = parent.flatMap { par =>
-        PositionDeletes.equalityMatchedRows(spark, store, snap,
-            newDeleteFiles.filter(_.kind == "equality"), par.files,
-            readSchema = schema)
-          .map(m => PositionDeletes.applySnapshotDeletes(spark, store, m, par,
-              readSchema = schema)
-            .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol))
+        PositionDeletes.equalityMatchedRows(spark, store, par,
+          newDeleteFiles.filter(_.kind == "equality"), schema)
       }
       val ins = if (added.nonEmpty) Some(readFiles(added, snap)) else None
       val del = if (removed.nonEmpty) Some(readFiles(removed,

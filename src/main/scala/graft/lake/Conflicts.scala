@@ -2,8 +2,7 @@ package graft.lake
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.sources.{Filter, In}
+import org.apache.spark.sql.sources.Filter
 
 /** The one commit-time conflict check for statements that plan on one
   * snapshot (`base`) and commit on whatever head the commit loop finds —
@@ -128,30 +127,13 @@ object Conflicts {
     rule1.orElse(rule2).orElse(rule3).orElse(rule4)
   }
 
-  /** Which data files can delete file `d` remove rows of? Loads `d`'s
-    * metadata once. Conservative: metadata that cannot be read answers
-    * "every file". */
+  /** Which data files can delete file `d` remove rows of? The scan's own
+    * answer ([[PositionDeletes.applicable]]). Conservative: metadata that
+    * cannot be read answers "every file". */
   private def mayApply(store: SnapshotStore, head: Snapshot,
       d: DeleteFile): DataFile => Boolean =
-    try d.kind match {
-      case "position" =>
-        val (lo, hi) = PositionDeletes.nameRange(store, d)
-        f => { val name = PositionDeletes.fileName(f.path); lo <= name && name <= hi }
-      case DeletionVectors.Kind =>
-        val names = DeletionVectors.readIndex(store, d).map(_.name).toSet
-        f => names.contains(PositionDeletes.fileName(f.path))
-      case "equality" =>
-        val types = d.equalityColumns.map(c => head.schema.fields
-          .find(SchemaNames.physicalName(_) == c).get.dataType)
-        val keys = EqDeleteTupleCache.get(
-          store.tableDir.resolve(d.path).toString, d.equalityColumns, types)
-          .toArray(Array.empty[Seq[Any]])
-        // per-column IN over the key values: a superset of the tuple
-        // match, so a miss on any column rules the file out
-        val perColumn = d.equalityColumns.indices.map(i => In(d.equalityColumns(i),
-          keys.map(k => CatalystTypeConverters.convertToScala(k(i), types(i))).distinct))
-        f => f.seq < d.seq && keys.nonEmpty &&
-          perColumn.forall(StatsPruner.mightMatch(f, _, head.partitionSpec))
-      case _ => _ => true
+    try {
+      val applies = PositionDeletes.applicable(store, head, d)
+      f => applies(f).isDefined
     } catch { case NonFatal(_) => _ => true }
 }

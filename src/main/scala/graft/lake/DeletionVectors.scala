@@ -36,10 +36,10 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * The index is read driver-side in one small read (O(files-with-
-  * deletes)); payloads are read with exact (offset, length) ranges,
-  * executor-side for the COW scan, distributed for the SELECT
-  * anti-join. Containers switch array→bitmap at 4096 entries, the
-  * roaring break-even.
+  * deletes)); payloads are read with exact (offset, length) ranges by
+  * each reader of the table scan (its own file's slice only), and
+  * distributed for CDC and consolidation. Containers switch array→bitmap
+  * at 4096 entries, the roaring break-even.
   */
 object DeletionVectors {
 
@@ -224,8 +224,9 @@ object DeletionVectors {
   }
 
   /** All (data file name → sorted positions) pairs of `dvs`, decoded
-    * DISTRIBUTED as a `(NameCol, RowPosCol)` frame — the SELECT path's
-    * delete side. Each task ranged-reads only its own payload slice. */
+    * DISTRIBUTED as a `(NameCol, RowPosCol)` frame — the delete side of
+    * CDC and consolidation. Each task ranged-reads only its own payload
+    * slice. */
   def tupleFrame(spark: SparkSession, store: SnapshotStore,
       dvs: Seq[DeleteFile]): DataFrame = {
     import spark.implicits._

@@ -1,277 +1,444 @@
 package graft.lake
 
-import org.apache.hadoop.conf.Configuration
+import java.util.OptionalLong
+
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
-
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
-import org.apache.spark.sql.connector.read.SupportsReportStatistics
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, Literal, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, ParquetScanBridge}
+import org.apache.spark.sql.sources.{Filter, In}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native executor-side batch read path (DSv2 `Batch` +
-  * `PartitionReaderFactory`), used by the row-level operation rewrites
-  * (MERGE / UPDATE): Spark's ReplaceData planning calls `Scan.toBatch`
-  * directly and does not route through the V1 fallback, so the COW scan
-  * must produce InternalRows on executors itself.
+/** The read path of a lake table: one DSv2 scan ([[LakeScan]]) serves
+  * every SELECT, every row-level rewrite (MERGE / UPDATE / DELETE) and
+  * every engine read of live rows ([[GraftTable.liveRows]]).
   *
-  * One InputPartition per data file of the snapshot's (pruned) file
-  * list; readers run fully distributed. Each wraps Spark's own parquet
-  * reader (ParquetScanBridge: vectorized where the schema allows, with
-  * null-fill for columns missing from old files) and applies position,
-  * equality and deletion-vector deletes inside the reader; only the
-  * delete files themselves are read with parquet-mr `Group` readers. The
-  * hot SELECT path is [[GraftVectorScan]]; the V1 bridge remains only for
-  * `_file` and pending merge-on-read deletes there.
+  * Planning prunes chunk → file → identity-exact, then asks which delete
+  * files may apply to each planned file ([[PositionDeletes.applicable]],
+  * the same answer the commit check uses). When none applies to any
+  * planned file, the scan is Spark's packed vectorized parquet batch
+  * ([[ParquetScanBridge]]). Otherwise each file is one partition, read by
+  * Spark's parquet reader behind [[GraftPartitionReader]], which applies
+  * position, deletion-vector and equality deletes row by row. Readers load
+  * their own positions ([[TupleIndexCache]], the file's vector slice) and
+  * keys; equality delete files are read through the same Spark reader
+  * with the key columns' current types, so planning starts no Spark job
+  * and keys meet rows in one value domain.
+  * This is the shape of Iceberg's `SparkBatchQueryScan` + `DeleteFilter`.
   */
-/** One equality-delete file a reader must apply: tuples at `path` hold key
-  * VALUES over `cols` (physical names); rows of data files with commit
-  * sequence < `seq` die on key match. Resolved to concrete types by the
-  * reader factory executor-side. */
-final case class EqDeleteRef(path: String, seq: Long, cols: Seq[String])
 
-/** @param deletedPositions sorted 0-based row indexes (merge-on-read
-  *                         position deletes) the reader must skip — the
-  *                         small-backlog fast path (driver-built index)
-  * @param posDeleteFiles   position-delete files whose tuple range covers
-  *                         this data file — the large-backlog path: the
-  *                         reader loads its OWN positions from these with
-  *                         an exact `file_path` parquet filter (row-group +
-  *                         page pruning on the sorted column), so no tuple
-  *                         ever materializes on the driver
-  * @param eqDeletes        equality-delete files applying to this data file
-  *                         (already filtered to fileSeq < delete.seq);
-  *                         applied by per-row key probing against an
-  *                         executor-cached tuple set — never converted to
-  *                         positions on the driver, because one key may
-  *                         match an unbounded number of rows */
+/** One delete file as a reader applies it to one data file. */
+sealed trait DeleteRef extends Serializable
+
+/** A position tuple file of `rows` tuples whose `file_path` range covers
+  * the data file; the reader takes the tuples naming its own file
+  * ([[TupleIndexCache]]). */
+final case class TupleRef(path: String, size: Long, rows: Long) extends DeleteRef
+
+/** The data file's slice of a deletion-vector blob. */
+final case class DvSlice(blob: String, offset: Long, length: Int) extends DeleteRef
+
+/** An equality delete file over `cols` (physical names) committed after
+  * the data file; rows whose key equals a tuple die. */
+final case class EqRef(path: String, size: Long, cols: Seq[String]) extends DeleteRef
+
+/** One whole data file (absolute path) and the deletes it must apply. */
 final case class GraftInputPartition(
     filePath: String,
-    deletedPositions: Array[Long] = Array.empty,
-    posDeleteFiles: Seq[String] = Seq.empty,
-    eqDeletes: Seq[EqDeleteRef] = Seq.empty,
-    fileSize: Long = 0L,
-    // deletion-vector payload slices covering this file: (blob path,
-    // offset, length) — the reader ranged-reads exactly its own bitmap
-    dvSlices: Seq[(String, Long, Int)] = Seq.empty) extends InputPartition
+    fileSize: Long,
+    deletes: Seq[DeleteRef] = Seq.empty) extends InputPartition
 
-final class GraftBatchScan(
-    snapshot: Snapshot,
-    store: SnapshotStore,
-    required: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter],
+/** The scan of one snapshot's files.
+  *
+  * @param fileFilter true for row-level rewrites: the runtime-filter
+  *                   attribute is `_file`, so Spark's runtime group
+  *                   filtering hands `filter()` the files holding matches;
+  *                   otherwise the file-prunable columns are reported for
+  *                   dynamic file pruning
+  * @param onRuntimePrune told the file set left after each runtime filter
+  *                   (a rewrite replaces exactly the files it read) */
+final class LakeScan(
+    private val snapshot: Snapshot,
+    private val store: SnapshotStore,
+    private val required: StructType,
+    private val filters: Array[Filter],
+    private val fileFilter: Boolean = false,
+    streamLimits: StreamReadLimits = StreamReadLimits(),
     onRuntimePrune: Seq[DataFile] => Unit = _ => ())
   extends Scan with Batch with SupportsReportStatistics
-  with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
+  with SupportsReportPartitioning with SupportsReportOrdering
+  with SupportsRuntimeV2Filtering {
 
-  // chunk-level (manifest-list) pruning first, then per-file
+  // Physically-renamed filters and the vetted exact subset, computed ONCE
+  // per scan — pruning and the reader pushdown must agree with the
+  // builder's pushed-claim split (same deterministic inputs) or rows leak
+  // past a dropped Filter node.
+  private lazy val rename: Map[String, String] =
+    SchemaNames.renameMap(snapshot.schema)
+  private lazy val physFilters: IndexedSeq[Filter] =
+    filters.toIndexedSeq.map(SchemaNames.renameFilter(_, rename))
+  private lazy val exactPhysIdx: Set[Int] =
+    IdentityFilters.exactIndices(physFilters, snapshot)
+  private lazy val residualPhys: Array[Filter] =
+    physFilters.zipWithIndex
+      .filterNot(p => exactPhysIdx.contains(p._2)).map(_._1).toArray
+
+  // chunk-level (manifest-list) pruning first — only the chunks whose
+  // merged bounds overlap the filters are ever loaded — then per-file,
+  // then EXACT selection for the identity-partition filters the builder
+  // claimed as pushed (no residual Filter re-applies those — correctness
+  // depends on this step, not just performance)
   private[lake] lazy val prunedFiles: Seq[DataFile] = {
-    val phys = filters.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-    StatsPruner.prune(store.filesForScan(snapshot, phys), phys,
+    val exact = exactPhysIdx.toSeq.map(physFilters)
+    StatsPruner.prune(store.filesForScan(snapshot, physFilters), physFilters,
       snapshot.partitionSpec)
+      .filter(df => IdentityFilters.matchesAll(df, exact, snapshot))
   }
 
-  /** File set after runtime (dynamic) filtering — starts at the statically
-    * pruned set; `filter()` narrows it before planInputPartitions. */
+  /** File set after runtime (dynamic) filtering; null until `filter()`. */
   @volatile private var runtimeFiles: Seq[DataFile] = null
   private def currentFiles: Seq[DataFile] =
     if (runtimeFiles ne null) runtimeFiles else prunedFiles
+  /** Test seam: (kept, total) after the last runtime filter. */
+  @volatile private[graft] var runtimePruned: Option[(Int, Int)] = None
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+  /** The deletes each planned file must apply, by data-file path (files
+    * no delete touches are absent). Driver-side metadata reads only:
+    * footer ranges, vector indexes and equality key sets. */
+  private lazy val deletesOf: Map[String, Seq[DeleteRef]] =
+    if (snapshot.deleteFiles.isEmpty) Map.empty
+    else {
+      val appliers = snapshot.deleteFiles
+        .map(PositionDeletes.applicable(store, snapshot, _))
+      prunedFiles.iterator
+        .map(f => f.path -> appliers.flatMap(_(f)))
+        .filter(_._2.nonEmpty).toMap
+    }
 
-  /** Runtime group filtering at FILE granularity: `filterAttributes` is
-    * the `_file` metadata column, so Spark's
-    * RowLevelOperationRuntimeGroupFiltering rule builds an IN-subquery
-    * collecting the distinct `_file` values of rows that actually match
-    * the MERGE/UPDATE/DELETE condition, and at runtime hands this scan
-    * exactly the set of files containing matches — the COW rewrite then
-    * reads and replaces only those, regardless of how weak the static
-    * predicates were. This is the 100 TB MERGE optimization (same design
-    * as Iceberg's copy-on-write scan).
-    *
-    * Returning a SINGLE attribute matters: multiple filter attributes make
-    * Spark build one `named_struct(...) IN subquery` filter, which cannot
-    * be translated to a connector Predicate and is silently dropped —
-    * that, not a planner limitation, is why runtime group filtering
-    * appeared "never injected" with an all-columns filterAttributes. */
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"))
+  /** Whole-file partitions, chosen once per scan over the planned files:
+    * a delete applies to one of them, or the rows must carry `_file` /
+    * `_pos`. Spark needs one answer for every partition of a scan (it
+    * refuses to mix row and columnar partitions) and fixes the reader
+    * factory before runtime filtering, so a narrowed file set keeps it. */
+  private lazy val wholeFiles: Boolean =
+    deletesOf.nonEmpty || required.fieldNames.exists(GraftTable.Synthetic)
 
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
-    val v1 = org.apache.spark.sql.graftbridge.ColumnBridge.predicatesToV1(predicates)
+  /** Dynamic file pruning: Spark's PartitionPruning rule sees these
+    * attributes, and when one is a join key against a filtered (broadcast)
+    * build side it hands the build side's key values to `filter()` before
+    * planning input partitions. Reported columns are the ones file pruning
+    * can act on: partition sources, declared sort/z-order columns and
+    * bloom-filtered columns. A rewrite reports `_file` alone: several
+    * attributes would make Spark build one `named_struct(...) IN subquery`
+    * filter, which cannot be translated to a connector Predicate and is
+    * silently dropped. */
+  override def filterAttributes(): Array[NamedReference] =
+    if (fileFilter) Array(Expressions.column(GraftTable.FileCol))
+    else {
+      val props = snapshot.properties
+      val sortCols = props.get("graft.sort-order").map(_.trim).map {
+        case s if s.toLowerCase.startsWith("zorder") =>
+          s.replaceAll("(?i)zorder\\s*\\(", "").stripSuffix(")")
+        case s => s
+      }.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+      val bloomCols = props.get("graft.bloom-columns").toSeq
+        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+      // only columns the scan OUTPUTS: Spark's PartitionPruning rule
+      // resolves these against the relation output and THROWS (not skips)
+      // on a miss, so a pruned-away partition column must not be reported
+      (snapshot.partitionSpec.map(_.source) ++ sortCols ++ bloomCols)
+        .distinct
+        .filter(c => required.fieldNames.contains(c))
+        .map(Expressions.column)
+        .toArray
+    }
+
+  /** Narrows the planned files by `_file IN (...)` (runtime group
+    * filtering) and by stats over any other predicate. */
+  override def filter(predicates: Array[Predicate]): Unit = {
+    val v1 = ColumnBridge.predicatesToV1(predicates)
+    if (v1.isEmpty) return // untranslatable: keep the conservative set
     val (fileIn, rest) = v1.partition {
-      case org.apache.spark.sql.sources.In("_file", _) => true
+      case In(GraftTable.FileCol, _) => true
       case _ => false
     }
-    // `_file` values may arrive in URI form ("file:///x/y", from
-    // input_file_name on the V1 bridge) or raw ("/x/y", from the COW
-    // reader) — normalize BOTH sides before matching. Narrowing to the
-    // wrong set here loses writes, so if any wanted path fails to resolve
-    // to a known snapshot file (a form this normalization doesn't cover),
-    // refuse to narrow on that filter and keep the conservative set.
+    // `_file` values may arrive in URI form ("file:///x/y") or raw
+    // ("/x/y", from the reader) — normalize BOTH sides before matching.
+    // Narrowing to the wrong set here loses writes, so if any wanted path
+    // fails to resolve to a known snapshot file (a form this
+    // normalization doesn't cover), refuse to narrow on that filter and
+    // keep the conservative set.
     def canon(p: String): String =
       if (p.startsWith("file:"))
         scala.util.Try(new java.net.URI(p).getPath).toOption.filter(_ != null)
           .getOrElse(p.stripPrefix("file://").stripPrefix("file:"))
       else p
-    lazy val knownPaths: Set[String] =
-      snapshot.files.map(f => store.tableDir.resolve(f.path).toString).toSet
+    lazy val knownPaths: Set[String] = snapshot.files.map(absPath).toSet
     val afterFile = fileIn.foldLeft(currentFiles) { (fs, flt) =>
-      val wanted = flt.asInstanceOf[org.apache.spark.sql.sources.In]
-        .values.map(v => canon(String.valueOf(v))).toSet
-      if (wanted.exists(w => !knownPaths.contains(w))) fs // unknown form → keep all
-      else fs.filter(f => wanted.contains(store.tableDir.resolve(f.path).toString))
+      val wanted = flt.asInstanceOf[In].values
+        .map(v => canon(String.valueOf(v))).toSet
+      if (wanted.exists(w => !knownPaths.contains(w))) fs
+      else fs.filter(f => wanted.contains(absPath(f)))
     }
-    val narrowed = StatsPruner.prune(afterFile, rest.toIndexedSeq,
-      snapshot.partitionSpec, SchemaNames.renameMap(snapshot.schema))
-    runtimeFiles = narrowed
-    onRuntimePrune(narrowed)
+    val kept = StatsPruner.prune(afterFile, rest.toIndexedSeq,
+      snapshot.partitionSpec, rename)
+    runtimePruned = Some(kept.size -> prunedFiles.size)
+    runtimeFiles = kept
+    onRuntimePrune(kept)
   }
 
-  /** Partitions planned for one file set: Spark asks more than once per
-    * statement (each BatchScanExec copy, before and after runtime
-    * filtering), and planning runs a Spark job when position deletes are
-    * pending. */
-  @volatile private var planned: (Seq[DataFile], Array[InputPartition]) = null
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = currentFiles
-    val memo = planned
-    if (memo != null && memo._1 == files) memo._2
+  /** Partition-key groups for storage-partitioned joins, when the layout
+    * is soundly reportable (see [[Spj.keyed]]); packed batches only. */
+  private[lake] lazy val keyed: Option[Spj.Keyed] =
+    if (wholeFiles) None else Spj.keyed(snapshot, prunedFiles, required)
+
+  /** Columns (LOGICAL names) every pruned file is stamped sorted by —
+    * the write path's clustered append sets DataFile.sortedBy; any file
+    * from a non-sorting rewrite has it empty and kills the claim. Only
+    * reported when the columns survive projection (resolution against
+    * the scan output THROWS otherwise, same as SPJ keys). */
+  private lazy val orderedBy: Seq[String] = {
+    // opt-in: honoring an order forces ONE partition per file (no split
+    // packing, no sub-file parallelism) — only pay that when sorted
+    // plans are requested; the conf is the same one Spark gates
+    // SPJ-with-ordering on
+    val wantsSorted = org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.sql.sources.v2.bucketing.sorting.enabled", "false")
+      .toBoolean
+    val fs = if (wantsSorted) prunedFiles else Seq.empty
+    if (fs.isEmpty) Seq.empty
     else {
-      val parts = plan(files)
-      planned = (files, parts)
-      parts
+      val stamps = fs.map(_.sortedBy).distinct
+      if (stamps.size != 1 || stamps.head.isEmpty) Seq.empty
+      else {
+        val physToLogical = rename.map(_.swap)
+        val logical = stamps.head.map(p => physToLogical.getOrElse(p, p))
+        if (logical.forall(required.fieldNames.contains)) logical
+        else Seq.empty
+      }
     }
   }
 
-  private def plan(files: Seq[DataFile]): Array[InputPartition] = {
-    // merge-on-read: each reader must skip its file's deleted rows so COW
-    // rewrites never resurrect them. Position deletes ride in the
-    // partitions as concrete index arrays while the backlog is small
-    // (driver cost capped by graft.cow.driver-tuple-cap); above the cap
-    // the readers load their own positions executor-side, pruned by each
-    // delete file's footer name-range. Equality deletes ALWAYS apply
-    // executor-side (per-row key probe): their tuple files are small, but
-    // the rows they match are unbounded, so a driver-side conversion to
-    // positions cannot be capped.
-    val spark = org.apache.spark.sql.SparkSession.active
-    val pos = snapshot.deleteFiles.filter(_.positional)
-    val eq = snapshot.deleteFiles.filter(_.kind == "equality")
-    val eqRefs = eq.map(e => EqDeleteRef(
-      store.tableDir.resolve(e.path).toString, e.seq, e.equalityColumns))
-    def eqFor(f: DataFile): Seq[EqDeleteRef] = eqRefs.filter(f.seq < _.seq)
+  /** Per-partition sort order: with SPJ (one file per key group after
+    * compaction) Spark skips the sort-merge join's per-partition sorts.
+    * Each partition reads one file in offset order whenever a claim
+    * exists (packed batches plan one partition per file then; whole-file
+    * partitions always are), and deletes only remove rows. */
+  override def outputOrdering(): Array[SortOrder] =
+    orderedBy.map(c => Expressions.sort(
+      Expressions.column(c), SortDirection.ASCENDING)).toArray
 
-    val posTuples = pos.map(_.rowCount).sum
-    if (posTuples <= PositionDeletes.driverTupleCap(spark)) {
-      val posByName: Map[String, Array[Long]] =
-        PositionDeletes.positionsByFileName(spark, store, pos, files)
-      files.map { f =>
-        GraftInputPartition(
-          store.tableDir.resolve(f.path).toString,
-          posByName.getOrElse(PositionDeletes.fileName(f.path), Array.empty),
-          Seq.empty, eqFor(f), f.sizeBytes): InputPartition
-      }.toArray
-    } else {
-      // O(#delete files) footer/index reads on the driver, zero tuples:
-      // raw tuple files contribute a name-range (footer stats); vector
-      // blobs contribute exact per-file payload slices (their index IS
-      // the mapping)
-      val (dvs, tupleFiles) = pos.partition(_.kind == DeletionVectors.Kind)
-      val ranged = tupleFiles.map(d =>
-        (PositionDeletes.nameRange(store, d),
-          store.tableDir.resolve(d.path).toString))
-      val dvSliceByName: Map[String, Seq[(String, Long, Int)]] = dvs
-        .flatMap { d =>
-          val blob = store.tableDir.resolve(d.path).toString
-          DeletionVectors.readIndex(store, d)
-            .map(e => e.name -> ((blob, e.offset, e.length)))
-        }
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      files.map { f =>
-        val name = PositionDeletes.fileName(f.path)
-        val covering = ranged.collect {
-          case ((lo, hi), p) if lo <= name && name <= hi => p
-        }
-        GraftInputPartition(store.tableDir.resolve(f.path).toString,
-          Array.empty, covering, eqFor(f), f.sizeBytes,
-          dvSliceByName.getOrElse(name, Seq.empty)): InputPartition
-      }.toArray
+  /** Reported layout → Spark plans co-partitioned joins WITHOUT a
+    * shuffle (gated upstream by spark.sql.sources.v2.bucketing.enabled;
+    * reporting when the gate is off costs nothing). */
+  override def outputPartitioning(): Partitioning = keyed match {
+    case Some(k) => new KeyGroupedPartitioning(k.keys, k.groups.size)
+    case None => new UnknownPartitioning(0)
+  }
+
+  private def absPath(f: DataFile): String = store.tableDir.resolve(f.path).toString
+
+  override def planInputPartitions(): Array[InputPartition] =
+    if (wholeFiles)
+      currentFiles.map(f => GraftInputPartition(absPath(f), f.sizeBytes,
+        deletesOf.getOrElse(f.path, Seq.empty)): InputPartition).toArray
+    else packedBatch().planInputPartitions()
+
+  /** Depends on schema, filters and the delete files, never on which files
+    * survived runtime filtering. A fresh instance per call: Spark asks once
+    * per plan and ships copies, and Spark's parquet factory is not safe to
+    * share between concurrent readers. */
+  override def createReaderFactory(): PartitionReaderFactory =
+    if (wholeFiles) wholeFileFactory() else packedBatch().createReaderFactory()
+
+  /** Spark's vectorized parquet batch over the current files. Files carry
+    * PHYSICAL column names: the bridge gets the physical schema,
+    * projection and filters; rows bind positionally to the logical
+    * attributes. Exact identity-partition filters are enforced by FILE
+    * selection and must NOT reach the parquet reader: their column may be
+    * pruned out of the read schema, and parquet record-level filtering
+    * evaluates a missing column as NULL — dropping every row. */
+  private def packedBatch(): Batch = {
+    val spark = SparkSession.active
+    val physRequired = StructType(required.fields.map(f =>
+      f.copy(name = rename.getOrElse(f.name, f.name))))
+    val physTable = SchemaNames.toPhysical(snapshot.schema)
+    def uri(f: DataFile): (String, Long) =
+      store.tableDir.resolve(f.path).toUri.toString -> f.sizeBytes
+    keyed match {
+      case Some(k) =>
+        // after a runtime filter, narrow each original key group — the
+        // surviving groups stay an exact subset of the reported partition
+        // values, which BatchScanExec checks when re-planning under SPJ
+        val groups =
+          if (runtimeFiles eq null) k.groups
+          else {
+            val remaining = currentFiles.map(_.path).toSet
+            k.groups
+              .map { case (row, fs) => row -> fs.filter(f => remaining.contains(f.path)) }
+              .filter(_._2.nonEmpty)
+          }
+        ParquetScanBridge.vectorizedKeyedBatch(spark,
+          groups.map { case (row, fs) => row -> fs.map(uri) },
+          physTable, physRequired, residualPhys,
+          perFilePartitions = orderedBy.nonEmpty)
+      case None if orderedBy.nonEmpty =>
+        ParquetScanBridge.vectorizedPerFileBatch(spark, currentFiles.map(uri),
+          physTable, physRequired, residualPhys)
+      case None =>
+        ParquetScanBridge.vectorizedBatch(spark, currentFiles.map(uri),
+          physTable, physRequired, residualPhys)
     }
   }
 
-  /** Built driver-side: the inner factory is Spark's own parquet reader
-    * (vectorized decode, row interface) over the PHYSICAL read schema —
-    * the required columns (minus the synthesized `_file`) renamed to
-    * their physical file names, plus any equality-delete key columns the
-    * projection didn't already include (the per-row probe needs them even
-    * when the query doesn't). */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val byPhys: Map[String, StructField] =
-      snapshot.schema.fields.map(f => SchemaNames.physicalName(f) -> f).toMap
-    val dataCols = required.fields.filter(_.name != "_file")
-    // source each projected field from the TABLE schema: it carries the
-    // rename + default metadata the parquet reader needs (null-fill /
-    // EXISTS_DEFAULT for columns absent from old files)
-    val byName = snapshot.schema.fields.map(f => f.name -> f).toMap
-    val physRequired = dataCols.map { rf =>
-      val tf = byName.getOrElse(rf.name, rf)
-      tf.copy(name = SchemaNames.physicalName(tf))
-    }
+  /** The reader factory of whole-file partitions: Spark's parquet reader
+    * over the PHYSICAL read schema — the required columns (minus `_file`
+    * and `_pos`) renamed to their file names, plus any equality-delete key
+    * column the projection dropped (the probe needs it) — and one key
+    * reader per equality key-column group. No filter is pushed: every row
+    * of a file must arrive, in file order, for `_pos` and position deletes
+    * to count. */
+  private def wholeFileFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    // source each field from the TABLE schema: it carries the default
+    // metadata the parquet reader needs (null-fill / EXISTS_DEFAULT for
+    // columns absent from old files), for projected and appended key
+    // columns alike
+    val physTable = SchemaNames.toPhysical(snapshot.schema)
+    val byPhys = physTable.fields.map(f => f.name -> f).toMap
+    val physRequired = required.fields
+      .filterNot(f => GraftTable.Synthetic(f.name))
+      .map(rf => byPhys.getOrElse(rename.getOrElse(rf.name, rf.name), rf))
+    val refs = deletesOf.values.flatten.toSeq
+    val eqCols = refs.collect { case e: EqRef => e.cols }.distinct
     val present = physRequired.map(_.name).toSet
-    val eqCols = snapshot.deleteFiles.filter(_.kind == "equality")
-      .flatMap(_.equalityColumns).distinct.filterNot(present)
-    // appended key columns are sourced from the TABLE field like projected
-    // ones, metadata included — a column added with DEFAULT reads its
-    // EXISTS_DEFAULT from old files on BOTH paths, so whether the probe
-    // sees the default value cannot depend on what the query projected
-    val extraEq = eqCols.map { c =>
-      val tf = byPhys.getOrElse(c, throw new IllegalStateException(
-        s"equality-delete column '$c' no longer exists in the table " +
-          "schema; run rewrite_deletes before dropping delete-key columns"))
-      tf.copy(name = c)
-    }
+    val extraEq = eqCols.flatten.distinct.filterNot(present).map(byPhys)
     val physRead = StructType(physRequired ++ extraEq)
-    val physTable = StructType(snapshot.schema.fields.map(f =>
-      f.copy(name = SchemaNames.physicalName(f))))
-    val inner = org.apache.spark.sql.graftbridge.ParquetScanBridge
-      .rowReaderFactory(spark, physTable, physRead)
-    new GraftReaderFactory(inner, physRead.json, required.json,
-      snapshot.schema.json, allowColumnar = snapshot.deleteFiles.isEmpty)
+    new GraftReaderFactory(
+      ParquetScanBridge.rowReaderFactory(spark, physTable, physRead),
+      physRead.json, required.json, snapshot.schema.json,
+      allowColumnar = deletesOf.isEmpty,
+      posReader = Option.when(refs.exists(_.isInstanceOf[TupleRef]))(
+        ParquetScanBridge.rowReaderFactory(spark,
+          PositionDeletes.tupleSchema, PositionDeletes.tupleSchema)),
+      eqReaders = eqCols.map { c =>
+        val ks = PositionDeletes.keySchema(snapshot.schema, c)
+        c -> ParquetScanBridge.rowReaderFactory(spark, ks, ks)
+      }.toMap)
   }
 
-  override def estimateStatistics() = new org.apache.spark.sql.connector.read.Statistics {
-    override def sizeInBytes() =
-      java.util.OptionalLong.of(math.max(prunedFiles.map(_.sizeBytes).sum, 1L))
-    override def numRows() =
-      java.util.OptionalLong.of(prunedFiles.map(_.rowCount).sum)
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new GraftMicroBatchStream(store, required, checkpointLocation,
+      streamLimits)
+
+  /** Snapshot-resident stats → the optimizer's broadcast decisions see real
+    * sizes without touching the FS; per-column NDV from the merged HLL
+    * sketches feeds CBO when present. Position deletes remove rows the
+    * file counts still include (clamped at 0: their tuples may name files
+    * outside the pruned set). Equality-delete tuples are NOT subtracted:
+    * each key kills 0..N rows, so a tuple count is not a row count — an
+    * overestimate is the safe direction for broadcast decisions. */
+  override def estimateStatistics(): Statistics = new Statistics {
+    private val rows = math.max(0L, prunedFiles.map(_.rowCount).sum -
+      snapshot.deleteFiles.filter(_.positional).map(_.rowCount).sum)
+    private val bytes = prunedFiles.map(_.sizeBytes).sum
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(bytes, 1L))
+    override def numRows(): OptionalLong = OptionalLong.of(rows)
+    override def columnStats() = NdvStats.columnStats(snapshot)
   }
 
   override def description(): String =
-    s"GraftBatchScan[v${snapshot.version}, files=${prunedFiles.size}/${snapshot.fileCount}]"
+    s"LakeScan[v${snapshot.version}, files=${prunedFiles.size}/${snapshot.fileCount}" +
+      (if (deletesOf.nonEmpty) s", with-deletes=${deletesOf.size}]" else "]")
+
+  /** The files this scan's snapshot holds, by path (by manifest chunk when
+    * sharded, so equality never loads a lazy list). */
+  private lazy val fileSet: Seq[String] =
+    if (snapshot.manifests.nonEmpty) snapshot.manifests.map(_.path)
+    else snapshot.files.map(_.path)
+
+  /** Value equality over everything that changes the output: table,
+    * branch, version, file set, projection, pushed filters and the
+    * runtime-filter attribute. Spark's exchange/subquery reuse and
+    * dynamic-pruning planning compare canonicalized plans, and a DSv2 scan
+    * WITHOUT equals makes every re-planned scan of the same table
+    * "different" — which silently disables broadcast reuse and downgrades
+    * every dynamic-pruning filter to `true` (the same reason Iceberg's
+    * SparkScan defines equality). `toBatch` is this scan, so
+    * BatchScanExec's compare of batches uses it too. Runtime-filter state
+    * is deliberately excluded: two scans planned alike are
+    * interchangeable, and BatchScanExec compares its own runtimeFilters.
+    * The BRANCH matters because branch chains share tableDir with
+    * independent version numbers; the file set because a LIMIT prefix and
+    * a live-row read pin subsets of one version. */
+  override def equals(other: Any): Boolean = other match {
+    case o: LakeScan =>
+      store.tableDir == o.store.tableDir &&
+        store.branch == o.store.branch &&
+        snapshot.version == o.snapshot.version &&
+        required == o.required &&
+        filters.toSeq == o.filters.toSeq &&
+        fileFilter == o.fileFilter &&
+        fileSet == o.fileSet
+    case _ => false
+  }
+  override def hashCode(): Int =
+    (store.tableDir, store.branch, snapshot.version, required,
+      filters.toSeq, fileFilter).hashCode()
 }
 
-/** One resolved equality-delete probe: tuple file + key columns (physical
-  * names, as stored in both the tuple file and the data files) + the
-  * CURRENT Spark types to convert both sides into (so files written before
-  * a type widening still compare in one domain). */
-final case class EqProbeSpec(path: String, cols: Seq[String], types: Seq[DataType])
+object LakeScan {
 
+  /** Rows of one whole lake file through Spark's parquet reader
+    * `factory`, in file order: vectorized decode where the schema allows,
+    * flattened to rows. */
+  private[lake] def fileRows(factory: PartitionReaderFactory, path: String,
+      size: Long): PartitionReader[InternalRow] = {
+    val part = ParquetScanBridge.wholeFilePartition(path, size)
+    if (factory.supportColumnarReads(part))
+      new ColumnarAsRowReader(factory.createColumnarReader(part))
+    else factory.createReader(part)
+  }
+
+  /** `f` over every row of one lake file (rows are views: copy to keep). */
+  private[lake] def foreachRow(factory: PartitionReaderFactory, path: String,
+      size: Long)(f: InternalRow => Unit): Unit = {
+    val r = fileRows(factory, path, size)
+    try while (r.next()) f(r.get())
+    finally r.close()
+  }
+}
+
+/** Reader factory of whole-file partitions (also the streaming source's).
+  *
+  * @param posReader  parquet reader for position tuple files
+  * @param eqReaders  parquet reader per equality key-column group, at the
+  *                   columns' current types */
 final class GraftReaderFactory(
     inner: PartitionReaderFactory,
-    physReadJson: String, requiredJson: String, tableSchemaJson: String,
-    allowColumnar: Boolean = false)
+    // vals, not plain parameters: a parameter read only by lazy-val
+    // initializers is nulled once they ran, and a factory that planned
+    // on the driver would ship without its schemas
+    val physReadJson: String, val requiredJson: String, val tableSchemaJson: String,
+    allowColumnar: Boolean,
+    posReader: Option[PartitionReaderFactory] = None,
+    eqReaders: Map[Seq[String], PartitionReaderFactory] = Map.empty)
   extends PartitionReaderFactory {
   // parsed once per (deserialized) factory instance, not once per file —
   // a rewrite over thousands of files calls createReader per partition
@@ -284,11 +451,10 @@ final class GraftReaderFactory(
   // files store PHYSICAL column names; the projection uses logical ones
   @transient private lazy val rename: Map[String, String] =
     SchemaNames.renameMap(tableSchema)
-  @transient private lazy val physTypes: Map[String, DataType] =
-    tableSchema.fields.map(f => SchemaNames.physicalName(f) -> f.dataType).toMap
-  // output ordinal -> inner-row ordinal; -1 = the synthesized `_file`
+  // output ordinal -> inner-row ordinal; -1 = `_file`, -2 = `_pos`
   @transient private lazy val outMap: Array[Int] = required.fields.map { f =>
-    if (f.name == "_file") -1
+    if (f.name == GraftTable.FileCol) -1
+    else if (f.name == GraftTable.PosCol) -2
     else physRead.fieldIndex(rename.getOrElse(f.name, f.name))
   }
 
@@ -296,7 +462,8 @@ final class GraftReaderFactory(
     * data column maps to its own ordinal and `_file` (if requested) is the
     * trailing field — then a batch needs no per-row projection, only a
     * constant `_file` vector appended. False as soon as the scan appended
-    * equality-delete key columns or a rename reordered anything. */
+    * equality-delete key columns, a rename reordered anything, or `_pos`
+    * is requested (a row-mode counter). */
   @transient private lazy val columnarAligned: Boolean = {
     val n = required.length
     val dataCols = outMap.zipWithIndex.forall { case (m, i) =>
@@ -305,80 +472,64 @@ final class GraftReaderFactory(
     dataCols && physRead.length == (if (outMap.contains(-1)) n - 1 else n)
   }
 
-  /** Legacy partitions may not carry the size; stat LOUDLY as a fallback
-    * — `java.io.File.length()` answers 0 for a missing or scheme-prefixed
-    * path, and a zero-length split silently reads no row groups, which on
-    * the COW rewrite path would drop every row of a live file in the
-    * replacing commit. Hadoop's stat throws on a missing file instead. */
-  private def fileSizeOf(p: GraftInputPartition): Long =
-    if (p.fileSize > 0) p.fileSize
-    else {
-      val hp = new HPath(p.filePath)
-      val len = hp.getFileSystem(LakeIOConf.conf).getFileStatus(hp).getLen
-      require(len > 0, s"data file ${p.filePath} is empty (0 bytes)")
-      len
-    }
+  private def part(p: GraftInputPartition): InputPartition =
+    ParquetScanBridge.wholeFilePartition(p.filePath, p.fileSize)
 
-  private def wholePart(p: GraftInputPartition): InputPartition =
-    org.apache.spark.sql.graftbridge.ParquetScanBridge
-      .wholeFilePartition(p.filePath, fileSizeOf(p))
-
-  /** Columnar fast path — the common COW case (SNAPSHOT with no pending
-    * deletes, no renames): batches flow straight from Spark's vectorized
+  /** Columnar fast path: batches flow straight from Spark's vectorized
     * parquet reader to Spark's codegen'd ColumnarToRow, zero per-row work
-    * in this layer. BatchScanExec requires a UNIFORM answer across
-    * partitions, so the scan decides at snapshot level (`allowColumnar` =
-    * table has zero delete files): one delete-bearing file puts the whole
-    * scan on the row path — exactly when per-row work is needed anyway. */
+    * in this layer. The scan allows it only when no delete applies to any
+    * of its files, so every partition answers alike. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     partition match {
       case p: GraftInputPartition =>
-        allowColumnar && columnarAligned &&
-          p.deletedPositions.isEmpty && p.posDeleteFiles.isEmpty &&
-          p.eqDeletes.isEmpty && p.dvSlices.isEmpty &&
-          inner.supportColumnarReads(wholePart(p))
+        allowColumnar && columnarAligned && inner.supportColumnarReads(part(p))
       case _ => false
     }
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    val innerReader = inner.createColumnarReader(wholePart(p))
+    val innerReader = inner.createColumnarReader(part(p))
     if (!outMap.contains(-1)) innerReader
     else new FileColumnAppendingReader(innerReader, p.filePath)
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    val eqSpecs = p.eqDeletes.map { r =>
-      val types = r.cols.map(c => physTypes.getOrElse(c,
-        throw new IllegalStateException(
-          s"equality-delete column '$c' no longer exists in the table " +
-            "schema; run rewrite_deletes before dropping delete-key columns")))
-      EqProbeSpec(r.path, r.cols, types)
+    val eqProbes = p.deletes.collect { case e: EqRef =>
+      val types = PositionDeletes.keySchema(tableSchema, e.cols).map(_.dataType)
+      (e.cols.map(physRead.fieldIndex).toArray, types.toArray,
+        EqDeleteTupleCache.get(e.path, e.size, types, eqReaders(e.cols)))
+    }.toArray
+    new GraftPartitionReader(LakeScan.fileRows(inner, p.filePath, p.fileSize),
+      p.filePath, physRead.length, required, outMap, deletedPositions(p),
+      eqProbes)
+  }
+
+  /** This file's deleted positions, sorted: the tuples naming it in the
+    * covering tuple files ∪ its vector slices. No position ever reaches
+    * the driver. */
+  private def deletedPositions(p: GraftInputPartition): Array[Long] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+    p.deletes.foreach {
+      case t: TupleRef =>
+        buf ++= TupleIndexCache.positions(t, p.filePath, posReader.get)
+      case DvSlice(blob, offset, length) =>
+        buf ++= DeletionVectors.readPositions(blob, offset, length)
+      case _: EqRef =>
     }
-    val filePart = org.apache.spark.sql.graftbridge.ParquetScanBridge
-      .wholeFilePartition(p.filePath, fileSizeOf(p))
-    // VECTORIZED decode whenever the schema supports it: the columnar
-    // reader is the fast parquet path (the row-mode factory is plain
-    // parquet-mr); batches are flattened back to rows here because the
-    // delete-apply below is inherently per-row
-    val innerReader =
-      if (inner.supportColumnarReads(filePart))
-        new ColumnarAsRowReader(inner.createColumnarReader(filePart))
-      else inner.createReader(filePart)
-    new GraftPartitionReader(innerReader, p.filePath, physRead, required,
-      outMap, p.deletedPositions, p.posDeleteFiles, eqSpecs, p.dvSlices)
+    val all = buf.distinct.toArray
+    java.util.Arrays.sort(all)
+    all
   }
 }
 
 /** Appends the constant `_file` column to every batch (vectorized
   * equivalent of the row path's Literal splice). */
 private[lake] final class FileColumnAppendingReader(
-    inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch],
+    inner: PartitionReader[ColumnarBatch],
     filePath: String)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+  extends PartitionReader[ColumnarBatch] {
   private val fileVec = {
     val v = new org.apache.spark.sql.execution.vectorized.ConstantColumnVector(
       1, StringType)
@@ -397,11 +548,10 @@ private[lake] final class FileColumnAppendingReader(
 
 /** Adapts a columnar (vectorized) parquet reader to the row interface:
   * iterates each ColumnarBatch's rows in file order. The returned rows
-  * are views over reused vector memory — [[GraftPartitionReader]] is the
-  * only consumer and projects them through an UnsafeProjection before
-  * they escape. */
+  * are views over reused vector memory — consumers project or copy them
+  * before they escape. */
 private[lake] final class ColumnarAsRowReader(
-    inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch])
+    inner: PartitionReader[ColumnarBatch])
   extends PartitionReader[InternalRow] {
   private var it: java.util.Iterator[InternalRow] =
     java.util.Collections.emptyIterator()
@@ -425,107 +575,48 @@ private[lake] final class ColumnarAsRowReader(
   * wrapper contributes exactly the lake semantics Spark's reader cannot
   * know: the position-delete skip cursor (absolute row index within the
   * file), the equality-delete key probe, the physical→logical column
-  * mapping, and the synthesized `_file` provenance column. */
+  * mapping, and the synthesized `_file` / `_pos` columns.
+  *
+  * @param deleted  sorted deleted row positions of this file
+  * @param eqProbes per equality delete: key ordinals in the inner row
+  *                 (present by construction — the scan appends missing
+  *                 key columns), key types, and the cached tuple set */
 final class GraftPartitionReader(
     inner: PartitionReader[InternalRow],
     filePath: String,
-    physRead: StructType,
+    innerWidth: Int,
     required: StructType,
     outMap: Array[Int],
-    deletedPositions: Array[Long] = Array.empty,
-    posDeleteFiles: Seq[String] = Seq.empty,
-    eqSpecs: Seq[EqProbeSpec] = Seq.empty,
-    dvSlices: Seq[(String, Long, Int)] = Seq.empty)
+    deleted: Array[Long],
+    eqProbes: Array[(Array[Int], Array[DataType], java.util.HashSet[Seq[Any]])])
   extends PartitionReader[InternalRow] {
 
   private var current: InternalRow = _
+  private val pos = new SpecificInternalRow(Seq(LongType))
+  private val joined = new JoinedRow
 
-  /** `_file` metadata column: provenance of every row, served from the
-    * reader itself — also the join key of runtime group filtering. */
-  private val fileName = UTF8String.fromString(filePath)
-
-  /** Output projection: maps inner-row ordinals to `required` order and
-    * splices the `_file` constant. An UnsafeProjection (codegen) gives
-    * downstream operators a row whose `copy()` is a DEEP copy — essential
-    * because the inner row may be a ColumnarBatchRow view over reused
-    * vector memory. */
-  private val project: org.apache.spark.sql.catalyst.expressions.UnsafeProjection = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
-    val exprs = required.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-      if (outMap(i) < 0) Literal(fileName, StringType)
-      else BoundReference(outMap(i), f.dataType, nullable = true)
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(exprs)
-  }
-
-  /** Large-backlog path: load THIS file's deleted positions from the
-    * covering delete files, executor-side. The exact-path predicate rides
-    * into parquet-mr's row-group/page pruning — tuple files are sorted by
-    * the canonical `data/<name>` path, so only the few pages naming this
-    * file are read, and the driver never holds a tuple. */
-  private def loadOwnPositions(): Array[Long] = {
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.io.api.Binary
-    val mine = "data/" + PositionDeletes.fileName(filePath)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    posDeleteFiles.foreach { p =>
-      val r = ParquetReader.builder(new GroupReadSupport(), new HPath(p))
-        .withConf(LakeIOConf.conf)
-        .withFilter(FilterCompat.get(FilterApi.eq(
-          FilterApi.binaryColumn(PositionDeletes.FilePathCol),
-          Binary.fromString(mine))))
-        .build()
-      try {
-        var g = r.read()
-        while (g != null) {
-          buf += g.getLong(PositionDeletes.PosCol, 0)
-          g = r.read()
-        }
-      } finally r.close()
-    }
-    val arr = buf.distinct.toArray
-    java.util.Arrays.sort(arr)
-    arr
-  }
+  /** Output projection over (inner row, `_pos`): maps inner-row ordinals
+    * to `required` order and splices the `_file` constant. An
+    * UnsafeProjection gives downstream operators a row whose `copy()` is a
+    * DEEP copy — essential because the inner row may be a view over
+    * reused vector memory. */
+  private val project: UnsafeProjection =
+    UnsafeProjection.create(required.fields.toIndexedSeq.zipWithIndex.map {
+      case (_, i) if outMap(i) == -1 =>
+        Literal(UTF8String.fromString(filePath), StringType)
+      case (_, i) if outMap(i) == -2 => BoundReference(innerWidth, LongType, nullable = false)
+      case (f, i) => BoundReference(outMap(i), f.dataType, nullable = true)
+    })
 
   // merge-on-read skip cursor: rows arrive in file order, so one pointer
-  // into the SORTED deleted-position array replaces any per-row lookup.
-  // Sources merge: driver-provided array (small backlog) ∪ executor-side
-  // tuple-file loads (large backlog) ∪ deletion-vector slices (exact
-  // ranged reads of this file's bitmap).
-  private val deleted: Array[Long] = {
-    val fromFiles: Array[Long] =
-      if (posDeleteFiles.isEmpty) Array.empty else loadOwnPositions()
-    val fromDv: Array[Long] = dvSlices.iterator.flatMap {
-      case (blob, off, len) => DeletionVectors.readPositions(blob, off, len)
-    }.toArray
-    if (fromFiles.isEmpty && fromDv.isEmpty) deletedPositions
-    else {
-      val all = (deletedPositions ++ fromFiles ++ fromDv).distinct
-      java.util.Arrays.sort(all)
-      all
-    }
-  }
+  // into the SORTED deleted-position array replaces any per-row lookup
   private var rowIdx: Long = -1L
   private var delIdx: Int = 0
 
-  /** Equality-delete probes against the inner row: key ordinals in the
-    * `physRead` schema (present by construction — the scan appends any
-    * missing key columns) + target types + the executor-cached tuple set.
-    * A file predating a key column reads NULL there, which never equals
-    * anything in SQL, so its rows never match — same semantics the old
-    * per-file-schema resolution had. */
-  private lazy val eqProbes: Array[(Array[Int], Array[DataType], java.util.HashSet[Seq[Any]])] =
-    eqSpecs.iterator.map { s =>
-      (s.cols.map(physRead.fieldIndex).toArray, s.types.toArray,
-        EqDeleteTupleCache.get(s.path, s.cols, s.types))
-    }.toArray
-
   /** True iff the current row's key matches a live equality-delete tuple
-    * (NULL key components never match, per SQL equality). The probed
-    * values come from `InternalRow.get`, which lands in the same internal
-    * value domain `GroupReadValues.convert` builds the cached tuples in. */
+    * (NULL key components never match, per SQL equality). Probe values
+    * come from `InternalRow.get` of the same Spark reader that built the
+    * cached tuples, at the same types. */
   private def eqMatched(): Boolean = {
     var gi = 0
     while (gi < eqProbes.length) {
@@ -535,7 +626,7 @@ final class GraftPartitionReader(
       var ok = true
       while (ok && i < idxs.length) {
         if (current.isNullAt(idxs(i))) ok = false
-        else key(i) = GroupReadValues.normKey(current.get(idxs(i), types(i)))
+        else key(i) = EqDeleteTupleCache.normKey(current.get(idxs(i), types(i)))
         i += 1
       }
       if (ok && set.contains(
@@ -552,163 +643,103 @@ final class GraftPartitionReader(
       rowIdx += 1
       while (delIdx < deleted.length && deleted(delIdx) < rowIdx) delIdx += 1
       val posDeleted = delIdx < deleted.length && deleted(delIdx) == rowIdx
-      if (!posDeleted && (eqSpecs.isEmpty || !eqMatched())) return true
+      if (!posDeleted && (eqProbes.isEmpty || !eqMatched())) return true
       // else: row is deleted — skip it
     }
     false
   }
 
-  override def get(): InternalRow = project(current)
+  override def get(): InternalRow = {
+    pos.setLong(0, rowIdx)
+    project(joined(current, pos))
+  }
 
   override def close(): Unit = inner.close()
 }
 
-/** Parquet-mr `Group` → Spark internal value conversion, shared by the COW
-  * data reader and the equality-delete tuple loader (both must land in the
-  * same value domain for key probing to be exact). */
-private[lake] object GroupReadValues {
+/** Process-local index of position tuple files: data-file name → its
+  * deleted positions, built by one read of the whole tuple file on first
+  * use, so a tuple file costs one read per JVM however many data files
+  * and scans it covers. Tuple files are immutable and UUID-named, so an
+  * entry never goes stale; an access-ordered LRU over the cached tuple
+  * count bounds memory in long-lived executors. A file of more than
+  * [[MaxFileTuples]] tuples is not indexed: each reader loads its own
+  * tuples with an exact `file_path` filter (parquet-mr row-group and page
+  * pruning over the sorted tuples), so memory stays O(own rows) however
+  * large the backlog. */
+private[graft] object TupleIndexCache {
+  private[graft] val MaxFileTuples = 256L * 1024
+  private val MaxCachedTuples = 4L * 1024 * 1024
+  private val cache = new java.util.LinkedHashMap[String, (Map[String, Array[Long]], Long)](
+    16, 0.75f, true)
+  private var cachedTuples = 0L
 
-  /** Normalize a converted value for use inside a hash key: byte arrays
-    * use reference equality, so wrap them; -0.0 folds to 0.0 so the probe
-    * matches Spark's join semantics (NormalizeFloatingNumbers treats them
-    * equal, boxed equality does not — a -0.0-keyed row must still die to
-    * a 0.0 delete tuple exactly like on the anti-join read path); NaN is
-    * already self-equal for boxed Double/Float. Everything else the
-    * internal representations (UTF8String, boxed primitives, Decimal)
-    * define value equality for. */
-  def normKey(v: Any): Any = v match {
-    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-    case d: java.lang.Double if d.doubleValue() == 0.0 => java.lang.Double.valueOf(0.0)
-    case f: java.lang.Float if f.floatValue() == 0.0f => java.lang.Float.valueOf(0.0f)
-    case other => other
+  /** The positions tuple file `t` deletes from the data file at
+    * `dataPath`, `reader` being a Spark parquet reader of tuple files. */
+  def positions(t: TupleRef, dataPath: String,
+      reader: PartitionReaderFactory): Array[Long] = {
+    val name = "data/" + PositionDeletes.fileName(dataPath)
+    if (t.rows > MaxFileTuples) filtered(t.path, name)
+    else index(t, reader).getOrElse(name, Array.emptyLongArray)
   }
 
-  /** Value of field `idx`, repetition `rep`, inside group `g`, as the Spark
-    * internal representation of `dt`. Recurses through LIST/MAP/group
-    * nesting; index-addressed, so the standard `list`/`element` and
-    * `key_value` wrapper names are irrelevant. */
-  def convert(g: Group, idx: Int, rep: Int, dt: DataType): Any = {
-    val ptype = g.getType.getType(idx)
-    dt match {
-      case IntegerType | ShortType | ByteType => g.getInteger(idx, rep)
-      case LongType =>
-        // files written before an int->bigint widening hold INT32
-        ptype.asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveType.PrimitiveTypeName.INT32 =>
-            g.getInteger(idx, rep).toLong
-          case _ => g.getLong(idx, rep)
-        }
-      case DoubleType =>
-        // files written before a float->double widening hold FLOAT
-        ptype.asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveType.PrimitiveTypeName.FLOAT =>
-            g.getFloat(idx, rep).toDouble
-          case _ => g.getDouble(idx, rep)
-        }
-      case FloatType => g.getFloat(idx, rep)
-      case BooleanType => g.getBoolean(idx, rep)
-      case StringType =>
-        UTF8String.fromBytes(g.getBinary(idx, rep).getBytes)
-      case BinaryType => g.getBinary(idx, rep).getBytes
-      case DateType => g.getInteger(idx, rep)
-      case TimestampType | TimestampNTZType =>
-        ptype.asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveType.PrimitiveTypeName.INT96 =>
-            int96ToMicros(g.getInt96(idx, rep).getBytes)
-          case _ =>
-            val v = g.getLong(idx, rep)
-            ptype.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                  if t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                  if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
-              case _ => v // micros
-            }
-        }
-      case d: DecimalType =>
-        ptype.asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveType.PrimitiveTypeName.INT32 =>
-            Decimal(g.getInteger(idx, rep).toLong, d.precision, d.scale)
-          case PrimitiveType.PrimitiveTypeName.INT64 =>
-            Decimal(g.getLong(idx, rep), d.precision, d.scale)
-          case _ =>
-            val bytes = g.getBinary(idx, rep).getBytes
-            Decimal(BigDecimal(BigInt(bytes), d.scale), d.precision, d.scale)
-        }
-      case ArrayType(et, _) =>
-        // 3-level LIST: this group holds one repeated wrapper (field 0),
-        // each wrapper holds one optional element (field 0).
-        val listG = g.getGroup(idx, rep)
-        val n = listG.getFieldRepetitionCount(0)
-        val out = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val entry = listG.getGroup(0, k)
-          out(k) =
-            if (entry.getFieldRepetitionCount(0) == 0) null
-            else convert(entry, 0, 0, et)
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      case st: StructType =>
-        val sg = g.getGroup(idx, rep)
-        val gt = sg.getType
-        val out = new GenericInternalRow(st.length)
-        var k = 0
-        while (k < st.length) {
-          val fn = st.fields(k).name
-          if (!gt.containsField(fn)) out.update(k, null)
-          else {
-            val fi = gt.getFieldIndex(fn)
-            if (sg.getFieldRepetitionCount(fi) == 0) out.update(k, null)
-            else out.update(k, convert(sg, fi, 0, st.fields(k).dataType))
-          }
-          k += 1
-        }
-        out
-      case MapType(kt, vt, _) =>
-        // MAP: repeated key_value wrapper (field 0) with required key
-        // (field 0) and optional value (field 1).
-        val mapG = g.getGroup(idx, rep)
-        val n = mapG.getFieldRepetitionCount(0)
-        val keys = new Array[Any](n)
-        val vals = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val kv = mapG.getGroup(0, k)
-          keys(k) = convert(kv, 0, 0, kt)
-          vals(k) =
-            if (kv.getFieldRepetitionCount(1) == 0) null
-            else convert(kv, 1, 0, vt)
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-      case other =>
-        throw new UnsupportedOperationException(
-          s"row-level operations on column type $other are not supported yet")
+  private def index(t: TupleRef,
+      reader: PartitionReaderFactory): Map[String, Array[Long]] = {
+    val hit = cache.synchronized(cache.get(t.path))
+    if (hit != null) return hit._1
+    // racing loaders are idempotent — last put wins, both correct
+    val byName = scala.collection.mutable.HashMap.empty[String,
+      scala.collection.mutable.ArrayBuilder.ofLong]
+    var last: UTF8String = null
+    var cur: scala.collection.mutable.ArrayBuilder.ofLong = null
+    LakeScan.foreachRow(reader, t.path, t.size) { row =>
+      // tuples are sorted by file_path: look a name up once per run
+      val fp = row.getUTF8String(0)
+      if (last == null || fp != last) {
+        last = fp.clone()
+        cur = byName.getOrElseUpdate(last.toString,
+          new scala.collection.mutable.ArrayBuilder.ofLong)
+      }
+      cur += row.getLong(1)
     }
+    val idx = byName.view.mapValues(_.result()).toMap
+    cache.synchronized {
+      val prev = cache.put(t.path, (idx, t.rows))
+      if (prev != null) cachedTuples -= prev._2
+      cachedTuples += t.rows
+      val it = cache.values().iterator()
+      while (cachedTuples > MaxCachedTuples && cache.size > 1) {
+        cachedTuples -= it.next()._2
+        it.remove()
+      }
+    }
+    idx
   }
 
-  /** INT96 legacy timestamp: 8 bytes nanos-of-day (LE) + 4 bytes julian
-    * day (LE) → micros since epoch. */
-  private def int96ToMicros(b: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    val epochDay = julianDay - 2440588L
-    epochDay * 86400L * 1000000L + nanosOfDay / 1000L
+  private def filtered(path: String, name: String): Array[Long] = {
+    val buf = scala.collection.mutable.ArrayBuilder.make[Long]
+    val r = ParquetReader.builder(new GroupReadSupport(), new HPath(path))
+      .withConf(LakeIOConf.conf)
+      .withFilter(FilterCompat.get(FilterApi.eq(
+        FilterApi.binaryColumn(PositionDeletes.FilePathCol), Binary.fromString(name))))
+      .build()
+    try {
+      var g = r.read()
+      while (g != null) {
+        buf += g.getLong(PositionDeletes.PosCol, 0)
+        g = r.read()
+      }
+    } finally r.close()
+    buf.result()
   }
 }
 
-/** Executor-local cache of equality-delete tuple sets. Delete files are
+/** Process-local cache of equality-delete tuple sets, filled on the driver
+  * (planning, [[Conflicts]]) and on executors (readers). Delete files are
   * immutable and UUID-named, so an entry never goes stale; the cap only
-  * bounds memory in long-lived executors. One load per executor instead of
-  * one per task — O(executors × tuple bytes) IO, not O(tasks × …).
-  * Access-ordered LRU (like BloomProbe): more live tuple files than the
-  * cap must evict the coldest entries, not clear the world while
-  * concurrent tasks are mid-probe. */
+  * bounds memory in long-lived executors. Access-ordered LRU (like
+  * BloomProbe): more live tuple files than the cap must evict the coldest
+  * entries, not clear the world while concurrent tasks are mid-probe. */
 private[lake] object EqDeleteTupleCache {
   private val MaxEntries = 64
   private val cache = java.util.Collections.synchronizedMap(
@@ -719,48 +750,53 @@ private[lake] object EqDeleteTupleCache {
           : Boolean = size() > MaxEntries
     })
 
-  def get(path: String, cols: Seq[String],
-      types: Seq[DataType]): java.util.HashSet[Seq[Any]] = {
+  /** Key tuples of the equality delete file at `path`, read by `reader`
+    * (a Spark parquet reader over the key columns at `types`; built only
+    * on a miss). */
+  def get(path: String, size: Long, types: Seq[DataType],
+      reader: => PartitionReaderFactory): java.util.HashSet[Seq[Any]] = {
     // key includes the types: the same tuple file probed after a type
     // widening must convert into the NEW domain, not hit the old entry
     val key = path + "|" + types.map(_.catalogString).mkString(",")
     val hit = cache.get(key)
     if (hit != null) return hit
     // racing loaders are idempotent — last put wins, both correct
-    val loaded = load(path, cols, types)
-    cache.put(key, loaded)
-    loaded
+    val set = new java.util.HashSet[Seq[Any]]()
+    LakeScan.foreachRow(reader, path, size) { view =>
+      val row = view.copy() // strings of a batch view point into reused memory
+      val tuple = new Array[Any](types.length)
+      var i = 0
+      var ok = true
+      while (ok && i < types.length) {
+        // a NULL key component can never equal anything (SQL) — the tuple
+        // is dead weight, skip it
+        if (row.isNullAt(i)) ok = false
+        else tuple(i) = normKey(row.get(i, types(i)))
+        i += 1
+      }
+      if (ok) set.add(scala.collection.immutable.ArraySeq.unsafeWrapArray(tuple))
+    }
+    cache.put(key, set)
+    set
   }
 
-  private def load(path: String, cols: Seq[String],
-      types: Seq[DataType]): java.util.HashSet[Seq[Any]] = {
-    val set = new java.util.HashSet[Seq[Any]]()
-    val reader = ParquetReader.builder(new GroupReadSupport(), new HPath(path))
-      .withConf(LakeIOConf.conf)
-      .build()
-    try {
-      var idxs: Array[Int] = null
-      var g = reader.read()
-      while (g != null) {
-        if (idxs == null) {
-          val schema = g.getType.asInstanceOf[MessageType]
-          idxs = cols.map(schema.getFieldIndex).toArray
-        }
-        val key = new Array[Any](idxs.length)
-        var i = 0
-        var ok = true
-        while (ok && i < idxs.length) {
-          // a NULL key component can never equal anything (SQL) — the
-          // tuple is dead weight, skip it
-          if (g.getFieldRepetitionCount(idxs(i)) == 0) ok = false
-          else key(i) = GroupReadValues.normKey(
-            GroupReadValues.convert(g, idxs(i), 0, types(i)))
-          i += 1
-        }
-        if (ok) set.add(scala.collection.immutable.ArraySeq.unsafeWrapArray(key))
-        g = reader.read()
-      }
-    } finally reader.close()
-    set
+  /** Every NaN key value: a key column has one type, so no other value
+    * of it can collide with the marker. */
+  private case object NaNKey
+
+  /** Normalize a value for use inside a hash key, so the probe matches
+    * Spark's join semantics (NormalizeFloatingNumbers): byte arrays use
+    * reference equality, so wrap them; -0.0 folds to 0.0; NaN becomes
+    * [[NaNKey]], because tuple equality compares boxed numbers with `==`,
+    * under which NaN equals nothing. Everything else the internal
+    * representations (UTF8String, boxed primitives, Decimal) define value
+    * equality for. */
+  def normKey(v: Any): Any = v match {
+    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+    case d: java.lang.Double if d.isNaN => NaNKey
+    case f: java.lang.Float if f.isNaN => NaNKey
+    case d: java.lang.Double if d.doubleValue() == 0.0 => java.lang.Double.valueOf(0.0)
+    case f: java.lang.Float if f.floatValue() == 0.0f => java.lang.Float.valueOf(0.0f)
+    case other => other
   }
 }

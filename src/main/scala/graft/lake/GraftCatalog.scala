@@ -465,10 +465,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               // FALSE violates (NULL passes, per SQL CHECK semantics)
               val spark = org.apache.spark.sql.SparkSession.active
               if (prev.files.nonEmpty) {
-                val bad = PositionDeletes.applySnapshotDeletes(spark, st,
-                  SchemaNames.readLogicalWithProvenance(spark, st, prev.schema,
-                    prev.files),
-                  prev)
+                val bad = GraftTable.liveRows(spark, st, prev, prev.files)
                   .filter(org.apache.spark.sql.functions.not(
                     org.apache.spark.sql.functions.coalesce(
                       org.apache.spark.sql.functions.expr(ch.predicateSql()),

@@ -35,8 +35,8 @@ object StreamReadLimits {
   *
   * Scale notes: offsets are plain version numbers (restart-safe via the
   * checkpoint), partition planning is metadata-only (snapshot diff), and
-  * each added file becomes one InputPartition read by the native
-  * parquet-mr reader — no listing of the data directory, ever.
+  * each added file becomes one InputPartition read by Spark's parquet
+  * reader — no listing of the data directory, ever.
   */
 final case class GraftOffset(version: Long) extends Offset {
   override def json(): String = version.toString
@@ -204,7 +204,7 @@ final class GraftMicroBatchStream(
       } else Seq.empty // rewrite commits re-materialize rows: skip
     }.map(f =>
       GraftInputPartition(store.tableDir.resolve(f.path).toString,
-        fileSize = f.sizeBytes): InputPartition)
+        f.sizeBytes): InputPartition)
       .toArray
   }
 

@@ -1,29 +1,26 @@
 package graft.lake
 
-import java.util.{Collections, OptionalLong}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.functions.{coalesce, col, lit, not => fnot}
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.functions.{coalesce, col, concat, element_at, lit, split, not => fnot}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A snapshot-versioned, hidden-partitioned lakehouse table on Spark's
   * DSv2 connector surface (SURVEY.md §2 S1-S11, D6-D13, §3).
   *
-  * Read path: DSv2 `ScanBuilder` performs filter+column pushdown and
-  * snapshot-stats file pruning, then delegates the actual parquet IO to
-  * Spark's built-in vectorized parquet source via the `V1Scan` bridge —
-  * the scan executes with the same columnar reader, row-group pruning and
-  * codegen as a plain `spark.read.parquet`, but only over the files this
-  * snapshot + pruning selected. Schema evolution null-fill falls out of
-  * reading with the snapshot's explicit schema.
+  * Read path: DSv2 `ScanBuilder` performs filter+column pushdown, then
+  * [[LakeScan]] prunes files by snapshot stats and reads them with
+  * Spark's parquet reader — packed and vectorized when no delete applies
+  * to a planned file, whole files with deletes applied inside the reader
+  * otherwise. Schema evolution null-fill falls out of reading with the
+  * snapshot's explicit schema.
   *
   * Write path: `V1Write` → staged parquet + stats + atomic snapshot commit
   * (GraftWriter). DELETE is copy-on-write over only the files whose stats
@@ -31,24 +28,34 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * @param pinned for time travel: the snapshot this handle is fixed at
   *               (None = always read the current head at scan time)
+  * @param fileSubset `pinned` holds only some of its version's files
+  *               ([[GraftTable.liveRows]]): nothing is answered from
+  *               whole-table metadata
   */
 class GraftTable(
     tableName: String,
     val store: SnapshotStore,
-    pinned: Option[Snapshot] = None)
+    pinned: Option[Snapshot] = None,
+    fileSubset: Boolean = false)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
   with SupportsRowLevelOperations with SupportsMetadataColumns {
 
-  /** Iceberg-style `_file` metadata column: `SELECT _file, t.* FROM t`
-    * exposes data-file provenance (debugging, targeted compaction). */
+  /** Iceberg-style `_file` / `_pos` metadata columns: `SELECT _file, t.*
+    * FROM t` exposes data-file provenance (debugging, targeted
+    * compaction); `_pos` is the row's 0-based position in that file, the
+    * identity a merge-on-read DELETE records. */
   override def metadataColumns(): Array[MetadataColumn] = Array(
-    new MetadataColumn {
-      override def name(): String = "_file"
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType
+    GraftTable.FileCol -> org.apache.spark.sql.types.StringType,
+    GraftTable.PosCol -> org.apache.spark.sql.types.LongType).map {
+    case (n, t) => new MetadataColumn {
+      override def name(): String = n
+      override def dataType(): org.apache.spark.sql.types.DataType = t
       override def isNullable: Boolean = false
-      override def comment(): String = "path of the data file the row lives in"
-    })
+      override def comment(): String =
+        if (n == GraftTable.FileCol) "path of the data file the row lives in"
+        else "0-based position of the row within its data file"
+    }
+  }
 
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
@@ -98,7 +105,8 @@ class GraftTable(
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(snapshot, store, StreamReadLimits.fromOptions(options))
+    new GraftScanBuilder(snapshot, store, StreamReadLimits.fromOptions(options),
+      fileSubset)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(store)
@@ -148,22 +156,19 @@ class GraftTable(
       val newDeletes: Seq[DeleteFile] =
         if (touched.isEmpty) Seq.empty
         else {
-          val data = SchemaNames.readLogicalWithProvenance(spark, store, s.schema, touched)
-          // apply EXISTING deletes first so re-deleting an already-deleted
-          // row never records a duplicate tuple (keeps totalRows exact)
-          val live = PositionDeletes.applySnapshotDeletes(spark, store, data, s)
-          // MOR records rows where cond IS TRUE (the complement of COW's
-          // keep-set): NULL-evaluating rows are not deleted.
-          val matched = live.filter(coalesce(cond, lit(false)))
-            .select(col(PositionDeletes.NameCol), col(PositionDeletes.RowPosCol))
-          val nameToPath = spark.createDataFrame(
-            s.files.map(f => (PositionDeletes.fileName(f.path), f.path)))
-            .toDF(PositionDeletes.NameCol, PositionDeletes.FilePathCol)
-          val tuples = matched
-            .join(org.apache.spark.sql.functions.broadcast(nameToPath),
-              PositionDeletes.NameCol)
-            .select(col(PositionDeletes.FilePathCol),
-              col(PositionDeletes.RowPosCol).as(PositionDeletes.PosCol))
+          // only LIVE rows match, so re-deleting an already-deleted row
+          // never records a duplicate tuple (keeps totalRows exact). MOR
+          // records rows where cond IS TRUE (the complement of COW's
+          // keep-set): NULL-evaluating rows are not deleted. A tuple names
+          // its file by the canonical relative `data/<name>` path.
+          val tuples = GraftTable.liveRows(spark, store, s, touched,
+              provenance = true)
+            .filter(coalesce(cond, lit(false)))
+            .select(
+              concat(lit("data/"),
+                element_at(split(col(GraftTable.FileCol), "/"), -1))
+                .as(PositionDeletes.FilePathCol),
+              col(GraftTable.PosCol).as(PositionDeletes.PosCol))
           PositionDeletes.writeDeleteFiles(spark, store, tuples)
         }
       // the tuples name rows of `touched`: those files must stay live,
@@ -189,10 +194,8 @@ class GraftTable(
         // evaluates NULL (e.g. `c = 5` on a NULL c) must be KEPT. Pending
         // MOR deletes on the touched files are folded into the rewrite
         // (the kept rows are the LIVE complement of the condition).
-        val kept = PositionDeletes.applySnapshotDeletes(spark, store,
-            SchemaNames.readLogicalWithProvenance(spark, store, s.schema, touched), s)
+        val kept = GraftTable.liveRows(spark, store, s, touched)
           .filter(fnot(coalesce(cond, lit(false))))
-          .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
         GraftWriter.writeFiles(spark, store, s, kept)
       }
     // drop tuples that referenced the rewritten files (folded in above)
@@ -258,12 +261,45 @@ class GraftTable(
   override def toString: String = s"GraftTable($tableName)"
 }
 
+object GraftTable {
+
+  /** Metadata columns a scan synthesizes per row. */
+  val FileCol = "_file"
+  val PosCol = "_pos"
+  val Synthetic: Set[String] = Set(FileCol, PosCol)
+
+  /** LIVE rows of `files` (taken from `snap`) under `snap`'s deletes: a
+    * DataFrame over the one table scan ([[LakeScan]]) on `snap` pinned to
+    * that file subset — the one way engine code (row-level rewrites,
+    * maintenance, constraint checks, incremental views, streaming dedup,
+    * CDC) reads which rows are live. `schema` overrides the read schema
+    * (CDC reads every version under the range's end schema);
+    * `provenance` adds `_file` (absolute data-file path) and `_pos` (the
+    * row's position in it). */
+  def liveRows(spark: SparkSession, store: SnapshotStore, snap: Snapshot,
+      files: Seq[DataFile], schema: StructType = null,
+      provenance: Boolean = false): DataFrame = {
+    // manifests cleared: the refs describe the FULL list (Snapshot
+    // invariant), and every refs-aware consumer must see only the subset
+    val pinned = snap.copy(files = files, manifests = Seq.empty,
+      schemaJson = Option(schema).fold(snap.schemaJson)(_.json))
+    org.apache.spark.sql.graftbridge.RddFrameBridge.tableFrame(spark,
+      new GraftTable(store.tableDir.toString, store, Some(pinned),
+        fileSubset = true),
+      withMetadata = provenance)
+  }
+}
+
 /** DSv2 pushdown: collects filters (for file pruning + re-push into the
-  * delegated parquet read) and the required column subset. We report no
-  * filters as fully pushed, so Spark keeps the Filter node — pruning stays
-  * a pure optimization and correctness never depends on stats. */
+  * parquet read) and the required column subset. Only exact identity
+  * filters are reported as fully pushed, so Spark keeps the Filter node
+  * for the rest — pruning stays a pure optimization there. With
+  * `fileSubset` (a snapshot pinned to some of its files) LIMIT and
+  * aggregates are never answered from metadata: file row counts and
+  * delete counts describe the whole version. */
 class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
-    streamLimits: StreamReadLimits = StreamReadLimits())
+    streamLimits: StreamReadLimits = StreamReadLimits(),
+    fileSubset: Boolean = false)
   extends ScanBuilder with SupportsPushDownFilters
   with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -289,7 +325,7 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
     // all rows of every exactly-selected file match, so a row-count
     // prefix of the MATCHING files covers the limit
     val exactOnly = exactIdx.size == filters.length
-    if (exactOnly && snapshot.deleteFiles.isEmpty && l >= 0) {
+    if (exactOnly && snapshot.deleteFiles.isEmpty && l >= 0 && !fileSubset) {
       limit = Some(l)
       true
     } else false
@@ -361,6 +397,7 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
       : Option[(StructType, Array[Array[Any]])] = {
     import org.apache.spark.sql.connector.expressions.aggregate._
     import org.apache.spark.sql.types._
+    if (fileSubset) return None
     val s = snapshot
     val hasEq = s.deleteFiles.exists(_.kind == "equality")
     val hasAny = s.deleteFiles.nonEmpty
@@ -594,19 +631,8 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
           manifests = Seq.empty)
       case _ => snapshot
     }
-    // Vectorized DSv2 path by default; the V1 bridge remains for the
-    // `_file` metadata column (served via input_file_name), for pending
-    // merge-on-read deletes (the anti-join composes at the DataFrame
-    // level), and as an escape hatch (spark.graft.vectorizedReader=false).
-    val wantsFile = required.fieldNames.contains("_file")
-    val vectorized = SparkSession.active.conf
-      .getOption("spark.graft.vectorizedReader").forall(_.toBoolean)
-    if (vectorized && !wantsFile && snapshot.deleteFiles.isEmpty)
-      new GraftVectorScan(snapshot0, store, snapshot0.schema, required,
-        filters, streamLimits)
-    else
-      new GraftScan(snapshot0, store, snapshot0.schema, required, filters,
-        streamLimits)
+    new LakeScan(snapshot0, store, required, filters,
+      streamLimits = streamLimits)
   }
 }
 
@@ -659,399 +685,6 @@ final class GraftAggReaderFactory
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(rows(i))
       override def close(): Unit = ()
     }
-}
-
-/** Main read path: native DSv2 Batch over the pruned file set, delegating
-  * the physical IO to Spark's vectorized parquet scan (ParquetScanBridge)
-  * — ColumnarBatches flow straight into WholeStageCodegen with no
-  * Row↔InternalRow conversion. */
-class GraftVectorScan(
-    private val snapshot: Snapshot,
-    private val store: SnapshotStore,
-    fullSchema: StructType,
-    private val required: StructType,
-    private val filters: Array[Filter],
-    streamLimits: StreamReadLimits = StreamReadLimits())
-  extends Scan with SupportsReportStatistics
-  with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-  with org.apache.spark.sql.connector.read.SupportsReportOrdering
-  with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  // Physically-renamed filters and the vetted exact subset, computed
-  // ONCE per scan — prunedFiles and buildBatch must agree with the
-  // builder's pushed-claim split (same deterministic inputs) or rows
-  // leak past a dropped Filter node.
-  private lazy val physFilters: IndexedSeq[Filter] =
-    filters.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-  private lazy val exactPhysIdx: Set[Int] =
-    IdentityFilters.exactIndices(physFilters, snapshot)
-  private lazy val exactPhys: Seq[Filter] =
-    exactPhysIdx.toSeq.map(physFilters)
-  private lazy val residualPhys: Array[Filter] =
-    physFilters.zipWithIndex
-      .filterNot(p => exactPhysIdx.contains(p._2)).map(_._1).toArray
-
-  // chunk-level (manifest-list) pruning first — only the chunks whose
-  // merged bounds overlap the filters are ever loaded — then per-file,
-  // then EXACT selection for the identity-partition filters the builder
-  // claimed as pushed (no residual Filter re-applies those — correctness
-  // depends on this step, not just performance)
-  private[lake] lazy val prunedFiles: Seq[DataFile] =
-    StatsPruner.prune(store.filesForScan(snapshot, physFilters), physFilters,
-      snapshot.partitionSpec)
-      .filter(df => IdentityFilters.matchesAll(df, exactPhys, snapshot))
-
-  /** Partition-key groups for storage-partitioned joins, when the layout
-    * is soundly reportable (see [[Spj.keyed]]). */
-  private[lake] lazy val keyed: Option[Spj.Keyed] =
-    Spj.keyed(snapshot, prunedFiles, required)
-
-  /** File set after runtime (dynamic) filtering; null until `filter()`. */
-  @volatile private var runtimeFiles: Seq[DataFile] = null
-  private def currentFiles: Seq[DataFile] =
-    if (runtimeFiles ne null) runtimeFiles else prunedFiles
-  /** Test seam: (kept, total) after the last runtime filter. */
-  @volatile private[graft] var runtimePruned: Option[(Int, Int)] = None
-
-  /** Dynamic FILE pruning (the DSv2 dynamic-partition-pruning hookup):
-    * Spark's PartitionPruning rule sees these attributes, and when one is
-    * a join key against a filtered (broadcast) build side it hands the
-    * build side's key values to `filter()` before planning input
-    * partitions — a fact scan joined to `dim WHERE day = X` then opens
-    * only the files whose stats/partition-values/blooms can match those
-    * keys. Reported columns are the ones file pruning can actually act
-    * on: partition sources, declared sort/z-order columns (files cover
-    * narrow ranges there), and bloom-filtered columns — reporting
-    * unclustered columns would add DPP subquery overhead for pruning
-    * that never removes a file. */
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val props = snapshot.properties
-    val sortCols = props.get("graft.sort-order").map(_.trim).map {
-      case s if s.toLowerCase.startsWith("zorder") =>
-        s.replaceAll("(?i)zorder\\s*\\(", "").stripSuffix(")")
-      case s => s
-    }.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val bloomCols = props.get("graft.bloom-columns").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    // only columns the scan OUTPUTS: Spark's PartitionPruning rule
-    // resolves these against the relation output and THROWS (not skips)
-    // on a miss, so a pruned-away partition column must not be reported
-    (snapshot.partitionSpec.map(_.source) ++ sortCols ++ bloomCols)
-      .distinct
-      .filter(c => required.fieldNames.contains(c))
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
-  }
-
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
-    val v1 = org.apache.spark.sql.graftbridge.ColumnBridge
-      .predicatesToV1(predicates)
-    if (v1.isEmpty) return // untranslatable: keep the conservative set
-    val phys = v1.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-    val kept = StatsPruner.prune(currentFiles, phys, snapshot.partitionSpec)
-    runtimePruned = Some(kept.size -> prunedFiles.size)
-    runtimeFiles = kept
-  }
-
-  override def readSchema(): StructType = required
-
-  /** Columns (LOGICAL names) every pruned file is stamped sorted by —
-    * the write path's clustered append sets DataFile.sortedBy; any file
-    * from a non-sorting rewrite has it empty and kills the claim. Only
-    * reported when the columns survive projection (resolution against
-    * the scan output THROWS otherwise, same as SPJ keys). */
-  private lazy val orderedBy: Seq[String] = {
-    // opt-in: honoring an order forces ONE partition per file (no split
-    // packing, no sub-file parallelism) — only pay that when sorted
-    // plans are requested; the conf is the same one Spark gates
-    // SPJ-with-ordering on
-    val wantsSorted = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.sql.sources.v2.bucketing.sorting.enabled", "false")
-      .toBoolean
-    val fs = if (wantsSorted) prunedFiles else Seq.empty
-    if (fs.isEmpty) Seq.empty
-    else {
-      val stamps = fs.map(_.sortedBy).distinct
-      if (stamps.size != 1 || stamps.head.isEmpty) Seq.empty
-      else {
-        val physToLogical =
-          SchemaNames.renameMap(snapshot.schema).map(_.swap)
-        val logical = stamps.head.map(p => physToLogical.getOrElse(p, p))
-        if (logical.forall(required.fieldNames.contains)) logical
-        else Seq.empty
-      }
-    }
-  }
-
-  /** Per-partition sort order: with SPJ (one file per key group after
-    * compaction) Spark skips the sort-merge join's per-partition sorts
-    * entirely — zero shuffles AND zero sorts. Honoring this requires
-    * each input partition's rows to BE sorted, which [[buildBatch]]
-    * guarantees by planning one partition per FILE when a claim exists
-    * (splits of one file stay together, in offset order). */
-  override def outputOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    orderedBy.map(c => Expressions.sort(
-      Expressions.column(c), SortDirection.ASCENDING)).toArray
-  }
-
-  /** Reported layout → Spark plans co-partitioned joins WITHOUT a
-    * shuffle (gated upstream by spark.sql.sources.v2.bucketing.enabled;
-    * reporting when the gate is off costs nothing). */
-  override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    keyed match {
-      case Some(k) =>
-        new org.apache.spark.sql.connector.read.partitioning
-          .KeyGroupedPartitioning(k.keys, k.groups.size)
-      case None =>
-        new org.apache.spark.sql.connector.read.partitioning
-          .UnknownPartitioning(0)
-    }
-
-  /** STABLE batch handle: BatchScanExec.equals compares `scan.toBatch`
-    * by object identity, so a fresh Batch per call makes equal scans
-    * "different" — which breaks exchange reuse and thereby every
-    * dynamic-pruning filter (reuseBroadcastOnly finds no match and
-    * degrades to `true`). The wrapper carries the scan's value equality
-    * and defers partition planning to [[buildBatch]], so runtime
-    * filtering still re-plans from the narrowed file set. */
-  @transient private lazy val stableBatch
-      : org.apache.spark.sql.connector.read.Batch = new GraftVectorBatch(this)
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = stableBatch
-
-  private[lake] def buildBatch(): org.apache.spark.sql.connector.read.Batch = {
-    // Files carry PHYSICAL column names: hand the bridge the physical
-    // schema/projection/filters; rows bind positionally to the logical
-    // attributes (same order and types), so no rename-back is needed.
-    val rename = SchemaNames.renameMap(snapshot.schema)
-    val physRequired = StructType(required.fields.map(f =>
-      f.copy(name = rename.getOrElse(f.name, f.name))))
-    // exact identity-partition filters are enforced by FILE selection
-    // (prunedFiles) and must NOT reach the parquet reader: their column
-    // may be pruned out of the read schema, and parquet record-level
-    // filtering evaluates a missing column as NULL — dropping every row
-    // (residualPhys, shared lazy val above, excludes them)
-    def uri(f: DataFile): (String, Long) =
-      store.tableDir.resolve(f.path).toUri.toString -> f.sizeBytes
-    keyed match {
-      case Some(k) =>
-        // after a runtime filter, narrow each original key group — the
-        // surviving groups stay an exact subset of the reported partition
-        // values, which BatchScanExec checks when re-planning under SPJ
-        val groups =
-          if (runtimeFiles eq null) k.groups
-          else {
-            val remaining = currentFiles.map(_.path).toSet
-            k.groups
-              .map { case (row, fs) =>
-                row -> fs.filter(f => remaining.contains(f.path)) }
-              .filter(_._2.nonEmpty)
-          }
-        org.apache.spark.sql.graftbridge.ParquetScanBridge
-          .vectorizedKeyedBatch(
-            SparkSession.active,
-            groups.map { case (row, fs) => row -> fs.map(uri) },
-            SchemaNames.toPhysical(fullSchema), physRequired,
-            residualPhys,
-            perFilePartitions = orderedBy.nonEmpty)
-      case None =>
-        if (orderedBy.nonEmpty)
-          org.apache.spark.sql.graftbridge.ParquetScanBridge
-            .vectorizedPerFileBatch(
-              SparkSession.active,
-              currentFiles.map(uri),
-              SchemaNames.toPhysical(fullSchema), physRequired,
-              residualPhys)
-        else
-          org.apache.spark.sql.graftbridge.ParquetScanBridge.vectorizedBatch(
-            SparkSession.active,
-            currentFiles.map(uri),
-            SchemaNames.toPhysical(fullSchema), physRequired,
-            residualPhys)
-    }
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(store, required, checkpointLocation,
-      streamLimits)
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = prunedFiles.map(_.rowCount).sum
-    private val bytes = prunedFiles.map(_.sizeBytes).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(bytes, 1L))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-    override def columnStats() = NdvStats.columnStats(snapshot)
-  }
-
-  override def description(): String =
-    s"GraftVectorScan[v${snapshot.version}, files=${prunedFiles.size}/${snapshot.fileCount}]"
-
-  /** Value equality over (table, snapshot, projection, pushed filters):
-    * Spark's exchange/subquery reuse and dynamic-pruning planning compare
-    * canonicalized plans, and a DSv2 scan WITHOUT equals makes every
-    * re-planned scan of the same table "different" — which silently
-    * disables broadcast reuse and downgrades every dynamic-pruning
-    * filter to `true` (the same reason Iceberg's SparkScan defines
-    * equality). Runtime-filter state is deliberately excluded: two scans
-    * planned alike are interchangeable, and BatchScanExec compares its
-    * own runtimeFilters separately. The BRANCH is part of identity:
-    * branch chains share tableDir with independent version numbers, so
-    * main-chain v3 and branch-chain v3 hold different file sets and must
-    * never be substituted for each other by exchange/stage reuse. */
-  override def equals(other: Any): Boolean = other match {
-    case o: GraftVectorScan =>
-      store.tableDir == o.store.tableDir &&
-        store.branch == o.store.branch &&
-        snapshot.version == o.snapshot.version &&
-        required == o.required &&
-        filters.toSeq == o.filters.toSeq
-    case _ => false
-  }
-  override def hashCode(): Int =
-    (store.tableDir, store.branch, snapshot.version, required,
-      filters.toSeq).hashCode()
-}
-
-/** The stable Batch for [[GraftVectorScan]]: value-equal when the owning
-  * scans are (what BatchScanExec's reference-compare of `batch` actually
-  * needs), with partition planning deferred so post-runtime-filter
-  * re-plans see the narrowed file set. The reader factory is built once —
-  * it depends only on schema/filters/conf, never on which files survived
-  * pruning — and is shared across re-plans. */
-private[lake] final class GraftVectorBatch(
-    private[lake] val owner: GraftVectorScan)
-  extends org.apache.spark.sql.connector.read.Batch {
-
-  @transient private lazy val factory = owner.buildBatch().createReaderFactory()
-
-  override def planInputPartitions()
-      : Array[org.apache.spark.sql.connector.read.InputPartition] =
-    owner.buildBatch().planInputPartitions()
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory = factory
-
-  override def equals(other: Any): Boolean = other match {
-    case b: GraftVectorBatch => owner == b.owner
-    case _ => false
-  }
-  override def hashCode(): Int = owner.hashCode()
-}
-
-/** Scan over the pruned file set, bridged to Spark's parquet source. */
-class GraftScan(
-    snapshot: Snapshot,
-    store: SnapshotStore,
-    fullSchema: StructType,
-    required: StructType,
-    filters: Array[Filter],
-    streamLimits: StreamReadLimits = StreamReadLimits())
-  extends V1Scan with SupportsReportStatistics {
-
-  // chunk-level (manifest-list) pruning first, then per-file, then the
-  // EXACT identity-partition selection backing the builder's pushed claim
-  private[lake] lazy val prunedFiles: Seq[DataFile] = {
-    val phys = filters.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-    val exact = IdentityFilters.exactIndices(phys, snapshot).toSeq.map(phys)
-    StatsPruner.prune(store.filesForScan(snapshot, phys), phys,
-      snapshot.partitionSpec)
-      .filter(df => IdentityFilters.matchesAll(df, exact, snapshot))
-  }
-
-  override def readSchema(): StructType = required
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftRelation(context, store, snapshot, prunedFiles, fullSchema,
-      required, filters).asInstanceOf[T]
-
-  /** spark.readStream.table(...): incremental micro-batches over the
-    * snapshot log (offsets = versions). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(store, required, checkpointLocation,
-      streamLimits)
-
-  /** Snapshot-resident stats → the optimizer's broadcast decisions see real
-    * sizes without touching the FS (SURVEY.md §4 "snapshot-based stats");
-    * per-column NDV from the merged HLL sketches feeds CBO when present. */
-  override def estimateStatistics(): Statistics = new Statistics {
-    // position deletes remove rows the file counts still include; clamp at
-    // 0 because the tuples may reference files outside the pruned set.
-    // Equality-delete tuples are NOT subtracted: each key kills 0..N rows,
-    // so tuple count is not a row count — matching totalRows' upper-bound
-    // rationale (planner stats only; an overestimate is the safe direction
-    // for broadcast decisions).
-    private val rows = math.max(0L, prunedFiles.map(_.rowCount).sum -
-      snapshot.deleteFiles.filter(_.positional).map(_.rowCount).sum)
-    private val bytes = prunedFiles.map(_.sizeBytes).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(bytes, 1L))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-    override def columnStats() = NdvStats.columnStats(snapshot)
-  }
-
-  override def description(): String =
-    s"GraftScan[v${snapshot.version}, files=${prunedFiles.size}/${snapshot.fileCount}]"
-}
-
-/** V1 bridge relation: builds the final RDD by planning a parquet read of
-  * exactly the pruned files with the snapshot's schema (null-fill for
-  * evolved columns), the pushed filters re-applied (→ parquet row-group /
-  * page pruning), and the projection narrowed (→ column pruning). */
-final class GraftRelation(
-    ctx: SQLContext,
-    store: SnapshotStore,
-    snapshot: Snapshot,
-    files: Seq[DataFile],
-    fullSchema: StructType,
-    required: StructType,
-    filters: Array[Filter])
-  extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-
-  /** Snapshot-resident size of the PRUNED file set — without this the V1
-    * relation reports spark.sql.defaultSizeInBytes (8 EiB) and a lake
-    * table can never be chosen as the broadcast side of a join. */
-  override def sizeInBytes: Long = math.max(files.map(_.sizeBytes).sum, 1L)
-
-  override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], required).rdd
-    } else {
-      val hasDeletes = snapshot.deleteFiles.nonEmpty
-      var df: DataFrame =
-        if (hasDeletes)
-          SchemaNames.readLogicalWithProvenance(spark, store, fullSchema, files)
-        else SchemaNames.readLogical(spark, store, fullSchema, files)
-      // `_file` metadata column (SupportsMetadataColumns) is served from
-      // the parquet reader's provenance function
-      if (required.fieldNames.contains("_file"))
-        df = df.withColumn("_file", org.apache.spark.sql.functions.input_file_name())
-      FilterTranslate.conjunction(filters.toIndexedSeq).foreach(c => df = df.filter(c))
-      // merge-on-read: subtract position-delete tuples (after the pushed
-      // filters — deletes only ever REMOVE rows, so filtering first is
-      // both safe and cheaper), then drop the provenance columns
-      if (hasDeletes)
-        df = PositionDeletes.applySnapshotDeletes(spark, store, df, snapshot)
-          .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-      val projected =
-        if (required.isEmpty) df
-        else df.select(required.fieldNames.map(col).toIndexedSeq: _*)
-      projected.rdd
-    }
-  }
 }
 
 /** V1 write bridge: the driver-side InsertableRelation stages parquet and
@@ -1129,12 +762,8 @@ final class GraftWriteBuilder(store: SnapshotStore)
                   // NULL-evaluating rows are outside the overwritten region
                   // and must survive (same NULL semantics as DELETE).
                   // Pending MOR deletes fold into the rewrite.
-                  val kept = PositionDeletes.applySnapshotDeletes(spark, store,
-                      SchemaNames.readLogicalWithProvenance(
-                        spark, store, head.schema, touched),
-                      head)
+                  val kept = GraftTable.liveRows(spark, store, head, touched)
                     .filter(fnot(coalesce(cond, lit(false))))
-                    .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
                   GraftWriter.writeFiles(spark, store, head, kept)
                 }
               // same CHECK enforcement as plain INSERT — this branch

@@ -149,15 +149,7 @@ object IncrementalAgg {
 
     // live rows of the AFFECTED groups only: current files under current
     // MOR deletes, filtered by the delta's key set before aggregating
-    val live =
-      if (srcHead.files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
-      else PositionDeletes.applySnapshotDeletes(spark, srcStore,
-          SchemaNames.readLogicalWithProvenance(spark, srcStore, srcSchema,
-            srcHead.files),
-          srcHead, readSchema = srcSchema)
-        .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
+    val live = GraftTable.liveRows(spark, srcStore, srcHead, srcHead.files)
     val recomputed = live.join(affected, keys, "left_semi")
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"),

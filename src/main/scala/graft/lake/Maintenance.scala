@@ -31,10 +31,7 @@ object Maintenance {
     if (small.size <= 1) return head // nothing to gain
     val keep = head.files.filterNot(small.contains)
     // pending MOR delete tuples on compacted files fold into the rewrite
-    val df = PositionDeletes.applySnapshotDeletes(spark, store,
-        SchemaNames.readLogicalWithProvenance(spark, store, head.schema, small),
-        head)
-      .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
+    val df = GraftTable.liveRows(spark, store, head, small)
       .coalesce(math.max(1, small.map(_.sizeBytes).sum / smallFileThresholdBytes).toInt)
     val rewritten = GraftWriter.writeFiles(spark, store, head, df)
     // same rows, new files: concurrent appends rebase through untouched
@@ -57,7 +54,7 @@ object Maintenance {
     * rows; the commit clears `deleteFiles`. The MOR maintenance
     * counterpart of `compact` (Iceberg's `rewrite_position_delete_files` +
     * data rewrite in one): DELETEs stay O(matches) at write time, and this
-    * periodic rewrite keeps the read-side anti-join from growing. Only
+    * periodic rewrite keeps the readers' delete work from growing. Only
     * files actually referenced by a tuple are rewritten. */
   def rewriteDeletes(spark: SparkSession, store: SnapshotStore): Snapshot = {
     val head = store.head().getOrElse(
@@ -75,11 +72,8 @@ object Maintenance {
     val rewritten: Seq[DataFile] =
       if (touched.isEmpty) Seq.empty
       else {
-        val live = PositionDeletes.applySnapshotDeletes(spark, store,
-            SchemaNames.readLogicalWithProvenance(spark, store, head.schema, touched),
-            head)
-          .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-        GraftWriter.writeFiles(spark, store, head, live)
+        GraftWriter.writeFiles(spark, store, head,
+          GraftTable.liveRows(spark, store, head, touched))
       }
     // every delete file of `head` is folded in; ones committed since
     // stay pending on the rebased snapshot

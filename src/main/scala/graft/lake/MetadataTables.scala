@@ -98,7 +98,7 @@ object MetadataTables {
         new LocalTable(s"$tableName.files", filesSchema, rows)
       case "delete_files" =>
         // pending merge-on-read position-delete files (the rewrite_deletes
-        // dashboard: how much anti-join weight has accumulated)
+        // dashboard: how much per-read delete work has accumulated)
         val rows = store.head().toSeq.flatMap(_.deleteFiles).map(f =>
           Row(f.path, f.rowCount, f.sizeBytes, f.kind,
             if (f.equalityColumns.isEmpty) null

@@ -2,8 +2,11 @@ package graft.lake
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetScanBridge
 import org.apache.spark.sql.types._
 
 /** Merge-on-read position deletes (Iceberg v2 design; the reference's stack
@@ -11,18 +14,18 @@ import org.apache.spark.sql.types._
   * marked deleted"). A DELETE under `graft.delete-mode = merge-on-read`
   * writes a small parquet file of `(file_path STRING, pos BIGINT)` tuples
   * naming deleted rows by data-file path + 0-based row index, instead of
-  * rewriting the data files (copy-on-write). Readers subtract the tuples
-  * with an anti-join.
+  * rewriting the data files (copy-on-write). Each reader skips its own
+  * file's tuples ([[LakeScan]]); which delete files a data file must apply
+  * is decided at planning by [[applicable]].
   *
   * Scale rationale: deleting 1k rows from a 100 TB table costs one KB-sized
   * delete file and a metadata commit; the COW alternative rewrites every
-  * file containing a match. The read-side anti-join broadcasts the tuple
-  * set while it stays small; `rewrite_deletes` compaction folds tuples back
+  * file containing a match. `rewrite_deletes` compaction folds tuples back
   * into the data files when they accumulate.
   *
-  * Join identity is the data file's NAME (UUID-unique within a table), not
-  * its absolute path — `_metadata.file_path` returns a URI whose prefix
-  * varies by filesystem, and the name is stable across both forms.
+  * Identity is the data file's NAME (UUID-unique within a table), not its
+  * absolute path — `_metadata.file_path` returns a URI whose prefix varies
+  * by filesystem, and the name is stable across both forms.
   */
 object PositionDeletes {
 
@@ -42,10 +45,11 @@ object PositionDeletes {
   def fileName(path: String): String =
     path.substring(path.lastIndexOf('/') + 1)
 
-  /** Broadcast the anti-join's delete side while the tuple files stay small
-    * (parquet bytes ≈ a few × in-memory) — one hash build instead of
-    * shuffling the 100 TB data side. Past the threshold, fall back to the
-    * planner's choice (sort-merge on the shuffled tuple set): a DELETE
+  /** Broadcast the delete side of the CDC joins (which rows did a commit
+    * delete: [[tuples]], [[equalityMatchedRows]]) while the delete files
+    * stay small (parquet bytes ≈ a few × in-memory) — one hash build
+    * instead of shuffling the data side. Past the threshold, fall back to
+    * the planner's choice (sort-merge on the shuffled tuple set): a DELETE
     * backlog bigger than executor memory must never be pinned to a
     * broadcast build. Session-overridable for tests and tuning. */
   val BroadcastMaxBytesKey = "graft.mor.broadcast-max-bytes"
@@ -55,7 +59,7 @@ object PositionDeletes {
     scala.util.Try(org.apache.spark.sql.SparkSession.active)
       .toOption
       .flatMap(_.conf.getOption(BroadcastMaxBytesKey))
-      .map(_.toLong)
+      .map(GraftWriter.longSetting(BroadcastMaxBytesKey, _))
       .getOrElse(BroadcastMaxBytesDefault)
 
   /** Raw `(file_path, pos)` rows of position tuple files. */
@@ -67,7 +71,7 @@ object PositionDeletes {
   /** All position-shaped deletes of `deleteFiles` — raw tuple parquet
     * files AND consolidated deletion vectors — as a `(NameCol, RowPosCol)`
     * frame (file paths reduced to names for provenance joins). None when
-    * there are none. */
+    * there are none. The CDC and retain path; reads never use it. */
   def tuples(spark: SparkSession, store: SnapshotStore,
       deleteFilesIn: Seq[DeleteFile]): Option[DataFrame] = {
     val tupleFiles = deleteFilesIn.filter(_.kind == "position")
@@ -92,20 +96,6 @@ object PositionDeletes {
       dvs.map(_.rowCount * 80L).sum
     Some(if (totalBytes <= broadcastMaxBytes) broadcast(t) else t)
   }
-
-  /** Remove deleted rows from a data read that carries `NameCol`/`RowPosCol`
-    * provenance columns (see [[SchemaNames.readLogicalWithProvenance]]).
-    * Keeps the provenance columns — callers drop them after their last use. */
-  def applyTo(spark: SparkSession, store: SnapshotStore,
-      dataWithProvenance: DataFrame, deleteFiles: Seq[DeleteFile]): DataFrame =
-    tuples(spark, store, deleteFiles) match {
-      case None => dataWithProvenance
-      case Some(t) =>
-        dataWithProvenance.join(t,
-          dataWithProvenance(NameCol) === t(NameCol) &&
-            dataWithProvenance(RowPosCol) === t(RowPosCol),
-          "left_anti")
-    }
 
   /** Shared staging protocol for delete files: write `df` with
     * [[LakeFileWriter]] into a staging dir (one file per non-empty task,
@@ -156,16 +146,15 @@ object PositionDeletes {
         equalityColumns = physCols, seq = Snapshot.UnassignedSeq)
     }
 
-  /** Sequence column names for equality application (collision-proofed
+  /** Sequence column names for the CDC equality match (collision-proofed
     * like the provenance columns). */
   val FileSeqCol = "__gdel_fseq"
   val DelSeqCol = "__gdel_dseq"
 
   /** Load one equality-column group's tuple files as a frame with columns
     * `__geq_<physName>` plus [[DelSeqCol]] (each file's commit sequence),
-    * broadcast while the group stays small. Shared by the anti-join
-    * (delete application) and the semi-join (CDC / position conversion).
-    * Keys are read as `types`, the columns' current types. */
+    * broadcast while the group stays small, for the CDC semi-join. Keys
+    * are read as `types`, the columns' current types. */
   private def eqTupleFrame(spark: SparkSession, store: SnapshotStore,
       cols: Seq[String], types: Seq[DataType], group: Seq[DeleteFile]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, lit}
@@ -178,45 +167,6 @@ object PositionDeletes {
     val tup0 = parts.reduce(_ unionByName _)
     if (group.map(_.sizeBytes).sum <= broadcastMaxBytes) broadcast(tup0)
     else tup0
-  }
-
-  /** Apply ALL of `snap`'s pending deletes (position tuples + equality
-    * keys) to a provenance-carrying data read. Equality semantics: a row
-    * dies iff its key equals a tuple AND its data file's commit sequence
-    * is strictly below the delete's. Provenance columns are kept. */
-  def applySnapshotDeletes(spark: SparkSession, store: SnapshotStore,
-      dataWithProvenance: DataFrame, snap: Snapshot,
-      readSchema: org.apache.spark.sql.types.StructType = null): DataFrame = {
-    val (eq, pos) = snap.deleteFiles.partition(_.kind == "equality")
-    var df = applyTo(spark, store, dataWithProvenance, pos)
-    if (eq.nonEmpty) {
-      import org.apache.spark.sql.functions.{broadcast, col, lit}
-      // file name -> commit sequence, tiny and driver-known
-      val seqLookup = broadcast(spark.createDataFrame(
-        snap.files.map(f => (fileName(f.path), f.seq)))
-        .toDF(NameCol, FileSeqCol))
-      df = df.join(seqLookup, NameCol)
-      // physical -> current logical name (files + delete tuples store
-      // physical; the provenance read exposes logical). `readSchema`
-      // overrides when the data was read under a DIFFERENT schema version
-      // than `snap` (CDC reads everything under the range's end schema).
-      val sch = Option(readSchema).getOrElse(snap.schema)
-      val physToLogical: Map[String, String] =
-        sch.fields.map(f => SchemaNames.physicalName(f) -> f.name).toMap
-      for ((cols, group) <- eq.groupBy(_.equalityColumns)) {
-        val logical = cols.map(c => physToLogical.getOrElse(c,
-          throw new IllegalStateException(
-            s"equality-delete column '$c' no longer exists in the table " +
-              "schema; run rewrite_deletes before dropping delete-key columns")))
-        val tup = eqTupleFrame(spark, store, cols, logical.map(sch(_).dataType), group)
-        val keyEq = cols.zip(logical).map { case (p, l) =>
-          df(l) === tup(s"__geq_$p")
-        }.reduce(_ && _)
-        df = df.join(tup, keyEq && df(FileSeqCol) < tup(DelSeqCol), "left_anti")
-      }
-      df = df.drop(FileSeqCol)
-    }
-    df
   }
 
   /** Rewrite `deleteFiles` keeping only entries still needed over the
@@ -280,32 +230,28 @@ object PositionDeletes {
     untouched ++ tuplesKept ++ dvKept ++ eqKept
   }
 
-  /** Rows of a provenance-carrying read over `files` that MATCH any
-    * equality tuple of `eqFiles` under sequence ordering (file.seq <
-    * delete.seq) — the inverse of the anti-join in
-    * [[applySnapshotDeletes]]. Used to materialize what an equality delete
-    * killed (CDC) and to convert equality deletes to positions (COW
-    * reads). Result is deduplicated by provenance. */
+  /** Rows live at `snap` that MATCH any equality tuple of `eqFiles` under
+    * sequence ordering (file.seq < delete.seq): what equality deletes
+    * committed on top of `snap` killed (CDC), under `schema`. */
   def equalityMatchedRows(spark: SparkSession, store: SnapshotStore,
-      snap: Snapshot, eqFiles: Seq[DeleteFile], files: Seq[DataFile],
-      readSchema: org.apache.spark.sql.types.StructType = null): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
-    val relevant = files.filter(f => eqFiles.exists(e => f.seq < e.seq))
+      snap: Snapshot, eqFiles: Seq[DeleteFile],
+      schema: StructType): Option[DataFrame] = {
+    val relevant = snap.files.filter(f => eqFiles.exists(e => f.seq < e.seq))
     if (eqFiles.isEmpty || relevant.isEmpty) return None
-    val sch = Option(readSchema).getOrElse(snap.schema)
-    val data = SchemaNames.readLogicalWithProvenance(spark, store, sch, relevant)
-    val seqLookup = broadcast(spark.createDataFrame(
-      (snap.files ++ files).distinct.map(f => (fileName(f.path), f.seq)))
-      .toDF(NameCol, FileSeqCol))
-    val withSeq = data.join(seqLookup, NameCol)
+    val live = GraftTable.liveRows(spark, store, snap, relevant, schema,
+      provenance = true)
+    val seqLookup = broadcast(spark.createDataFrame(relevant.map(f =>
+        (store.tableDir.resolve(f.path).toString, f.seq)))
+      .toDF(GraftTable.FileCol, FileSeqCol))
+    val withSeq = live.join(seqLookup, GraftTable.FileCol)
     val physToLogical: Map[String, String] =
-      sch.fields.map(f => SchemaNames.physicalName(f) -> f.name).toMap
+      schema.fields.map(f => SchemaNames.physicalName(f) -> f.name).toMap
     val matches = eqFiles.groupBy(_.equalityColumns).toSeq.map {
       case (cols, group) =>
         val logical = cols.map(c => physToLogical.getOrElse(c,
           throw new IllegalStateException(
             s"equality-delete column '$c' no longer exists in the table schema")))
-        val tup = eqTupleFrame(spark, store, cols, logical.map(sch(_).dataType), group)
+        val tup = eqTupleFrame(spark, store, cols, logical.map(schema(_).dataType), group)
         val keyEq = cols.zip(logical).map { case (p, l) =>
           withSeq(l) === tup(s"__geq_$p")
         }.reduce(_ && _)
@@ -313,60 +259,8 @@ object PositionDeletes {
           "left_semi")
     }
     Some(matches.reduce(_ unionByName _)
-      .dropDuplicates(NameCol, RowPosCol)
-      .drop(FileSeqCol))
-  }
-
-  /** Cap on position-delete tuples the DRIVER may materialize to plan a
-    * COW rewrite scan (session conf `graft.cow.driver-tuple-cap`). At or
-    * below the cap the per-file position arrays ride inside the
-    * InputPartitions — cheapest for the common small-backlog case. Above
-    * it the driver never touches a tuple: each reader loads its own
-    * file's positions executor-side ([[GraftPartitionReader]]), so a
-    * 100 TB table with a huge DELETE backlog plans in O(metadata). */
-  val DriverTupleCapKey = "graft.cow.driver-tuple-cap"
-  val DriverTupleCapDefault = 100000L
-
-  def driverTupleCap(spark: SparkSession): Long =
-    spark.conf.getOption(DriverTupleCapKey).map(_.toLong)
-      .getOrElse(DriverTupleCapDefault)
-
-  /** Per-data-file deleted positions (sorted ascending), keyed by file
-    * NAME, restricted to `files` — the small-backlog fast path of the COW
-    * rewrite scan (GraftPartitionReader skips these row indexes). Callers
-    * must gate on [[driverTupleCap]]; above the cap the executor-side
-    * path applies instead and no tuple reaches the driver. */
-  def positionsByFileName(spark: SparkSession, store: SnapshotStore,
-      deleteFiles: Seq[DeleteFile],
-      files: Seq[DataFile]): Map[String, Array[Long]] = {
-    val pos = deleteFiles.filter(_.kind == "position")
-    val dvs = deleteFiles.filter(_.kind == DeletionVectors.Kind)
-    if ((pos.isEmpty && dvs.isEmpty) || files.isEmpty) return Map.empty
-    val wanted = files.map(f => fileName(f.path)).toSet
-    val fromTuples: Map[String, Array[Long]] =
-      if (pos.isEmpty) Map.empty
-      else {
-        readTuples(spark, store, pos)
-          .select(
-            element_at(split(col(FilePathCol), "/"), -1).as(NameCol),
-            col(PosCol))
-          .filter(col(NameCol).isin(wanted.toSeq: _*))
-          .collect()
-          .groupBy(_.getString(0))
-          .view.mapValues(_.map(_.getLong(1))).toMap
-      }
-    // vector payloads: exact ranged reads of just the wanted files'
-    // bitmaps (bounded by the same driver tuple cap as the tuple path)
-    val fromDvs: Seq[(String, Array[Long])] = dvs.flatMap { d =>
-      val blob = store.tableDir.resolve(d.path).toString
-      DeletionVectors.readIndex(store, d)
-        .filter(e => wanted.contains(e.name))
-        .map(e => e.name ->
-          DeletionVectors.readPositions(blob, e.offset, e.length))
-    }
-    (fromTuples.toSeq ++ fromDvs)
-      .groupBy(_._1)
-      .view.mapValues(_.flatMap(_._2).distinct.sorted.toArray).toMap
+      .dropDuplicates(GraftTable.FileCol, GraftTable.PosCol)
+      .drop(GraftTable.FileCol, GraftTable.PosCol, FileSeqCol))
   }
 
   /** Distinct data-file NAMES referenced by any position tuple — the
@@ -407,5 +301,84 @@ object PositionDeletes {
         (fileName(cs.min.get), fileName(cs.max.get))
       case _ => ("", "\uFFFF")
     }
+  }
+
+  /** Which data files delete file `d` may remove rows of, and how a reader
+    * applies it to one: None = no row of that file. Position files answer
+    * by their footer `file_path` range, deletion vectors by their index
+    * (with the file's exact slice), equality files by sequence order and
+    * their key values against the data file's stats. Loads `d`'s metadata
+    * once, on the driver, with no Spark job. [[LakeScan]] plans with it;
+    * [[Conflicts]] rule 3 asks it whether a concurrent delete touches
+    * what a statement read. */
+  def applicable(store: SnapshotStore, snap: Snapshot,
+      d: DeleteFile): DataFile => Option[DeleteRef] = {
+    val path = store.tableDir.resolve(d.path).toString
+    d.kind match {
+      case "position" =>
+        val (lo, hi) = nameRange(store, d)
+        val ref = Some(TupleRef(path, d.sizeBytes, d.rowCount))
+        f => { val name = fileName(f.path); if (lo <= name && name <= hi) ref else None }
+      case DeletionVectors.Kind =>
+        val slices = DeletionVectors.readIndex(store, d)
+          .map(e => e.name -> DvSlice(path, e.offset, e.length)).toMap
+        f => slices.get(fileName(f.path))
+      case "equality" =>
+        val ks = keySchema(snap.schema, d.equalityColumns)
+        val types = ks.map(_.dataType)
+        val keys = EqDeleteTupleCache.get(path, d.sizeBytes, types,
+            ParquetScanBridge.rowReaderFactory(SparkSession.active, ks, ks))
+        // each key column's values, sorted once: a file whose stats hold
+        // none of one column's values holds no key tuple
+        val probes = ks.indices.flatMap(i =>
+          statsProbe(keys, i, d.equalityColumns(i), types(i)))
+        val ref = Some(EqRef(path, d.sizeBytes, d.equalityColumns))
+        f => if (f.seq < d.seq && !keys.isEmpty && probes.forall(_(f))) ref
+          else None
+      case other =>
+        throw new IllegalStateException(s"unknown delete-file kind '$other' (${d.path})")
+    }
+  }
+
+  /** Can a data file's [min, max] stats of `col` hold one of the values
+    * of key column `i` over `keys`? One binary search over the sorted
+    * values per file; stats that do not parse answer yes. None where stats
+    * cannot rule a file out exactly: float and double keys (NaN has no
+    * order, and a file written before a float → double widening has stats
+    * rendered from the float, not from the value its rows now read as)
+    * and types without stats. Internal values: dates are epoch days and
+    * timestamps epoch micros, as in the stats. */
+  private def statsProbe(keys: java.util.Set[Seq[Any]], i: Int, col: String,
+      dt: DataType): Option[DataFile => Boolean] = {
+    def probe[T: Ordering: scala.reflect.ClassTag](value: Any => T,
+        parse: String => Option[T]): DataFile => Boolean = {
+      val sorted = keys.iterator.asScala.map(k => value(k(i))).toArray.sorted
+      f => f.stats.get(col).forall { st =>
+        val at = st.min.flatMap(parse).fold(0)(lo => sorted.search(lo).insertionPoint)
+        at < sorted.length &&
+          st.max.flatMap(parse).forall(hi => Ordering[T].lteq(sorted(at), hi))
+      }
+    }
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType =>
+        Some(probe[Long](_.asInstanceOf[Number].longValue, _.toLongOption))
+      case _: DecimalType =>
+        Some(probe[BigDecimal](_.asInstanceOf[Decimal].toBigDecimal,
+          s => scala.util.Try(BigDecimal(s)).toOption))
+      case StringType => Some(probe[String](_.toString, Some(_)))
+      case _ => None
+    }
+  }
+
+  /** Key columns `cols` (physical names) of an equality delete at the
+    * table's CURRENT types: delete files and data files are both read
+    * with these, so keys and rows meet in one value domain even across a
+    * type widening. */
+  def keySchema(schema: StructType, cols: Seq[String]): StructType = {
+    val byPhys = schema.fields.map(f => SchemaNames.physicalName(f) -> f.dataType).toMap
+    StructType(cols.map(c => StructField(c, byPhys.getOrElse(c,
+      throw new IllegalStateException(
+        s"equality-delete column '$c' no longer exists in the table " +
+          "schema; run rewrite_deletes before dropping delete-key columns")))))
   }
 }

@@ -57,9 +57,8 @@ final class GraftRowLevelOperation(
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"))
 
-  /** The rewrite scan must be a real DSv2 Batch (Spark's ReplaceData
-    * planning calls toBatch directly — the V1 fallback is not applied on
-    * this path), so it uses the native executor-side GraftBatchScan. */
+  /** The rewrite scan is the table's one scan, with `_file` as its
+    * runtime-filter attribute. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new org.apache.spark.sql.connector.read.ScanBuilder
       with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -76,7 +75,8 @@ final class GraftRowLevelOperation(
         required = requiredSchema
       }
       override def build(): org.apache.spark.sql.connector.read.Scan = {
-        val scan = new GraftBatchScan(base, store, required, filters,
+        val scan = new LakeScan(base, store, required, filters,
+          fileFilter = true,
           // runtime group filtering narrows the replaced-file set too:
           // commit swaps exactly the files the rewrite scan read
           onRuntimePrune = narrowed => scannedFiles = narrowed)
@@ -98,7 +98,7 @@ final class GraftRowLevelOperation(
           val replacedSet = replaced.map(_.path).toSet
           val surviving = base.files.filterNot(f => replacedSet.contains(f.path))
           // MOR tuples for replaced files were applied by the rewrite scan
-          // (GraftPartitionReader skips them); keep only tuples that still
+          // (its readers skip them); keep only tuples that still
           // reference a surviving file. A file the scan pruned holds no
           // match and no concurrent delete can add one, so the replaced
           // set is what this statement read.

@@ -49,11 +49,10 @@ object SchemaNames {
 
   /** Read `files` under the table's PHYSICAL column names and hand back
     * a DataFrame with the LOGICAL ones (positional rename; a no-op select
-    * for never-renamed tables). THE one way to read lake data files with
-    * Spark's reader — every driver-side read path (V1 scan,
-    * delete/overwrite rewrites, compaction) must go through it so a
-    * change to the rename convention happens in exactly one place. Paths
-    * and sizes come from the snapshot: no file is listed or stat'ed. */
+    * for never-renamed tables), with NO delete applied. For raw reads of
+    * files that are not a table's live rows (a materialized view's own
+    * files); live rows come from [[GraftTable.liveRows]]. Paths and sizes
+    * come from the snapshot: no file is listed or stat'ed. */
   def readLogical(spark: org.apache.spark.sql.SparkSession, store: SnapshotStore,
       schema: StructType, files: Seq[DataFile]): org.apache.spark.sql.DataFrame =
     readFiles(spark, store, toPhysical(schema), files.map(f => f.path -> f.sizeBytes))
@@ -62,7 +61,7 @@ object SchemaNames {
   /** [[readLogical]] plus two provenance columns from the parquet reader's
     * `_metadata` struct: the data file's NAME ([[PositionDeletes.NameCol]])
     * and the row's 0-based index within it ([[PositionDeletes.RowPosCol]]) —
-    * the join identity of merge-on-read position deletes. */
+    * the join identity of CDC's "which rows did this commit delete". */
   def readLogicalWithProvenance(spark: org.apache.spark.sql.SparkSession,
       store: SnapshotStore, schema: StructType,
       files: Seq[DataFile]): org.apache.spark.sql.DataFrame = {

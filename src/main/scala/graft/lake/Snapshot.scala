@@ -52,7 +52,7 @@ final case class DataFile(
 /** One immutable position-delete file (merge-on-read DELETE): a parquet
   * file with columns `(file_path STRING, pos BIGINT)` naming rows of DATA
   * files (by their snapshot-relative path + 0-based row index) that are
-  * deleted as of this snapshot. Readers anti-join these tuples; data files
+  * deleted as of this snapshot. Readers skip these rows; data files
   * themselves are untouched — the Iceberg v2 position-delete design
   * (reference stack: Iceberg 1.4, `README.md:124` "new data files created,
   * old ones marked deleted"). A 100 TB table deleting 100 rows writes one
@@ -160,7 +160,7 @@ final case class Snapshot(
 
   /** Live row count: data-file rows minus position-delete tuples. Position
     * delete files never hold duplicate or dangling tuples (deleteWhere
-    * anti-joins against already-deleted positions before writing), so the
+    * matches only live rows before writing), so the
     * subtraction is exact for them. Pending EQUALITY deletes are written
     * without a scan, so their matched-row count is unknown — they are not
     * subtracted, making this an upper bound until `rewrite_deletes` folds

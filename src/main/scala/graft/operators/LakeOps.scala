@@ -6,7 +6,7 @@ import graft.{Q, Tables}
 
 /** Catalog-backed queries for the driver's oracle gate: each pushes fixture
   * data through the FULL lakehouse path — CREATE TABLE → INSERT (staged
-  * parquet + stats + snapshot commit) → catalog scan (pruning + V1 bridge)
+  * parquet + stats + snapshot commit) → catalog scan (pruning + LakeScan)
   * — and returns rows that must hash-match DuckDB reading the ORIGINAL
   * parquet. Any corruption anywhere in the write/commit/read pipeline
   * breaks the match.
@@ -227,7 +227,7 @@ object LakeOps {
     * MOR table, two stacked DELETEs recorded as position-delete files (data
     * files untouched), then a full scan + aggregation — must hash-match
     * DuckDB computing the same deletes as WHERE complements. Exercises the
-    * tuple write path, the anti-join read path, and their NULL semantics. */
+    * tuple write path, the in-reader delete path, and their NULL semantics. */
   val qLakeMorDelete: Q = Q(
     "q_lake_mor_delete",
     """SELECT c_nationkey, count(*) AS n, CAST(round(sum(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS bal

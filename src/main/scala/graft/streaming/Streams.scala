@@ -231,9 +231,11 @@ object Streams {
     // was the family-wide minimum, so 4 replaces r2's 8.
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val stateParts = spark.conf.get("graft.stream.state-partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS", "4"))
-    spark.conf.set(key, stateParts)
+    val stateKey = "graft.stream.state-partitions"
+    val stateParts = graft.lake.GraftWriter.longSetting(stateKey,
+      spark.conf.get(stateKey,
+        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS", "4")))
+    spark.conf.set(key, stateParts.toString)
     val q = try stream.writeStream
       .outputMode(mode)
       .format("memory")
@@ -362,11 +364,8 @@ object Streams {
           val admitted =
             if (head.files.isEmpty) firstPerFp
             else {
-              val index = graft.lake.PositionDeletes.applySnapshotDeletes(
-                spark, store,
-                graft.lake.SchemaNames.readLogicalWithProvenance(spark, store,
-                  head.schema, head.files),
-                head)
+              val index = graft.lake.GraftTable.liveRows(spark, store, head,
+                head.files)
               val dup = index
                 .join(broadcast(firstPerFp.select("fp")), Seq("fp"), "left_semi")
                 .select("fp").distinct()

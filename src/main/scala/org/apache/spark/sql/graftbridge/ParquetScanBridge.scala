@@ -13,17 +13,18 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Bridge to Spark's vectorized parquet DSv2 scan for an EXPLICIT file
-  * list: builds a `ParquetScan` over an InMemoryFileIndex of exactly the
-  * files a Graft snapshot (post-pruning) selected, and returns its Batch.
-  * This gives lake-table SELECTs the same columnar reader, row-group
-  * pruning, and ColumnarBatch hand-off to WholeStageCodegen as a plain
-  * `spark.read.parquet` — without the V1 fallback's Row↔InternalRow
-  * conversion (measured 1.3-2× on scan-heavy shapes).
+  * list: builds a `ParquetScan` over a [[SnapshotFileIndex]] of exactly
+  * the files a Graft snapshot (post-pruning) selected. Every lake read
+  * goes through it: graft.lake.LakeScan's packed batches (the same
+  * columnar reader, row-group pruning and ColumnarBatch hand-off to
+  * WholeStageCodegen as a plain `spark.read.parquet`), its whole-file
+  * readers that apply deletes, and the reads of the delete files
+  * themselves.
   *
   * Internal-API surface (reason this lives in the bridge package): the
-  * ParquetScan constructor and the FileIndex family. File listing comes
-  * from [[SnapshotFileIndex]] — snapshot metadata only, no filesystem
-  * calls at plan time.
+  * ParquetScan constructor, its reader factory and the FileIndex family.
+  * File listing comes from [[SnapshotFileIndex]] — snapshot metadata
+  * only, no filesystem calls at plan time.
   */
 object ParquetScanBridge {
 
@@ -42,15 +43,11 @@ object ParquetScanBridge {
       new SnapshotFileIndex(spark, files),
       StructType(Nil), dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
 
-  /** Spark's own parquet `PartitionReaderFactory` in ROW mode: vectorized
-    * columnar DECODE internally (where the schema supports it) behind the
-    * `PartitionReader[InternalRow]` interface. This is what feeds the COW
-    * rewrite reads (MERGE / UPDATE / DELETE planning in
-    * graft.lake.GraftBatchRead): ~the SELECT path's decoder, without
-    * having to re-implement parquet materialization row by row.
-    * No filters are pushed — a row-level read must surface EVERY row in
-    * file order so merge-on-read position deletes can be applied by
-    * absolute row index. */
+  /** Spark's own parquet `PartitionReaderFactory`: vectorized columnar
+    * DECODE (where the schema supports it) behind both reader interfaces.
+    * It feeds graft.lake.LakeScan's whole-file readers and the delete-file
+    * reads. No filters are pushed — a whole-file read must surface EVERY
+    * row in file order so row positions count. */
   def rowReaderFactory(
       spark: SparkSession,
       dataSchema: StructType,

@@ -193,7 +193,7 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val snap = store.head().get
     val eqTuples = snap.deleteFiles.filter(_.kind == "equality").map(_.rowCount).sum
     assert(eqTuples == 6L, s"expected 6 accumulated eq-delete tuples, got $eqTuples")
-    val scan = new GraftScan(snap, store, snap.schema, snap.schema, Array.empty)
+    val scan = new LakeScan(snap, store, snap.schema, Array.empty)
     val est = scan.estimateStatistics().numRows().getAsLong
     // physical rows written = 4 + 3 + 3 = 10; no position deletes, so the
     // estimate must be exactly the file row count (an upper bound), never
@@ -218,7 +218,7 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ms.version == bs.version,
       s"test setup: chains diverged (${ms.version} vs ${bs.version})")
     def scan(snap: Snapshot, st: SnapshotStore) =
-      new GraftVectorScan(snap, st, snap.schema, snap.schema, Array.empty)
+      new LakeScan(snap, st, snap.schema, Array.empty)
     // same tableDir + version + projection + filters, different branch:
     // MUST differ, or Spark's sameResult-driven reuse swaps their results
     assert(scan(ms, main) != scan(bs, branch),

@@ -118,4 +118,22 @@ class BloomSpec extends AnyFunSuite {
     assert(msgs.exists(m => m.contains("graft.bloom-bits") && m.contains("'64k'")),
       s"unnamed parse failure: $msgs")
   }
+
+  test("a malformed graft.mor.broadcast-max-bytes fails naming the key and the value") {
+    spark.sql("""CREATE TABLE bl.t.badcap (k INT) USING iceberg
+                 TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
+    spark.sql("INSERT INTO bl.t.badcap VALUES (1), (2), (3)")
+    val store = new SnapshotStore(Paths.get(wh, "t", "badcap"))
+    val before = store.currentVersion().get
+    spark.sql("DELETE FROM bl.t.badcap WHERE k = 1 OR k = 2")
+    val key = PositionDeletes.BroadcastMaxBytesKey
+    spark.conf.set(key, "32MB")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Changes.between(spark, store, before, store.currentVersion().get)
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("'32MB'"),
+        e.getMessage)
+    } finally spark.conf.unset(key)
+  }
 }

@@ -60,11 +60,11 @@ object CowBenchMain {
     time("cow_read_scan") {
       val store = new SnapshotStore(java.nio.file.Paths.get(wh, "d", "li"))
       val snap = store.head().get
-      val scan = new GraftBatchScan(snap, store,
+      val scan = new LakeScan(snap, store,
         org.apache.spark.sql.types.StructType(
           snap.schema.fields :+ org.apache.spark.sql.types.StructField(
             "_file", org.apache.spark.sql.types.StringType)),
-        Array.empty)
+        Array.empty, fileFilter = true)
       val parts = scan.planInputPartitions()
       // one factory per partition, mirroring real execution (each Spark
       // task deserializes its OWN factory copy; a single shared instance

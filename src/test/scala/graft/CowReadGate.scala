@@ -10,7 +10,7 @@ import graft.lake._
   * (VERDICT r5 #6): r5 measured the vectorized row-level scan 3.2× the
   * parquet-mr row path in isolation, but only via the manual
   * CowBenchMain — nothing failed if the bridge silently fell back to row
-  * reads. This gate drains the SAME GraftBatchScan twice over a wide
+  * reads. This gate drains the SAME row-level LakeScan twice over a wide
   * table — once with `spark.sql.parquet.enableVectorizedReader=true`
   * (the shipping path) and once with it off (the old row path) — and
   * EXITS 2 unless (a) the shipping path actually produces columnar
@@ -59,7 +59,7 @@ object CowReadGate {
       spark.conf.set("spark.sql.parquet.enableVectorizedReader",
         vectorized.toString)
       val t0 = System.nanoTime()
-      val scan = new GraftBatchScan(snap, store, schema, Array.empty)
+      val scan = new LakeScan(snap, store, schema, Array.empty, fileFilter = true)
       val parts = scan.planInputPartitions()
       val factories = parts.map(_ => scan.createReaderFactory())
       val pool = java.util.concurrent.Executors.newFixedThreadPool(

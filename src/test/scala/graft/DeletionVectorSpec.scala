@@ -104,23 +104,20 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("COW UPDATE reads through the vector on both driver-cap paths") {
-    Seq("100000", "0").foreach { cap =>
-      spark.conf.set(PositionDeletes.DriverTupleCapKey, cap)
-      try {
-        val live = sql("SELECT count(*) FROM dv.d.t").collect().head.getLong(0)
-        // ids 500..509 are alive; 1000..1009 are vector-deleted — the COW
-        // rewrite must update the former and NOT resurrect the latter
-        sql("UPDATE dv.d.t SET v = -1 WHERE id BETWEEN 500 AND 509")
-        val updated = sql("SELECT count(*) FROM dv.d.t WHERE v = -1")
-          .collect().head.getLong(0)
-        assert(updated == 10L, s"cap=$cap: updated $updated rows, want 10")
-        assert(sql("SELECT count(*) FROM dv.d.t WHERE id BETWEEN 1000 AND 1009")
-          .collect().head.getLong(0) == 0L, s"cap=$cap: resurrected rows")
-        assert(sql("SELECT count(*) FROM dv.d.t").collect().head.getLong(0)
-          == live, s"cap=$cap: row count drifted")
-        sql("UPDATE dv.d.t SET v = id WHERE v = -1") // restore for next loop
-      } finally spark.conf.unset(PositionDeletes.DriverTupleCapKey)
-    }
+    // one path since the driver tuple cap is gone: readers always load
+    // their own vector slices
+    val live = sql("SELECT count(*) FROM dv.d.t").collect().head.getLong(0)
+    // ids 500..509 are alive; 1000..1009 are vector-deleted — the COW
+    // rewrite must update the former and NOT resurrect the latter
+    sql("UPDATE dv.d.t SET v = -1 WHERE id BETWEEN 500 AND 509")
+    val updated = sql("SELECT count(*) FROM dv.d.t WHERE v = -1")
+      .collect().head.getLong(0)
+    assert(updated == 10L, s"updated $updated rows, want 10")
+    assert(sql("SELECT count(*) FROM dv.d.t WHERE id BETWEEN 1000 AND 1009")
+      .collect().head.getLong(0) == 0L, "resurrected rows")
+    assert(sql("SELECT count(*) FROM dv.d.t").collect().head.getLong(0)
+      == live, "row count drifted")
+    sql("UPDATE dv.d.t SET v = id WHERE v = -1") // restore
   }
 
   test("COW rewrite keeps a partially-surviving vector in blob form") {
@@ -204,9 +201,9 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     def scanOf(t: String) = {
       val st = store(t)
       val snap = st.head().get
-      val scan = new GraftBatchScan(snap, st,
+      val scan = new LakeScan(snap, st,
         StructType(snap.schema.fields :+ StructField("_file", StringType)),
-        Array.empty)
+        Array.empty, fileFilter = true)
       (scan.planInputPartitions(), scan.createReaderFactory())
     }
     // dv.d.t: rewrite_deletes folded everything earlier — clean snapshot

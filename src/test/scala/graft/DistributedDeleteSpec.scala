@@ -7,11 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake._
 
-/** Pins the round-3 scale fix: COW rewrite planning must not materialize
-  * delete tuples on the driver beyond `graft.cow.driver-tuple-cap`.
-  * Above the cap, InputPartitions carry the COVERING DELETE FILES (each
-  * reader loads its own positions executor-side); equality deletes apply
-  * by executor-side key probing in every case. */
+/** Pins the round-3 scale fix: COW rewrite planning never materializes
+  * delete tuples on the driver. InputPartitions carry the COVERING DELETE
+  * FILES (each reader loads its own positions executor-side); equality
+  * deletes apply by executor-side key probing. */
 class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val wh = Files.createTempDirectory("graft-ddel-wh").toString
@@ -29,13 +28,9 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     sql("CREATE NAMESPACE IF NOT EXISTS ddel.t")
   }
 
-  private def withCap[T](cap: Long)(body: => T): T = {
-    spark.conf.set(PositionDeletes.DriverTupleCapKey, cap.toString)
-    try body
-    finally spark.conf.unset(PositionDeletes.DriverTupleCapKey)
-  }
-
   test("above the cap, COW partitions carry delete files, not positions") {
+    // checks: the plan names covering delete files, never positions,
+    // and readers load their own positions
     sql("""CREATE TABLE ddel.t.cap (id INT, v STRING) USING iceberg
            TBLPROPERTIES ('graft.delete-mode'='merge-on-read')""")
     sql("INSERT INTO ddel.t.cap VALUES (1,'a'),(2,'b'),(3,'c')")
@@ -45,27 +40,27 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val snap = store.head().get
     assert(snap.deleteFiles.nonEmpty &&
       snap.deleteFiles.forall(_.kind == "position"))
-    withCap(0) {
-      val scan = new GraftBatchScan(snap, store, snap.schema, Array.empty)
-      val parts = scan.planInputPartitions()
-        .map(_.asInstanceOf[GraftInputPartition])
-      // the cap=0 plan must not hold a single tuple on the driver
-      assert(parts.forall(_.deletedPositions.isEmpty),
-        "driver-built position index above the cap")
-      // soundness: every file referenced by a tuple gets its delete files
-      val referenced =
-        PositionDeletes.referencedFileNames(spark, store, snap.deleteFiles)
-      val covered = parts
-        .filter(_.posDeleteFiles.nonEmpty)
-        .map(p => PositionDeletes.fileName(p.filePath)).toSet
-      assert(referenced.subsetOf(covered),
-        s"referenced $referenced not covered by $covered")
-      // end-to-end through the real COW path (UPDATE rewrites via this scan)
-      sql("UPDATE ddel.t.cap SET v = concat(v, '!') WHERE id <= 10")
-      val rows = sql("SELECT id, v FROM ddel.t.cap ORDER BY id")
-        .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-      assert(rows == Seq((1, "a!"), (10, "x!"), (11, "y")), s"got $rows")
-    }
+    val scan = new LakeScan(snap, store, snap.schema, Array.empty,
+      fileFilter = true)
+    val parts = scan.planInputPartitions()
+      .map(_.asInstanceOf[GraftInputPartition])
+    // the plan must not hold a single tuple on the driver: partitions
+    // name delete FILES, never positions
+    assert(parts.forall(_.deletes.forall(_.isInstanceOf[TupleRef])),
+      "partition carries something other than covering tuple files")
+    // soundness: every file referenced by a tuple gets its delete files
+    val referenced =
+      PositionDeletes.referencedFileNames(spark, store, snap.deleteFiles)
+    val covered = parts
+      .filter(_.deletes.nonEmpty)
+      .map(p => PositionDeletes.fileName(p.filePath)).toSet
+    assert(referenced.subsetOf(covered),
+      s"referenced $referenced not covered by $covered")
+    // end-to-end through the real COW path (UPDATE rewrites via this scan)
+    sql("UPDATE ddel.t.cap SET v = concat(v, '!') WHERE id <= 10")
+    val rows = sql("SELECT id, v FROM ddel.t.cap ORDER BY id")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(rows == Seq((1, "a!"), (10, "x!"), (11, "y")), s"got $rows")
   }
 
   test("equality deletes apply executor-side through the COW scan") {
@@ -74,17 +69,17 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     sql("INSERT INTO ddel.t.eqcow VALUES (1,'a'),(2,'b'),(3,'c')")
     val store = new SnapshotStore(Paths.get(wh, "t", "eqcow"))
     Upsert.into(spark, store, Seq((2, "b2"), (4, "d")).toDF("k", "v"), Seq("k"))
-    withCap(0) {
-      // the rewrite scan must drop the eq-deleted (2,'b') by key probing —
-      // never by a driver-side conversion of keys to row positions
-      sql("UPDATE ddel.t.eqcow SET v = upper(v) WHERE k >= 2")
-      val rows = sql("SELECT k, v FROM ddel.t.eqcow ORDER BY k, v")
-        .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-      assert(rows == Seq((1, "a"), (2, "B2"), (3, "C"), (4, "D")), s"got $rows")
-    }
+    // the rewrite scan must drop the eq-deleted (2,'b') by key probing —
+    // never by a driver-side conversion of keys to row positions
+    sql("UPDATE ddel.t.eqcow SET v = upper(v) WHERE k >= 2")
+    val rows = sql("SELECT k, v FROM ddel.t.eqcow ORDER BY k, v")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(rows == Seq((1, "a"), (2, "B2"), (3, "C"), (4, "D")), s"got $rows")
   }
 
   test("mixed position + equality backlog: COW rewrite stays correct at cap 0") {
+    // checks: a rewrite over position tuples and an equality delete, with
+    // readers loading their own positions and probing keys
     import spark.implicits._
     sql("""CREATE TABLE ddel.t.mixed (k INT, v STRING) USING iceberg
            TBLPROPERTIES ('graft.delete-mode'='merge-on-read')""")
@@ -92,12 +87,10 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     sql("DELETE FROM ddel.t.mixed WHERE k = 1 OR k = 4") // positional tuples
     val store = new SnapshotStore(Paths.get(wh, "t", "mixed"))
     Upsert.into(spark, store, Seq((3, "c2")).toDF("k", "v"), Seq("k"))
-    withCap(0) {
-      sql("UPDATE ddel.t.mixed SET v = concat(v, '+') WHERE k >= 0")
-      val rows = sql("SELECT k, v FROM ddel.t.mixed ORDER BY k, v")
-        .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-      assert(rows == Seq((2, "b+"), (3, "c2+")), s"got $rows")
-    }
+    sql("UPDATE ddel.t.mixed SET v = concat(v, '+') WHERE k >= 0")
+    val rows = sql("SELECT k, v FROM ddel.t.mixed ORDER BY k, v")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(rows == Seq((2, "b+"), (3, "c2+")), s"got $rows")
   }
 
   test("equality probe matches -0.0 keys like the SQL join does") {
@@ -126,13 +119,11 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
            SELECT CAST(id AS INT), concat('v', id) FROM range(1000)""")
     sql("DELETE FROM ddel.t.fold WHERE id = 5 OR id = 7 OR id = 500")
     val store = new SnapshotStore(Paths.get(wh, "t", "fold"))
-    withCap(0) {
-      val snap = Maintenance.rewriteDeletes(spark, store)
-      assert(snap.deleteFiles.isEmpty)
-      assert(sql("SELECT count(*) FROM ddel.t.fold")
-        .collect()(0).getLong(0) == 997L)
-      assert(sql("SELECT count(*) FROM ddel.t.fold WHERE id IN (5,7,500)")
-        .collect()(0).getLong(0) == 0L)
-    }
+    val snap = Maintenance.rewriteDeletes(spark, store)
+    assert(snap.deleteFiles.isEmpty)
+    assert(sql("SELECT count(*) FROM ddel.t.fold")
+      .collect()(0).getLong(0) == 997L)
+    assert(sql("SELECT count(*) FROM ddel.t.fold WHERE id IN (5,7,500)")
+      .collect()(0).getLong(0) == 0L)
   }
 }

@@ -85,4 +85,17 @@ class ExactJaccardPlanSpec extends SparkSpec {
         e.getMessage)
     } finally spark.conf.unset(key)
   }
+
+  test("a malformed stream state-partition count fails naming the key and the value") {
+    val key = "graft.stream.state-partitions"
+    spark.conf.set(key, "four")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        graft.streaming.Streams.runToMemory(spark,
+          spark.readStream.format("rate").load(), "bad_state_parts")
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("'four'"),
+        e.getMessage)
+    } finally spark.conf.unset(key)
+  }
 }

@@ -62,9 +62,14 @@ class ObjectStoreLakeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val eu = sql("SELECT id FROM osc.d.pt WHERE region = 'eu' ORDER BY id")
       .collect().map(_.getInt(0)).toSeq
     assert(eu == Seq(1, 2))
-    // dynamic partition overwrite replaces ONLY the touched partition
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    sql("INSERT OVERWRITE osc.d.pt VALUES (9, 'eu', 90)")
+    // dynamic partition overwrite replaces ONLY the touched partition;
+    // the session setting is restored so later suites in this JVM keep
+    // the static default
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try sql("INSERT OVERWRITE osc.d.pt VALUES (9, 'eu', 90)")
+    finally spark.conf.set(key, prev)
     val after = sql("SELECT id, region FROM osc.d.pt ORDER BY id")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(after == Seq((3, "us"), (4, "ap"), (9, "eu")), s"got $after")

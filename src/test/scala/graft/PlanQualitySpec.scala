@@ -99,10 +99,10 @@ class PlanQualitySpec extends SparkSpec {
     assert(bytes < 100L * 1024 * 1024, s"lake table reports $bytes bytes")
   }
 
-  test("merge-on-read scan applies deletes via a BROADCAST anti-join") {
-    // the delete side is KB-sized; if the anti-join ever degrades to a
-    // shuffled join, reading a 100 TB MOR table would shuffle the full
-    // data side just to subtract a handful of tuples
+  test("merge-on-read scan applies deletes inside the reader: no join, no shuffle") {
+    // the reader skips deleted positions itself; a join (broadcast or
+    // shuffled) against the tuple set would put delete application, and
+    // for a 100 TB MOR table a shuffle of the data side, into every read
     SparkEntry.queries("q_lake_roundtrip")(spark, sf) // registers the catalog
     spark.sql("DROP TABLE IF EXISTS graft.verify.planq_mor")
     spark.sql("""CREATE TABLE graft.verify.planq_mor (id INT, v INT)
@@ -113,25 +113,15 @@ class PlanQualitySpec extends SparkSpec {
     spark.sql("DELETE FROM graft.verify.planq_mor WHERE id = 1 OR id = 3")
     val df = spark.table("graft.verify.planq_mor")
     assert(df.collect().map(_.getInt(0)).toSeq == Seq(2))
-    // the anti-join lives INSIDE the V1 bridge's delegated DataFrame (the
-    // outer plan shows only the relation scan) — inspect the same
-    // composition the bridge builds
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val store = new graft.lake.SnapshotStore(
       java.nio.file.Paths.get(wh, "verify", "planq_mor"))
     val head = store.head().get
     assert(head.deleteFiles.nonEmpty, "positional tuples must be pending")
-    val inner = graft.lake.PositionDeletes.applySnapshotDeletes(spark, store,
-      graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
-        head.files),
-      head)
-    val p = inner.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("LeftAnti"), s"no anti-join in MOR scan plan:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"MOR delete application is not broadcast:\n$p")
-    assert(!p.matches("(?s).*SortMergeJoin.*LeftAnti.*"),
-      s"MOR delete anti-join shuffles the data side:\n$p")
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("with-deletes="), s"scan plans no delete-applying file:\n$p")
+    assert(!p.contains("Join"), s"MOR delete application joins:\n$p")
+    assert(!p.contains("Exchange"), s"MOR scan shuffles:\n$p")
   }
 
   test("domain mixture keeps the weights dim broadcast and the corpus unshuffled") {
@@ -328,37 +318,40 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
-  test("MOR anti-join falls back to shuffle past the broadcast cap") {
+  test("CDC delete join falls back to shuffle past the broadcast cap") {
     // a delete backlog bigger than executor memory must NOT be pinned to
     // a broadcast build: past graft.mor.broadcast-max-bytes the hint is
-    // withheld and the planner's shuffled join applies
+    // withheld and the planner's shuffled join applies. The cap governs
+    // only CDC's "which rows did this commit delete"; reads apply deletes
+    // in the reader.
     SparkEntry.queries("q_lake_roundtrip")(spark, sf) // registers the catalog
     spark.sql("DROP TABLE IF EXISTS graft.verify.planq_morcap")
     spark.sql("""CREATE TABLE graft.verify.planq_morcap (id INT, v INT)
                  USING graft
                  TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
     spark.sql("INSERT INTO graft.verify.planq_morcap VALUES (1,1),(2,2),(3,3)")
-    spark.sql("DELETE FROM graft.verify.planq_morcap WHERE id = 1 OR id = 3")
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val store = new graft.lake.SnapshotStore(
       java.nio.file.Paths.get(wh, "verify", "planq_morcap"))
+    val before = store.currentVersion().get
+    spark.sql("DELETE FROM graft.verify.planq_morcap WHERE id = 1 OR id = 3")
     val head = store.head().get
     assert(head.deleteFiles.nonEmpty)
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set(graft.lake.PositionDeletes.BroadcastMaxBytesKey, "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val inner = graft.lake.PositionDeletes.applySnapshotDeletes(spark, store,
-        graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
-          head.files),
-        head)
-      val p = inner.queryExecution
+      val deleted = graft.lake.Changes.between(spark, store, before, head.version)
+      val p = deleted.queryExecution
         .explainString(ExplainMode.fromString("formatted"))
-      assert(p.contains("LeftAnti"), s"no anti-join:\n$p")
+      assert(p.contains("LeftSemi"), s"no delete join:\n$p")
       assert(!p.contains("BroadcastHashJoin"),
-        s"anti-join still broadcast past the cap:\n$p")
+        s"delete join still broadcast past the cap:\n$p")
+      assert(deleted.select("id").collect().map(_.getInt(0)).sorted.toSeq ==
+        Seq(1, 3))
       // correctness is unchanged on the shuffle path
-      assert(inner.select("id").collect().map(_.getInt(0)).toSeq == Seq(2))
+      assert(spark.table("graft.verify.planq_morcap").select("id")
+        .collect().map(_.getInt(0)).toSeq == Seq(2))
     } finally {
       spark.conf.unset(graft.lake.PositionDeletes.BroadcastMaxBytesKey)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)

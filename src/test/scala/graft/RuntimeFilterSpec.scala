@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lake._
 
 /** Dynamic file pruning on the hot vectorized scan
-  * (GraftVectorScan + SupportsRuntimeV2Filtering): a fact scan joined to
+  * (LakeScan + SupportsRuntimeV2Filtering): a fact scan joined to
   * a FILTERED broadcast dimension receives the dimension's join-key
   * values at runtime and opens only the files whose partition values /
   * stats can match — Spark's dynamic-partition-pruning flow, acting at
@@ -41,10 +41,10 @@ class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** The graft vector scans in the executed plan (deep: AQE stages). */
-  private def vectorScans(p: SparkPlan): Seq[GraftVectorScan] =
+  private def vectorScans(p: SparkPlan): Seq[LakeScan] =
     PlanWalk.deepCollect(p) {
-      case b: BatchScanExec if b.scan.isInstanceOf[GraftVectorScan] =>
-        b.scan.asInstanceOf[GraftVectorScan]
+      case b: BatchScanExec if b.scan.isInstanceOf[LakeScan] =>
+        b.scan.asInstanceOf[LakeScan]
     }
 
   override def beforeAll(): Unit = {

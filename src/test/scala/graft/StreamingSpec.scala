@@ -156,11 +156,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, Long, Double)]
     def readAll(): Map[Long, (Long, Double)] = {
       val head = store.head().get
-      val df = graft.lake.PositionDeletes.applySnapshotDeletes(spark,
-        store,
-        graft.lake.SchemaNames.readLogicalWithProvenance(spark, store, head.schema,
-          head.files),
-        head)
+      val df = graft.lake.GraftTable.liveRows(spark, store, head, head.files)
       df.select("user_id", "seq_no", "value").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     }
