@@ -51,8 +51,8 @@ object Changes {
     val netEffective = net && !schema.fields.exists(f => hasMap(f.dataType))
     val versions = all.filter(v => v > fromVersion && v <= toVersion).sorted
 
-    /** Read `files` as LIVE rows under `asOf`'s deletes (merge-on-read
-      * position tuples and equality keys subtracted) — a file-set diff
+    /** Read `files` as LIVE rows under `asOf`'s deletes (deletion
+      * vectors and equality keys subtracted) — a file-set diff
       * names changed files, but the rows a reader actually saw at a
       * version exclude its pending deletes. */
     def readFiles(files: Seq[DataFile], asOf: Snapshot): DataFrame =
@@ -76,37 +76,20 @@ object Changes {
       val added = snap.files.filterNot(f => parentSet.contains(f.path))
       val removed = parentFiles.filterNot(f => curSet.contains(f.path))
       // a merge-on-read DELETE changes no data file — its changed rows are
-      // named by the NEW delete files: position tuples are read back
-      // directly; equality keys are resolved to rows live at the PARENT
-      // (an equality delete is written blind, so its keys may also hit
-      // rows that were already deleted — those must not be re-emitted)
-      val parentDelSet = parentDeletes.map(_.path).toSet
-      val newDeleteFiles = snap.deleteFiles.filterNot(f => parentDelSet.contains(f.path))
-      // Position tuples diff at TUPLE level, not file level: retain()
-      // rewrites the surviving tuples of every tuple file a COW/compact
-      // commit touches into NEW files, so a path diff would re-emit
-      // long-deleted rows as fresh deletes. exceptAll against the parent's tuples leaves exactly the
-      // tuples this commit ADDED (both sides are KB-sized by design).
-      val newPosTuples: Option[DataFrame] =
-        (PositionDeletes.tuples(spark, store,
-            newDeleteFiles.filter(_.positional)),
-          PositionDeletes.tuples(spark, store, parentDeletes)) match {
-          case (None, _) => None
-          case (Some(n), None) => Some(n)
-          case (Some(n), Some(p)) => Some(n.exceptAll(p))
-        }
+      // named by its delete entries: a changed deletion vector deletes the
+      // positions it holds beyond the parent's vector OF THE SAME FILE (a
+      // vector an unrelated commit kept unchanged is no change); equality
+      // keys are resolved to rows live at the PARENT (an equality delete
+      // is written blind, so its keys may also hit rows that were already
+      // deleted — those must not be re-emitted)
+      val parentIds = parentDeletes.map(_.id).toSet
+      val newDeleteFiles = snap.deleteFiles.filterNot(d => parentIds.contains(d.id))
       val morDeletedPos: Option[DataFrame] =
-        newPosTuples.flatMap { t =>
-          // only the files the tuples actually name are read — a commit
-          // deleting rows from one file of a 10k-file table opens one
-          // file. No cache: tuple files are KB-sized, so the two passes
-          // (names here, join below) are cheaper than a pinned cache
-          // entry per changed version in a long-lived session.
-          val touchedNames = t
-            .select(PositionDeletes.NameCol).distinct()
-            .collect().map(_.getString(0)).toSet
-          val touched = snap.files.filter(f =>
-            touchedNames.contains(PositionDeletes.fileName(f.path)))
+        PositionDeletes.addedPositions(spark, store, snap, parent).flatMap { t =>
+          // only the files whose vectors changed are read — a commit
+          // deleting rows from one file of a 10k-file table opens one file
+          val changed = newDeleteFiles.flatMap(_.referencedDataFile).toSet
+          val touched = snap.files.filter(f => changed.contains(f.path))
           if (touched.isEmpty) None
           else {
             val data = SchemaNames.readLogicalWithProvenance(spark, store,

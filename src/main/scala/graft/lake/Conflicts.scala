@@ -15,12 +15,14 @@ import org.apache.spark.sql.sources.Filter
   *
   *  1. schema, partition spec, CHECKs, generated or identity columns
   *     changed;
-  *  2. a data file the statement read or replaces, or a delete file it
+  *  2. a data file the statement read or replaces, or a delete entry it
   *     replaces, is no longer live;
-  *  3. a delete file added or removed since `base` may apply to a data
-  *     file the statement read — position files by their footer
-  *     `file_path` range, deletion vectors by their index, equality files
-  *     by their key values against the data file's stats;
+  *  3. a delete entry added or removed since `base` may apply to a data
+  *     file the statement read — a deletion vector when it refers to that
+  *     file, an equality file by its key values against the file's stats.
+  *     So two merge-on-read DELETEs of one data file serialize (each
+  *     writes the union of that file's vector) and DELETEs of different
+  *     files rebase;
   *  4. a data file added since `base` might match the statement's pushed
   *     filter (any added file, when it pushed none — a MERGE whose only
   *     target predicate is its join stays serializable). Compaction and
@@ -29,8 +31,9 @@ import org.apache.spark.sql.sources.Filter
   * A rule that fires aborts with "concurrent commit ..." (callers re-run
   * the statement, which re-plans on the new head). Otherwise the commit
   * is `head` with the statement's own edits: head's files minus the
-  * replaced ones plus the new ones, head's delete files minus the ones
-  * the statement replaced plus the ones it wrote.
+  * replaced ones plus the new ones, head's delete entries minus the ones
+  * the statement replaced plus the ones it wrote. Delete entries are
+  * matched by [[DeleteFile.id]]: the vectors of one blob share its path.
   */
 object Conflicts {
 
@@ -39,8 +42,8 @@ object Conflicts {
     * @param read           data files whose rows the statement read
     * @param replaced       data files the commit removes
     * @param added          data files the commit adds
-    * @param deletesRemoved delete files the commit removes
-    * @param deletesAdded   delete files the commit adds
+    * @param deletesRemoved delete entries the commit removes
+    * @param deletesAdded   delete entries the commit adds
     * @param filter         the statement's pushed filters over PHYSICAL
     *                       column names, for rule 4; None skips rule 4 */
   final case class Footprint(
@@ -52,17 +55,13 @@ object Conflicts {
       deletesAdded: Seq[DeleteFile] = Seq.empty,
       filter: Option[Seq[Filter]] = None) {
 
-    /** This footprint with `base`'s delete files replaced by `kept` (the
-      * output of [[PositionDeletes.retain]]): entries of `base` missing
-      * from `kept` are removed, entries of `kept` new to `base` added. */
+    /** This footprint with `base`'s delete entries narrowed to `kept`
+      * (the output of [[PositionDeletes.retain]]): entries of `base`
+      * missing from `kept` are removed. */
     def retaining(kept: Seq[DeleteFile]): Footprint = {
-      val before = base.deleteFiles.map(_.path).toSet
-      val after = kept.map(_.path).toSet
-      copy(
-        deletesRemoved = deletesRemoved ++
-          base.deleteFiles.filterNot(d => after.contains(d.path)),
-        deletesAdded = deletesAdded ++
-          kept.filterNot(d => before.contains(d.path)))
+      val after = kept.map(_.id).toSet
+      copy(deletesRemoved = deletesRemoved ++
+        base.deleteFiles.filterNot(d => after.contains(d.id)))
     }
   }
 
@@ -78,7 +77,7 @@ object Conflicts {
             s"(planned on v${fp.base.version}, head is v${head.version}); retry")
       }
     val gone = fp.replaced.map(_.path).toSet
-    val goneDeletes = fp.deletesRemoved.map(_.path).toSet
+    val goneDeletes = fp.deletesRemoved.map(_.id).toSet
     head.copy(
       timestampMs = System.currentTimeMillis(),
       // an edit-free commit passes head's list through by reference, so a
@@ -87,7 +86,7 @@ object Conflicts {
         if (gone.isEmpty && fp.added.isEmpty) head.files
         else head.files.filterNot(f => gone.contains(f.path)) ++ fp.added,
       deleteFiles =
-        head.deleteFiles.filterNot(d => goneDeletes.contains(d.path)) ++
+        head.deleteFiles.filterNot(d => goneDeletes.contains(d.id)) ++
           fp.deletesAdded)
   }
 
@@ -98,8 +97,8 @@ object Conflicts {
     def unversioned(s: Snapshot) = s.identity.map { case (c, id) =>
       c -> id.copy(lastValue = None) }
     val live = head.files.iterator.map(_.path).toSet
-    val liveDeletes = head.deleteFiles.map(_.path).toSet
-    val baseDeletes = base.deleteFiles.map(_.path).toSet
+    val liveDeletes = head.deleteFiles.map(_.id).toSet
+    val baseDeletes = base.deleteFiles.map(_.id).toSet
     def rule1 = Option.when(head.schemaJson != base.schemaJson ||
         head.partitionSpec != base.partitionSpec || head.checks != base.checks ||
         head.generated != base.generated || unversioned(head) != unversioned(base))(
@@ -107,12 +106,12 @@ object Conflicts {
     def rule2 =
       (fp.read ++ fp.replaced).find(f => !live.contains(f.path))
         .map(f => s"rule 2: data file ${f.path} is no longer live")
-        .orElse(fp.deletesRemoved.find(d => !liveDeletes.contains(d.path))
+        .orElse(fp.deletesRemoved.find(d => !liveDeletes.contains(d.id))
           .map(d => s"rule 2: delete file ${d.path} is no longer live"))
     def rule3 = {
       val changed =
-        head.deleteFiles.filterNot(d => baseDeletes.contains(d.path)) ++
-          base.deleteFiles.filterNot(d => liveDeletes.contains(d.path))
+        head.deleteFiles.filterNot(d => baseDeletes.contains(d.id)) ++
+          base.deleteFiles.filterNot(d => liveDeletes.contains(d.id))
       if (fp.read.isEmpty) None
       else changed.iterator.flatMap(d => fp.read.find(mayApply(store, head, d))
           .map(f => s"rule 3: delete file ${d.path} may apply to ${f.path}"))
@@ -127,9 +126,9 @@ object Conflicts {
     rule1.orElse(rule2).orElse(rule3).orElse(rule4)
   }
 
-  /** Which data files can delete file `d` remove rows of? The scan's own
-    * answer ([[PositionDeletes.applicable]]). Conservative: metadata that
-    * cannot be read answers "every file". */
+  /** Which data files can delete entry `d` remove rows of? The scan's own
+    * answer ([[PositionDeletes.applicable]]); no IO for a vector.
+    * Conservative: metadata that cannot be read answers "every file". */
   private def mayApply(store: SnapshotStore, head: Snapshot,
       d: DeleteFile): DataFile => Boolean =
     try {

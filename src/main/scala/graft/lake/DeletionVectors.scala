@@ -1,54 +1,38 @@
 package graft.lake
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
-import java.nio.file.Path
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deletion vectors: N stacked position-delete tuple files consolidated
-  * into ONE blob holding a compact bitmap of deleted positions PER DATA
-  * FILE (Iceberg v3's deletion-vector design; roaring-style containers).
+/** Deletion vectors, the one position-delete form: the deleted row
+  * positions of one data file as a compact bitmap (Iceberg v3's
+  * deletion-vector design; roaring-style containers). A table keeps at
+  * most one vector per data file, recorded in the snapshot as its own
+  * [[DeleteFile]] entry (referenced data file, offset, length,
+  * cardinality), so a reader's delete work is O(1) per data file: one
+  * lookup in the snapshot and one ranged read of its own slice. A
+  * merge-on-read DELETE ([[write]]) reads the live vector of each file it
+  * hits, ORs in the new positions and publishes one blob per commit.
   *
-  * Why this exists at scale: every MOR DELETE appends a tuple parquet
-  * file, so K stacked deletes make every subsequent read open K files
-  * and re-shuffle their union. `rewrite_delete_vectors` folds the
-  * backlog into one structure with O(1) read work per data file — an
-  * index lookup plus one ranged read for exactly this file's bitmap —
-  * WITHOUT rewriting any data file (that heavier fold stays
-  * `rewrite_deletes`).
-  *
-  * Blob layout (single file `data/<uuid>-dv.bin`):
+  * Blob layout (single file `data/<uuid>-dv.bin`; the snapshot entries are
+  * its only index):
   * {{{
-  *   "GDV1"                      magic
-  *   int32  numFiles
-  *   per file (index section, sorted by name):
-  *     int16  nameLen, UTF-8 name bytes (data file NAME, not path)
-  *     int64  cardinality
-  *     int64  payloadOffset     absolute within blob
-  *     int32  payloadLength
-  *   payload section: roaring-lite bitmap per file:
+  *   "GDV2"                      magic
+  *   per data file, at the entry's contentOffset, sizeBytes long:
   *     int32  numContainers
   *     per container: int32 high (pos >>> 16), int8 kind, int32 card,
   *       kind 0 (array): card × int16 low bits, ascending
   *       kind 1 (bitmap): 8192 bytes, bit i = low 16 bits == i
   * }}}
   *
-  * The index is read driver-side in one small read (O(files-with-
-  * deletes)); payloads are read with exact (offset, length) ranges by
-  * each reader of the table scan (its own file's slice only), and
-  * distributed for CDC and consolidation. Containers switch array→bitmap
-  * at 4096 entries, the roaring break-even.
+  * Containers switch array→bitmap at 4096 entries, the roaring break-even.
   */
 object DeletionVectors {
 
   val Kind = "dv"
-  private val Magic = Array[Byte]('G', 'D', 'V', '1')
-
-  /** One data file's entry in a vector blob's index. */
-  final case class DvEntry(name: String, cardinality: Long,
-      offset: Long, length: Int)
+  private val Magic = Array[Byte]('G', 'D', 'V', '2')
 
   // ---------- encoding ----------
 
@@ -132,154 +116,115 @@ object DeletionVectors {
     buf.toArray
   }
 
-  // ---------- blob write ----------
+  // ---------- write ----------
 
-  /** Assemble and publish a vector blob from per-file encoded bitmaps.
-    * Returns the DeleteFile entry (seq left unassigned for the commit to
-    * stamp). Caller supplies (name, cardinality, payload) already encoded
-    * — encoding happens distributed, assembly is a driver stream whose
-    * memory is O(compressed bitmap bytes), never O(deleted rows). */
-  def writeBlob(store: SnapshotStore,
-      perFile: Seq[(String, Long, Array[Byte])]): DeleteFile = {
-    val sorted = perFile.sortBy(_._1)
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.write(Magic)
-    out.writeInt(sorted.length)
-    // index size must be known to lay out offsets: name bytes + fixed 22
-    val nameBytes = sorted.map(_._1.getBytes("UTF-8"))
-    var offset = 4L + 4L +
-      nameBytes.map(_.length + 2 + 8 + 8 + 4).map(_.toLong).sum
-    sorted.zip(nameBytes).foreach { case ((_, card, payload), nb) =>
-      out.writeShort(nb.length)
-      out.write(nb)
-      out.writeLong(card)
-      out.writeLong(offset)
-      out.writeInt(payload.length)
-      offset += payload.length
-    }
-    sorted.foreach { case (_, _, payload) => out.write(payload) }
-    out.flush()
-    val bytes = bos.toByteArray
+  /** The vectors of a merge-on-read DELETE. `hits` holds `(_file, _pos)`
+    * of the rows it deletes from `files` (live rows only, so they are
+    * disjoint from the deleted positions already recorded); `live` is the
+    * snapshot's vectors by data-file path ([[PositionDeletes.vectors]]).
+    * Each hit file's new positions and its old vector are merged and
+    * encoded distributed (groupByKey per data file, positions sorted in
+    * the shuffle); the driver only streams the encoded bitmaps into one
+    * blob. Returns one entry per hit file, each replacing that file's entry
+    * in `live`; empty when nothing was hit. */
+  def write(spark: SparkSession, store: SnapshotStore, files: Seq[DataFile],
+      hits: DataFrame, live: Map[String, DeleteFile]): Seq[DeleteFile] = {
+    import spark.implicits._
+    def abs(p: String) = store.tableDir.resolve(p).toString
+    val relPath = files.map(f => abs(f.path) -> f.path).toMap
+    val oldSlices: Map[String, (String, Long, Int)] = files.flatMap(f =>
+      live.get(f.path).map(d => abs(f.path) ->
+        (abs(d.path), d.contentOffset, d.sizeBytes.toInt))).toMap
+    val perFile = hits
+      .select(col(GraftTable.FileCol).as("f"), col(GraftTable.PosCol).as("p"))
+      .as[(String, Long)]
+      .groupByKey(_._1)
+      .flatMapSortedGroups(col("p").asc) { (file, it) =>
+        val fresh = it.map(_._2)
+        val all = oldSlices.get(file) match {
+          case None => fresh
+          case Some((blob, off, len)) =>
+            mergeSorted(readPositions(blob, off, len).iterator.buffered, fresh.buffered)
+        }
+        val (card, payload) = encodeSorted(all)
+        Iterator.single((file, card, payload))
+      }
+      .collect()
+      .toSeq
+    if (perFile.isEmpty) Seq.empty
+    else writeBlob(store, perFile.map { case (f, card, payload) =>
+      (relPath(f), card, payload) })
+  }
+
+  private def mergeSorted(a: BufferedIterator[Long],
+      b: BufferedIterator[Long]): Iterator[Long] = new Iterator[Long] {
+    def hasNext: Boolean = a.hasNext || b.hasNext
+    def next(): Long =
+      if (!b.hasNext || (a.hasNext && a.head <= b.head)) a.next() else b.next()
+  }
+
+  /** Publish one blob from `(data-file path, cardinality, payload)` per
+    * file through the [[MetaIO]] seam, returning one entry per file (seq
+    * left unassigned for the commit to stamp). Assembly is a driver
+    * stream whose memory is O(compressed bitmap bytes), never O(deleted
+    * rows). */
+  private def writeBlob(store: SnapshotStore,
+      perFile: Seq[(String, Long, Array[Byte])]): Seq[DeleteFile] = {
     val name = s"${UUID.randomUUID()}-dv.bin"
-    val target = store.dataDir.resolve(name)
+    val bos = new ByteArrayOutputStream()
+    bos.write(Magic)
+    val entries = perFile.sortBy(_._1).map { case (dataFile, card, payload) =>
+      val offset = bos.size().toLong
+      bos.write(payload)
+      DeleteFile(s"data/$name", card, payload.length.toLong, kind = Kind,
+        seq = Snapshot.UnassignedSeq, referencedDataFile = Some(dataFile),
+        contentOffset = offset)
+    }
     val staging = store.tableDir.resolve(s".staging-dv-${UUID.randomUUID()}")
     store.io.mkdirs(staging)
     val tmp = staging.resolve(name)
     try {
-      store.io.writeBytes(tmp, bytes)
-      store.io.publish(tmp, target)
+      store.io.writeBytes(tmp, bos.toByteArray)
+      store.io.publish(tmp, store.dataDir.resolve(name))
     } finally store.io.deleteTree(staging)
-    DeleteFile(s"data/$name", sorted.map(_._2).sum, bytes.length.toLong,
-      kind = Kind, seq = Snapshot.UnassignedSeq)
+    entries
   }
 
-  // ---------- blob read ----------
+  // ---------- read ----------
 
-  /** Index of a vector blob — one bounded read, O(files-with-deletes). */
-  def readIndex(store: SnapshotStore, d: DeleteFile): Seq[DvEntry] =
-    readIndex(store.tableDir.resolve(d.path))
-
-  // blob reads go through Hadoop's FileSystem (no java.nio local-FS
-  // assumption), with the JVM-cached session conf so `spark.hadoop.*`
-  // settings reach them like they reach parquet scans — and so the hot
-  // per-slice path never re-parses Hadoop's XML defaults. Blob WRITES go
-  // through the MetaIO seam, so an alternate backend intercepts them.
-  private def openBlob(blobPath: String): org.apache.hadoop.fs.FSDataInputStream = {
+  /** One file's positions, sorted: an exact ranged read of its slice.
+    * Blob reads go through Hadoop's FileSystem (no java.nio local-FS
+    * assumption), with the JVM-cached session conf so `spark.hadoop.*`
+    * settings reach them like they reach parquet scans. */
+  def readPositions(blobPath: String, offset: Long, length: Int): Array[Long] = {
     val hp = new org.apache.hadoop.fs.Path(blobPath)
-    hp.getFileSystem(LakeIOConf.conf).open(hp)
+    val in = hp.getFileSystem(LakeIOConf.conf).open(hp)
+    val buf = new Array[Byte](length)
+    try in.readFully(offset, buf) // positioned read: one ranged request
+    finally in.close()
+    decodeBitmap(buf)
   }
 
-  def readIndex(p: Path): Seq[DvEntry] = {
-    val in = openBlob(p.toString)
-    try {
-      val magic = new Array[Byte](4)
-      in.readFully(magic)
-      require(magic.sameElements(Magic), s"not a deletion-vector blob: $p")
-      val n = in.readInt()
-      (0 until n).map { _ =>
-        val nameLen = in.readShort() & 0xFFFF
-        val nb = new Array[Byte](nameLen)
-        in.readFully(nb)
-        DvEntry(new String(nb, "UTF-8"), in.readLong(), in.readLong(),
-          in.readInt())
-      }
-    } finally in.close()
-  }
-
-  /** One file's positions via an exact ranged read of its payload. */
-  def readPositions(blobPath: String, offset: Long, length: Int): Array[Long] =
-    decodeBitmap(readPayload(blobPath, offset, length))
-
-  /** One file's RAW payload slice — for byte-for-byte copies into a new
-    * blob (see [[PositionDeletes.retain]]), which must never pay a
-    * decode/re-encode of bitmaps they don't modify. */
-  def readPayload(blobPath: String, offset: Long, length: Int): Array[Byte] = {
-    val in = openBlob(blobPath)
-    try {
-      val buf = new Array[Byte](length)
-      in.readFully(offset, buf) // positioned read: one ranged request
-      buf
-    } finally in.close()
-  }
-
-  /** All (data file name → sorted positions) pairs of `dvs`, decoded
+  /** The positions each vector of `changed` holds beyond the entry it
+    * replaced for the same data file (None: all of them), decoded
     * DISTRIBUTED as a `(NameCol, RowPosCol)` frame — the delete side of
-    * CDC and consolidation. Each task ranged-reads only its own payload
-    * slice. */
-  def tupleFrame(spark: SparkSession, store: SnapshotStore,
-      dvs: Seq[DeleteFile]): DataFrame = {
+    * CDC. Each task ranged-reads only its own two slices. */
+  def addedPositions(spark: SparkSession, store: SnapshotStore,
+      changed: Seq[(DeleteFile, Option[DeleteFile])]): DataFrame = {
     import spark.implicits._
-    val slices: Seq[(String, String, Long, Int)] = dvs.flatMap { d =>
-      val blob = store.tableDir.resolve(d.path).toString
-      readIndex(store, d).map(e => (blob, e.name, e.offset, e.length))
+    def slice(d: DeleteFile) =
+      (store.tableDir.resolve(d.path).toString, d.contentOffset, d.sizeBytes.toInt)
+    val slices = changed.map { case (d, before) =>
+      (PositionDeletes.fileName(d.referencedDataFile.get), slice(d), before.map(slice))
     }
     spark.createDataset(slices)
-      .flatMap { case (blob, name, off, len) =>
-        readPositions(blob, off, len).map(p => (name, p))
+      .flatMap { case (name, (blob, off, len), before) =>
+        val old = before.fold(Array.emptyLongArray) { case (b, o, l) =>
+          readPositions(b, o, l) }
+        readPositions(blob, off, len).iterator
+          .filter(p => java.util.Arrays.binarySearch(old, p) < 0)
+          .map(p => (name, p))
       }
       .toDF(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-  }
-
-  // ---------- consolidation ----------
-
-  /** Fold a snapshot's pending position deletes (tuple parquet files AND
-    * previous vector blobs) into ONE new vector blob. Bitmap encoding
-    * runs distributed (groupByKey per data file); the driver only
-    * streams encoded bytes into the blob. Equality deletes are untouched
-    * — they are key- not position-shaped; `rewrite_deletes` folds those.
-    * Returns None when there is nothing to consolidate. */
-  def consolidate(spark: SparkSession, store: SnapshotStore,
-      deleteFiles: Seq[DeleteFile]): Option[DeleteFile] = {
-    import spark.implicits._
-    val tuplesPos = deleteFiles.filter(_.kind == "position")
-    val dvs = deleteFiles.filter(_.kind == Kind)
-    if (tuplesPos.isEmpty && dvs.isEmpty) return None
-    var df: DataFrame = null
-    if (tuplesPos.nonEmpty) {
-      df = PositionDeletes.readTuples(spark, store, tuplesPos)
-        .select(
-          element_at(split(col(PositionDeletes.FilePathCol), "/"), -1)
-            .as(PositionDeletes.NameCol),
-          col(PositionDeletes.PosCol).as(PositionDeletes.RowPosCol))
-    }
-    if (dvs.nonEmpty) {
-      val dvDf = tupleFrame(spark, store, dvs)
-      df = if (df == null) dvDf else df.unionByName(dvDf)
-    }
-    // sorted-group streaming: Spark feeds each file's positions in order
-    // (secondary sort inside the shuffle), so the encoder never holds the
-    // position array — one container window per task, O(bitmap) output
-    val perFile = df
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapSortedGroups(col(PositionDeletes.RowPosCol).asc) { (name, it) =>
-        val (card, payload) = encodeSorted(it.map(_._2))
-        Iterator.single((name, card, payload))
-      }
-      .collect()
-      .toSeq
-    if (perFile.isEmpty) None
-    else Some(writeBlob(store, perFile))
   }
 }

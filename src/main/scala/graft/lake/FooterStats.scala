@@ -2,11 +2,8 @@ package graft.lake
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.column.statistics.Statistics
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.types._
@@ -43,15 +40,8 @@ object FooterStats {
       case _ => false
     })
 
-  /** Read (rowCount, stats for `fields`) from one local parquet file. */
-  def read(file: java.nio.file.Path, fields: Seq[StructField]): (Long, Map[String, ColumnStats]) = {
-    val in = HadoopInputFile.fromPath(new HPath(file.toUri), LakeIOConf.conf)
-    val reader = ParquetFileReader.open(in)
-    try fromFooter(reader.getFooter, fields) finally reader.close()
-  }
-
   /** (rowCount, stats for `fields`) of a footer already in memory — the
-    * one a writer just produced, or one read by [[read]]. */
+    * one a writer just produced. */
   def fromFooter(footer: ParquetMetadata, fields: Seq[StructField]): (Long, Map[String, ColumnStats]) = {
     val blocks = footer.getBlocks.asScala.toSeq
     val rowCount = blocks.map(_.getRowCount).sum

@@ -2,12 +2,6 @@ package graft.lake
 
 import java.util.OptionalLong
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, Literal, SpecificInternalRow, UnsafeProjection}
@@ -25,29 +19,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * every SELECT, every row-level rewrite (MERGE / UPDATE / DELETE) and
   * every engine read of live rows ([[GraftTable.liveRows]]).
   *
-  * Planning prunes chunk → file → identity-exact, then asks which delete
-  * files may apply to each planned file ([[PositionDeletes.applicable]],
-  * the same answer the commit check uses). When none applies to any
+  * Planning prunes chunk → file → identity-exact, then asks which deletes
+  * apply to each planned file ([[PositionDeletes.refsFor]]): its deletion
+  * vector, a lookup in the snapshot that reads no delete bytes, and the
+  * equality files whose keys its stats may hold. When none applies to any
   * planned file, the scan is Spark's packed vectorized parquet batch
   * ([[ParquetScanBridge]]). Otherwise each file is one partition, read by
   * Spark's parquet reader behind [[GraftPartitionReader]], which applies
-  * position, deletion-vector and equality deletes row by row. Readers load
-  * their own positions ([[TupleIndexCache]], the file's vector slice) and
-  * keys; equality delete files are read through the same Spark reader
-  * with the key columns' current types, so planning starts no Spark job
-  * and keys meet rows in one value domain.
+  * deletion-vector and equality deletes row by row. Readers load their own
+  * vector slice and keys; equality delete files are read through the same
+  * Spark reader with the key columns' current types, so planning starts
+  * no Spark job and keys meet rows in one value domain.
   * This is the shape of Iceberg's `SparkBatchQueryScan` + `DeleteFilter`.
   */
 
 /** One delete file as a reader applies it to one data file. */
 sealed trait DeleteRef extends Serializable
 
-/** A position tuple file of `rows` tuples whose `file_path` range covers
-  * the data file; the reader takes the tuples naming its own file
-  * ([[TupleIndexCache]]). */
-final case class TupleRef(path: String, size: Long, rows: Long) extends DeleteRef
-
-/** The data file's slice of a deletion-vector blob. */
+/** The data file's deletion vector: its slice of a blob. */
 final case class DvSlice(blob: String, offset: Long, length: Int) extends DeleteRef
 
 /** An equality delete file over `cols` (physical names) committed after
@@ -115,15 +104,13 @@ final class LakeScan(
   @volatile private[graft] var runtimePruned: Option[(Int, Int)] = None
 
   /** The deletes each planned file must apply, by data-file path (files
-    * no delete touches are absent). Driver-side metadata reads only:
-    * footer ranges, vector indexes and equality key sets. */
+    * no delete touches are absent). The only reads are equality key sets,
+    * on the driver. */
   private lazy val deletesOf: Map[String, Seq[DeleteRef]] =
     if (snapshot.deleteFiles.isEmpty) Map.empty
     else {
-      val appliers = snapshot.deleteFiles
-        .map(PositionDeletes.applicable(store, snapshot, _))
-      prunedFiles.iterator
-        .map(f => f.path -> appliers.flatMap(_(f)))
+      val refs = PositionDeletes.refsFor(store, snapshot)
+      prunedFiles.iterator.map(f => f.path -> refs(f))
         .filter(_._2.nonEmpty).toMap
     }
 
@@ -324,8 +311,8 @@ final class LakeScan(
     val physRequired = required.fields
       .filterNot(f => GraftTable.Synthetic(f.name))
       .map(rf => byPhys.getOrElse(rename.getOrElse(rf.name, rf.name), rf))
-    val refs = deletesOf.values.flatten.toSeq
-    val eqCols = refs.collect { case e: EqRef => e.cols }.distinct
+    val eqCols = deletesOf.values.flatten.collect { case e: EqRef => e.cols }
+      .toSeq.distinct
     val present = physRequired.map(_.name).toSet
     val extraEq = eqCols.flatten.distinct.filterNot(present).map(byPhys)
     val physRead = StructType(physRequired ++ extraEq)
@@ -333,9 +320,6 @@ final class LakeScan(
       ParquetScanBridge.rowReaderFactory(spark, physTable, physRead),
       physRead.json, required.json, snapshot.schema.json,
       allowColumnar = deletesOf.isEmpty,
-      posReader = Option.when(refs.exists(_.isInstanceOf[TupleRef]))(
-        ParquetScanBridge.rowReaderFactory(spark,
-          PositionDeletes.tupleSchema, PositionDeletes.tupleSchema)),
       eqReaders = eqCols.map { c =>
         val ks = PositionDeletes.keySchema(snapshot.schema, c)
         c -> ParquetScanBridge.rowReaderFactory(spark, ks, ks)
@@ -349,14 +333,17 @@ final class LakeScan(
 
   /** Snapshot-resident stats → the optimizer's broadcast decisions see real
     * sizes without touching the FS; per-column NDV from the merged HLL
-    * sketches feeds CBO when present. Position deletes remove rows the
-    * file counts still include (clamped at 0: their tuples may name files
-    * outside the pruned set). Equality-delete tuples are NOT subtracted:
-    * each key kills 0..N rows, so a tuple count is not a row count — an
+    * sketches feeds CBO when present. Each planned file's rows minus the
+    * cardinality of its own deletion vector, so the count is exact for
+    * position deletes. Equality-delete tuples are NOT subtracted: each key
+    * kills 0..N rows, so a tuple count is not a row count — an
     * overestimate is the safe direction for broadcast decisions. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = math.max(0L, prunedFiles.map(_.rowCount).sum -
-      snapshot.deleteFiles.filter(_.positional).map(_.rowCount).sum)
+    private val rows = {
+      val vectors = PositionDeletes.vectors(snapshot)
+      prunedFiles.iterator.map(f =>
+        f.rowCount - vectors.get(f.path).fold(0L)(_.rowCount)).sum
+    }
     private val bytes = prunedFiles.map(_.sizeBytes).sum
     override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(bytes, 1L))
     override def numRows(): OptionalLong = OptionalLong.of(rows)
@@ -427,7 +414,6 @@ object LakeScan {
 
 /** Reader factory of whole-file partitions (also the streaming source's).
   *
-  * @param posReader  parquet reader for position tuple files
   * @param eqReaders  parquet reader per equality key-column group, at the
   *                   columns' current types */
 final class GraftReaderFactory(
@@ -437,7 +423,6 @@ final class GraftReaderFactory(
     // on the driver would ship without its schemas
     val physReadJson: String, val requiredJson: String, val tableSchemaJson: String,
     allowColumnar: Boolean,
-    posReader: Option[PartitionReaderFactory] = None,
     eqReaders: Map[Seq[String], PartitionReaderFactory] = Map.empty)
   extends PartitionReaderFactory {
   // parsed once per (deserialized) factory instance, not once per file —
@@ -501,26 +486,13 @@ final class GraftReaderFactory(
       (e.cols.map(physRead.fieldIndex).toArray, types.toArray,
         EqDeleteTupleCache.get(e.path, e.size, types, eqReaders(e.cols)))
     }.toArray
+    // this file's deleted positions, sorted: its vector slice, read here,
+    // so no position ever reaches the driver
+    val deleted = p.deletes.collectFirst { case DvSlice(blob, offset, length) =>
+      DeletionVectors.readPositions(blob, offset, length)
+    }.getOrElse(Array.emptyLongArray)
     new GraftPartitionReader(LakeScan.fileRows(inner, p.filePath, p.fileSize),
-      p.filePath, physRead.length, required, outMap, deletedPositions(p),
-      eqProbes)
-  }
-
-  /** This file's deleted positions, sorted: the tuples naming it in the
-    * covering tuple files ∪ its vector slices. No position ever reaches
-    * the driver. */
-  private def deletedPositions(p: GraftInputPartition): Array[Long] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    p.deletes.foreach {
-      case t: TupleRef =>
-        buf ++= TupleIndexCache.positions(t, p.filePath, posReader.get)
-      case DvSlice(blob, offset, length) =>
-        buf ++= DeletionVectors.readPositions(blob, offset, length)
-      case _: EqRef =>
-    }
-    val all = buf.distinct.toArray
-    java.util.Arrays.sort(all)
-    all
+      p.filePath, physRead.length, required, outMap, deleted, eqProbes)
   }
 }
 
@@ -655,83 +627,6 @@ final class GraftPartitionReader(
   }
 
   override def close(): Unit = inner.close()
-}
-
-/** Process-local index of position tuple files: data-file name → its
-  * deleted positions, built by one read of the whole tuple file on first
-  * use, so a tuple file costs one read per JVM however many data files
-  * and scans it covers. Tuple files are immutable and UUID-named, so an
-  * entry never goes stale; an access-ordered LRU over the cached tuple
-  * count bounds memory in long-lived executors. A file of more than
-  * [[MaxFileTuples]] tuples is not indexed: each reader loads its own
-  * tuples with an exact `file_path` filter (parquet-mr row-group and page
-  * pruning over the sorted tuples), so memory stays O(own rows) however
-  * large the backlog. */
-private[graft] object TupleIndexCache {
-  private[graft] val MaxFileTuples = 256L * 1024
-  private val MaxCachedTuples = 4L * 1024 * 1024
-  private val cache = new java.util.LinkedHashMap[String, (Map[String, Array[Long]], Long)](
-    16, 0.75f, true)
-  private var cachedTuples = 0L
-
-  /** The positions tuple file `t` deletes from the data file at
-    * `dataPath`, `reader` being a Spark parquet reader of tuple files. */
-  def positions(t: TupleRef, dataPath: String,
-      reader: PartitionReaderFactory): Array[Long] = {
-    val name = "data/" + PositionDeletes.fileName(dataPath)
-    if (t.rows > MaxFileTuples) filtered(t.path, name)
-    else index(t, reader).getOrElse(name, Array.emptyLongArray)
-  }
-
-  private def index(t: TupleRef,
-      reader: PartitionReaderFactory): Map[String, Array[Long]] = {
-    val hit = cache.synchronized(cache.get(t.path))
-    if (hit != null) return hit._1
-    // racing loaders are idempotent — last put wins, both correct
-    val byName = scala.collection.mutable.HashMap.empty[String,
-      scala.collection.mutable.ArrayBuilder.ofLong]
-    var last: UTF8String = null
-    var cur: scala.collection.mutable.ArrayBuilder.ofLong = null
-    LakeScan.foreachRow(reader, t.path, t.size) { row =>
-      // tuples are sorted by file_path: look a name up once per run
-      val fp = row.getUTF8String(0)
-      if (last == null || fp != last) {
-        last = fp.clone()
-        cur = byName.getOrElseUpdate(last.toString,
-          new scala.collection.mutable.ArrayBuilder.ofLong)
-      }
-      cur += row.getLong(1)
-    }
-    val idx = byName.view.mapValues(_.result()).toMap
-    cache.synchronized {
-      val prev = cache.put(t.path, (idx, t.rows))
-      if (prev != null) cachedTuples -= prev._2
-      cachedTuples += t.rows
-      val it = cache.values().iterator()
-      while (cachedTuples > MaxCachedTuples && cache.size > 1) {
-        cachedTuples -= it.next()._2
-        it.remove()
-      }
-    }
-    idx
-  }
-
-  private def filtered(path: String, name: String): Array[Long] = {
-    val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-    val r = ParquetReader.builder(new GroupReadSupport(), new HPath(path))
-      .withConf(LakeIOConf.conf)
-      .withFilter(FilterCompat.get(FilterApi.eq(
-        FilterApi.binaryColumn(PositionDeletes.FilePathCol), Binary.fromString(name))))
-      .build()
-    try {
-      var g = r.read()
-      while (g != null) {
-        buf += g.getLong(PositionDeletes.PosCol, 0)
-        g = r.read()
-      }
-    } finally r.close()
-    buf.result()
-  }
 }
 
 /** Process-local cache of equality-delete tuple sets, filled on the driver

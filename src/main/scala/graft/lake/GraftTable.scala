@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.functions.{coalesce, col, concat, element_at, lit, split, not => fnot}
+import org.apache.spark.sql.functions.{coalesce, lit, not => fnot}
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -150,31 +150,28 @@ class GraftTable(
           return
         case None => // fall through to the positional path
       }
-      // Merge-on-read: record (file, pos) tuples of the matching rows in a
-      // small delete file; data files stay untouched. Cost scales with the
-      // MATCHES, not the table — the 100 TB DELETE shape.
+      // Merge-on-read: OR the positions of the matching rows into each hit
+      // file's deletion vector; data files stay untouched. Cost scales
+      // with the MATCHES, not the table — the 100 TB DELETE shape.
+      val live = PositionDeletes.vectors(s)
       val newDeletes: Seq[DeleteFile] =
         if (touched.isEmpty) Seq.empty
         else {
-          // only LIVE rows match, so re-deleting an already-deleted row
-          // never records a duplicate tuple (keeps totalRows exact). MOR
-          // records rows where cond IS TRUE (the complement of COW's
-          // keep-set): NULL-evaluating rows are not deleted. A tuple names
-          // its file by the canonical relative `data/<name>` path.
-          val tuples = GraftTable.liveRows(spark, store, s, touched,
+          // only LIVE rows match, so a new position is never one the file's
+          // vector already holds (keeps totalRows exact). MOR records rows
+          // where cond IS TRUE (the complement of COW's keep-set):
+          // NULL-evaluating rows are not deleted.
+          val hits = GraftTable.liveRows(spark, store, s, touched,
               provenance = true)
             .filter(coalesce(cond, lit(false)))
-            .select(
-              concat(lit("data/"),
-                element_at(split(col(GraftTable.FileCol), "/"), -1))
-                .as(PositionDeletes.FilePathCol),
-              col(GraftTable.PosCol).as(PositionDeletes.PosCol))
-          PositionDeletes.writeDeleteFiles(spark, store, tuples)
+          DeletionVectors.write(spark, store, touched, hits, live)
         }
-      // the tuples name rows of `touched`: those files must stay live,
-      // and no concurrent delete may have reached them first
-      val fp = Conflicts.Footprint(s, read = touched, deletesAdded = newDeletes,
-        filter = Some(physFilters.toSeq))
+      // each new vector replaces its file's previous one; the vectors name
+      // rows of `touched`: those files must stay live, and no concurrent
+      // delete may have reached them first
+      val replaced = newDeletes.flatMap(d => live.get(d.referencedDataFile.get))
+      val fp = Conflicts.Footprint(s, read = touched, deletesRemoved = replaced,
+        deletesAdded = newDeletes, filter = Some(physFilters.toSeq))
       store.commit { prev =>
         val next = Conflicts.rebase(store, "DELETE", prev.getOrElse(s), fp)
         next.copy(
@@ -182,7 +179,8 @@ class GraftTable(
           summary = Map(
             "delete-mode" -> "merge-on-read",
             "added-delete-files" -> newDeletes.size.toString,
-            "added-position-deletes" -> newDeletes.map(_.rowCount).sum.toString,
+            "added-position-deletes" ->
+              (newDeletes.map(_.rowCount).sum - replaced.map(_.rowCount).sum).toString,
             "total-records" -> next.totalRows.toString))
       }
       return
@@ -198,11 +196,10 @@ class GraftTable(
           .filter(fnot(coalesce(cond, lit(false))))
         GraftWriter.writeFiles(spark, store, s, kept)
       }
-    // drop tuples that referenced the rewritten files (folded in above)
+    // drop vectors of the rewritten files (folded in above)
     val fp = Conflicts.Footprint(s, read = touched, replaced = touched,
         added = rewritten, filter = Some(physFilters.toSeq))
-      .retaining(PositionDeletes.retain(spark, store, s.deleteFiles,
-        untouched, touched))
+      .retaining(PositionDeletes.retain(s.deleteFiles, untouched, touched))
     store.commit { prev =>
       val next = Conflicts.rebase(store, "DELETE", prev.getOrElse(s), fp)
       next.copy(
@@ -375,7 +372,7 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
   // when provably exact:
   //  - no residual filters (Spark keeps our filters in-plan, so it only
   //    attempts the pushdown on unfiltered scans; guarded anyway),
-  //  - COUNT(*): exact under position deletes (tuple counts are exact),
+  //  - COUNT(*): exact under deletion vectors (cardinalities are exact),
   //    refused under pending equality deletes (matched count unknown),
   //  - COUNT(col)/MIN/MAX: refused under ANY pending delete, and need
   //    every file to carry the stat. MIN/MAX limited to numeric/date/
@@ -486,9 +483,8 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
       agg.aggregateExpressions.toIndexedSeq.map {
         case _: CountStar =>
           if (hasEq) return None
-          // subset counts (grouped or filtered): position-delete tuples
-          // name files, but DeleteFile metadata only carries totals —
-          // per-subset counts are unprovable under any pending delete
+          // subset counts (grouped or filtered) are refused under any
+          // pending delete: only the whole-table total subtracts vectors
           if (!global && hasAny) return None
           val rows =
             if (global) s.totalRows else files.map(_.rowCount).sum
@@ -779,8 +775,8 @@ final class GraftWriteBuilder(store: SnapshotStore)
               val fp = Conflicts.Footprint(head, read = touched,
                   replaced = touched, added = keptFiles ++ added,
                   filter = Some(physFs.toSeq))
-                .retaining(PositionDeletes.retain(spark, store,
-                  head.deleteFiles, untouched, touched))
+                .retaining(PositionDeletes.retain(head.deleteFiles,
+                  untouched, touched))
               store.commit { prev =>
                 Conflicts.rebase(store, "INSERT OVERWRITE",
                     prev.getOrElse(head), fp).copy(
@@ -822,10 +818,8 @@ final class GraftWriteBuilder(store: SnapshotStore)
         if (head.partitionSpec.isEmpty) (p.files, Seq.empty[DataFile])
         else p.files.partition(f => f.partitionValues.size == nSpec &&
           completeNew.contains(f.partitionValues))
-      // tuples referencing replaced partitions' files die with them
-      val keptDeletes = PositionDeletes.retain(
-        org.apache.spark.sql.SparkSession.active, store, p.deleteFiles, kept,
-        replaced)
+      // vectors of replaced partitions' files die with them
+      val keptDeletes = PositionDeletes.retain(p.deleteFiles, kept, replaced)
       p.copy(
         timestampMs = System.currentTimeMillis(),
         operation = "overwrite",

@@ -181,8 +181,7 @@ object GraftWriter {
           import org.apache.spark.sql.graftbridge.ColumnBridge
           import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
           import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-          val numBits = head.properties.get("graft.bloom-bits")
-            .map(longSetting("graft.bloom-bits", _)).getOrElse(65536L)
+          val numBits = bloomBits(head.properties)
           val bloomAggs = bloomCols.map { c =>
             ColumnBridge.column(new BloomFilterAggregate(
               new XxHash64(Seq(ColumnBridge.expression(col(c)))),
@@ -226,6 +225,12 @@ object GraftWriter {
       case e: NumberFormatException => throw new IllegalArgumentException(
         s"$key must be a whole number, got '$value'", e)
     }
+
+  /** Bits per bloom filter: the `graft.bloom-bits` table property, 65536
+    * when unset. Written by appends and backfilled by `analyze`. */
+  private[graft] def bloomBits(props: Map[String, String]): Long =
+    props.get("graft.bloom-bits").map(longSetting("graft.bloom-bits", _))
+      .getOrElse(65536L)
 
   /** (Re)compute GENERATED ALWAYS AS columns over `df`. Deterministic
     * expressions over unchanged source columns make re-application
@@ -316,8 +321,8 @@ object GraftWriter {
     if (overwrite)
       store.commit { prev =>
         val p = prev.getOrElse(head)
-        // full overwrite discards every previous row — pending MOR delete
-        // tuples reference only discarded files, so they go too
+        // full overwrite discards every previous row — pending MOR deletes
+        // apply only to discarded files, so they go too
         p.copy(
           identity = advanceIdentity(p),
           timestampMs = System.currentTimeMillis(),
@@ -344,8 +349,8 @@ object GraftWriter {
             "added-files" -> stamped.size.toString,
             "added-records" -> addedRows.toString,
             "total-files" -> (p.fileCount + stamped.size).toString,
-            // position-delete tuples only: an equality tuple kills 0..N
-            // rows, so its rowCount is not a row count — matching
+            // deletion-vector cardinalities only: an equality tuple kills
+            // 0..N rows, so its rowCount is not a row count — matching
             // Snapshot.totalRows and the overwrite path
             "total-records" -> (p.dataFileRows + addedRows -
               p.deleteFiles.filter(_.positional)

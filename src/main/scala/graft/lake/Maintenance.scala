@@ -30,14 +30,14 @@ object Maintenance {
     val small = head.files.filter(_.sizeBytes < smallFileThresholdBytes)
     if (small.size <= 1) return head // nothing to gain
     val keep = head.files.filterNot(small.contains)
-    // pending MOR delete tuples on compacted files fold into the rewrite
+    // pending MOR deletes on compacted files fold into the rewrite
     val df = GraftTable.liveRows(spark, store, head, small)
       .coalesce(math.max(1, small.map(_.sizeBytes).sum / smallFileThresholdBytes).toInt)
     val rewritten = GraftWriter.writeFiles(spark, store, head, df)
     // same rows, new files: concurrent appends rebase through untouched
     val fp = Conflicts.Footprint(head, read = small, replaced = small,
         added = rewritten)
-      .retaining(PositionDeletes.retain(spark, store, head.deleteFiles, keep, small))
+      .retaining(PositionDeletes.retain(head.deleteFiles, keep, small))
     store.commit { prev =>
       val next = Conflicts.rebase(store, "compaction", prev.getOrElse(head), fp)
       next.copy(
@@ -49,26 +49,24 @@ object Maintenance {
     }
   }
 
-  /** Fold accumulated merge-on-read position deletes back into the data:
-    * every data file with pending tuples is rewritten without its deleted
-    * rows; the commit clears `deleteFiles`. The MOR maintenance
-    * counterpart of `compact` (Iceberg's `rewrite_position_delete_files` +
-    * data rewrite in one): DELETEs stay O(matches) at write time, and this
-    * periodic rewrite keeps the readers' delete work from growing. Only
-    * files actually referenced by a tuple are rewritten. */
+  /** Fold accumulated merge-on-read deletes back into the data: every
+    * data file with a deletion vector (or a pending equality delete) is
+    * rewritten without its deleted rows; the commit clears `deleteFiles`.
+    * The MOR maintenance counterpart of `compact` (Iceberg's
+    * `rewrite_position_delete_files` + data rewrite in one): DELETEs stay
+    * O(matches) at write time, and this periodic rewrite keeps the
+    * readers' delete work from growing. */
   def rewriteDeletes(spark: SparkSession, store: SnapshotStore): Snapshot = {
     val head = store.head().getOrElse(
       throw new IllegalStateException(s"no table at ${store.tableDir}"))
     if (head.deleteFiles.isEmpty) return head
-    // files to rewrite: referenced by a position tuple, or old enough for
-    // a pending equality delete to apply (conservative — the rewrite of an
+    // files to rewrite: carrying a deletion vector, or old enough for a
+    // pending equality delete to apply (conservative — the rewrite of an
     // unaffected old file is a no-op content-wise)
-    val posNames = PositionDeletes.referencedFileNames(
-      spark, store, head.deleteFiles)
+    val vectored = PositionDeletes.vectors(head)
     val eqDeletes = head.deleteFiles.filter(_.kind == "equality")
-    val (touched, untouched) = head.files.partition(f =>
-      posNames.contains(PositionDeletes.fileName(f.path)) ||
-        eqDeletes.exists(e => f.seq < e.seq))
+    val touched = head.files.filter(f =>
+      vectored.contains(f.path) || eqDeletes.exists(e => f.seq < e.seq))
     val rewritten: Seq[DataFile] =
       if (touched.isEmpty) Seq.empty
       else {
@@ -88,38 +86,6 @@ object Maintenance {
           "removed-delete-files" -> head.deleteFiles.size.toString,
           "applied-position-deletes" ->
             head.deleteFiles.map(_.rowCount).sum.toString,
-          "total-records" -> next.totalRows.toString))
-    }
-  }
-
-  /** Fold the pending position-delete BACKLOG (tuple files + previous
-    * vector blobs) into one deletion-vector blob per table — WITHOUT
-    * rewriting any data file. K stacked DELETEs cost readers K tuple-file
-    * opens and a K-way union; after this, every reader does one index
-    * lookup plus one exact ranged read per data file (O(1) structures).
-    * The cheap, frequent maintenance step; `rewriteDeletes` remains the
-    * heavy fold that rewrites data files and also clears equality
-    * deletes. */
-  def rewriteDeleteVectors(spark: SparkSession, store: SnapshotStore): Snapshot = {
-    val head = store.head().getOrElse(
-      throw new IllegalStateException(s"no table at ${store.tableDir}"))
-    val positional = head.deleteFiles.filter(_.positional)
-    // nothing to fold, or already exactly one vector: no-op commit saved
-    if (positional.isEmpty ||
-      (positional.size == 1 && positional.head.kind == DeletionVectors.Kind))
-      return head
-    val dv = DeletionVectors.consolidate(spark, store, positional)
-    val fp = Conflicts.Footprint(head, deletesRemoved = positional,
-      deletesAdded = dv.toSeq)
-    store.commit { prev =>
-      val next = Conflicts.rebase(store, "rewrite_delete_vectors",
-        prev.getOrElse(head), fp)
-      next.copy(
-        operation = "replace",
-        summary = Map(
-          "consolidated-delete-files" -> positional.size.toString,
-          "deletion-vectors" -> dv.size.toString,
-          "vector-positions" -> dv.map(_.rowCount).sum.toString,
           "total-records" -> next.totalRows.toString))
     }
   }
@@ -256,8 +222,7 @@ object Maintenance {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val numBits = head.properties.get("graft.bloom-bits")
-      .map(_.toLong).getOrElse(65536L)
+    val numBits = GraftWriter.bloomBits(head.properties)
     val bloomAggs = bloomCols.map { c =>
       ColumnBridge.column(new BloomFilterAggregate(
         new XxHash64(Seq(ColumnBridge.expression(col(c)))),

@@ -130,7 +130,7 @@ object LocalMetaIO extends MetaIO {
 }
 
 /** One Hadoop configuration per JVM for graft's OWN side-file IO (dv
-  * blobs, delete-tuple loads, size-stat fallbacks). Captures the active
+  * blobs, equality-key loads, size-stat fallbacks). Captures the active
   * session's Hadoop conf when a SparkSession exists in this JVM — always
   * true in local mode, where executors share the driver process — so
   * `spark.hadoop.*` settings reach these reads the same way they reach

@@ -48,7 +48,8 @@ object MetadataTables {
     StructField("file_size_in_bytes", LongType),
     StructField("kind", StringType),
     StructField("equality_columns", StringType),
-    StructField("sequence_number", LongType)))
+    StructField("sequence_number", LongType),
+    StructField("referenced_data_file", StringType)))
 
   val partitionsSchema: StructType = StructType(Seq(
     StructField("partition", MapType(StringType, StringType)),
@@ -97,12 +98,14 @@ object MetadataTables {
           Row(f.path, f.partitionValues, f.rowCount, f.sizeBytes))
         new LocalTable(s"$tableName.files", filesSchema, rows)
       case "delete_files" =>
-        // pending merge-on-read position-delete files (the rewrite_deletes
-        // dashboard: how much per-read delete work has accumulated)
+        // pending merge-on-read deletes, one row per entry (the
+        // rewrite_deletes dashboard: how much per-read delete work has
+        // accumulated); a vector's size is its slice of the shared blob
         val rows = store.head().toSeq.flatMap(_.deleteFiles).map(f =>
           Row(f.path, f.rowCount, f.sizeBytes, f.kind,
             if (f.equalityColumns.isEmpty) null
-            else f.equalityColumns.mkString(","), f.seq))
+            else f.equalityColumns.mkString(","), f.seq,
+            f.referencedDataFile.orNull))
         new LocalTable(s"$tableName.delete_files", deleteFilesSchema, rows)
       case "partitions" =>
         // the small-files / hot-partition dashboard query (what the

@@ -9,47 +9,36 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ParquetScanBridge
 import org.apache.spark.sql.types._
 
-/** Merge-on-read position deletes (Iceberg v2 design; the reference's stack
-  * advertises row-level deletes via Iceberg 1.4 — `README.md:124` "old ones
-  * marked deleted"). A DELETE under `graft.delete-mode = merge-on-read`
-  * writes a small parquet file of `(file_path STRING, pos BIGINT)` tuples
-  * naming deleted rows by data-file path + 0-based row index, instead of
-  * rewriting the data files (copy-on-write). Each reader skips its own
-  * file's tuples ([[LakeScan]]); which delete files a data file must apply
-  * is decided at planning by [[applicable]].
+/** Merge-on-read deletes: the entries of a snapshot's `deleteFiles`,
+  * which a reader applies instead of rewriting data files (copy-on-write).
+  * Positions are deleted by deletion vectors ([[DeletionVectors]]): one
+  * per data file, indexed by the snapshot itself, so which vector applies
+  * to a file is a lookup ([[vectors]]) and planning reads no delete bytes.
+  * Keys are deleted by equality files ([[writeEqualityDeleteFiles]]),
+  * which an upsert or a key-only DELETE writes without reading the table.
+  * Each reader skips its own file's deletes ([[LakeScan]]); which entries
+  * a data file must apply is decided at planning by [[refsFor]].
   *
-  * Scale rationale: deleting 1k rows from a 100 TB table costs one KB-sized
-  * delete file and a metadata commit; the COW alternative rewrites every
-  * file containing a match. `rewrite_deletes` compaction folds tuples back
-  * into the data files when they accumulate.
-  *
-  * Identity is the data file's NAME (UUID-unique within a table), not its
-  * absolute path — `_metadata.file_path` returns a URI whose prefix varies
-  * by filesystem, and the name is stable across both forms.
+  * Scale rationale: deleting 1k rows from a 100 TB table costs one small
+  * blob and a metadata commit; the COW alternative rewrites every file
+  * containing a match. `rewrite_deletes` folds the deletes back into the
+  * data files when they accumulate.
   */
 object PositionDeletes {
-
-  /** Column names inside a delete file (Iceberg's position-delete schema). */
-  val FilePathCol = "file_path"
-  val PosCol = "pos"
 
   /** Provenance column names attached to data reads for delete application
     * (prefixed to never collide with user columns). */
   val NameCol = "__gdel_name"
   val RowPosCol = "__gdel_pos"
 
-  val tupleSchema: StructType = StructType(Seq(
-    StructField(FilePathCol, StringType, nullable = false),
-    StructField(PosCol, LongType, nullable = false)))
-
   def fileName(path: String): String =
     path.substring(path.lastIndexOf('/') + 1)
 
   /** Broadcast the delete side of the CDC joins (which rows did a commit
-    * delete: [[tuples]], [[equalityMatchedRows]]) while the delete files
-    * stay small (parquet bytes ≈ a few × in-memory) — one hash build
-    * instead of shuffling the data side. Past the threshold, fall back to
-    * the planner's choice (sort-merge on the shuffled tuple set): a DELETE
+    * delete: [[addedPositions]], [[equalityMatchedRows]]) while it stays
+    * small — one hash build instead of shuffling the data side. Past the
+    * threshold, fall back to the planner's choice (sort-merge on the
+    * shuffled delete side): a DELETE
     * backlog bigger than executor memory must never be pinned to a
     * broadcast build. Session-overridable for tests and tuning. */
   val BroadcastMaxBytesKey = "graft.mor.broadcast-max-bytes"
@@ -62,89 +51,65 @@ object PositionDeletes {
       .map(GraftWriter.longSetting(BroadcastMaxBytesKey, _))
       .getOrElse(BroadcastMaxBytesDefault)
 
-  /** Raw `(file_path, pos)` rows of position tuple files. */
-  private[lake] def readTuples(spark: SparkSession, store: SnapshotStore,
-      tupleFiles: Seq[DeleteFile]): DataFrame =
-    SchemaNames.readFiles(spark, store, tupleSchema,
-      tupleFiles.map(f => f.path -> f.sizeBytes))
+  /** The vectors of `snap` by referenced data-file path — a table keeps
+    * at most one per data file. */
+  def vectors(snap: Snapshot): Map[String, DeleteFile] =
+    snap.deleteFiles.iterator.filter(_.kind != "equality")
+      .map(d => referenced(d) -> d).toMap
 
-  /** All position-shaped deletes of `deleteFiles` — raw tuple parquet
-    * files AND consolidated deletion vectors — as a `(NameCol, RowPosCol)`
-    * frame (file paths reduced to names for provenance joins). None when
-    * there are none. The CDC and retain path; reads never use it. */
-  def tuples(spark: SparkSession, store: SnapshotStore,
-      deleteFilesIn: Seq[DeleteFile]): Option[DataFrame] = {
-    val tupleFiles = deleteFilesIn.filter(_.kind == "position")
-    val dvs = deleteFilesIn.filter(_.kind == DeletionVectors.Kind)
-    if (tupleFiles.isEmpty && dvs.isEmpty) return None
-    val parts = Seq.newBuilder[DataFrame]
-    if (tupleFiles.nonEmpty) {
-      parts += readTuples(spark, store, tupleFiles)
-        .select(
-          element_at(split(col(FilePathCol), "/"), -1).as(NameCol),
-          col(PosCol).as(RowPosCol))
+  /** The data file vector `d` deletes rows of. Refuses an entry of any
+    * other position form, naming it: a `position` tuple file, or a vector
+    * without the data file it refers to. */
+  private def referenced(d: DeleteFile): String =
+    d.referencedDataFile.filter(_ => d.kind == DeletionVectors.Kind)
+      .getOrElse(throw new IllegalStateException(
+        s"unsupported delete entry ${d.path} (kind '${d.kind}', referenced " +
+          s"data file ${d.referencedDataFile.getOrElse("none")}): position " +
+          "deletes are read only as deletion vectors of one data file"))
+
+  /** The positions each vector `snap` changed since `parent` deletes
+    * beyond the parent's vector of the same data file — what the commit
+    * deleted — as a `(NameCol, RowPosCol)` frame, broadcast while small;
+    * None when no vector changed. The CDC path; reads never use it. */
+  def addedPositions(spark: SparkSession, store: SnapshotStore,
+      snap: Snapshot, parent: Option[Snapshot]): Option[DataFrame] = {
+    val before = parent.fold(Map.empty[String, DeleteFile])(vectors)
+    val changed = vectors(snap).toSeq.collect {
+      case (ref, d) if !before.get(ref).exists(_.id == d.id) => d -> before.get(ref)
     }
-    if (dvs.nonEmpty) parts += DeletionVectors.tupleFrame(spark, store, dvs)
-    val t = parts.result().reduce(_ unionByName _)
-    // size the broadcast by the EXPANDED tuple frame, not file bytes: a
-    // dense bitset container compresses ~128× vs its exploded (name,pos)
-    // rows, so a vector blob's sizeBytes wildly understates build memory.
-    // Each expanded row repeats the data file NAME (UUID-based, ~45 UTF-8
-    // bytes) next to the position long plus hashed-relation row overhead —
-    // ~80 bytes/row, not 16.
-    val totalBytes = tupleFiles.map(_.sizeBytes).sum +
-      dvs.map(_.rowCount * 80L).sum
-    Some(if (totalBytes <= broadcastMaxBytes) broadcast(t) else t)
+    if (changed.isEmpty) return None
+    val t = DeletionVectors.addedPositions(spark, store, changed)
+    // size the broadcast by the EXPANDED frame: each row repeats the data
+    // file NAME (UUID-based, ~45 UTF-8 bytes) next to the position long
+    // plus hashed-relation row overhead — ~80 bytes/row
+    val rows = changed.map { case (d, b) => d.rowCount - b.fold(0L)(_.rowCount) }.sum
+    Some(if (rows * 80L <= broadcastMaxBytes) broadcast(t) else t)
   }
-
-  /** Shared staging protocol for delete files: write `df` with
-    * [[LakeFileWriter]] into a staging dir (one file per non-empty task,
-    * named `<uuid>-<suffix>.parquet`), move each into `data/`, and
-    * register it via `mk`. The staging dir is always cleaned up. */
-  private def stageDeleteFiles(spark: SparkSession, store: SnapshotStore,
-      df: DataFrame, suffix: String)(mk: (String, Long, Long) => DeleteFile): Seq[DeleteFile] = {
-    val staging = store.tableDir.resolve(s".staging-del-${UUID.randomUUID()}")
-    try {
-      LakeFileWriter(spark, df.schema, s"-$suffix")
-        .writeFrame(df, staging, Seq.empty)
-        .map { f =>
-          store.io.publish(staging.resolve(f.name), store.dataDir.resolve(f.name))
-          mk(s"data/${f.name}", f.rowCount, f.sizeBytes)
-        }
-    } finally store.io.deleteTree(staging)
-  }
-
-  /** Stage a `(file_path, pos)` tuple DataFrame as new delete files and
-    * move them into `data/`. Tuples are globally sorted by (file, pos) so
-    * each delete file covers a narrow file range (footer stats then let a
-    * future per-file pushdown prune them). Returns the committed entries
-    * (empty when the DataFrame is empty). */
-  def writeDeleteFiles(spark: SparkSession, store: SnapshotStore,
-      tuples: DataFrame): Seq[DeleteFile] =
-    stageDeleteFiles(spark, store,
-      tuples
-        .select(col(FilePathCol).cast(StringType), col(PosCol).cast(LongType))
-        .sort(FilePathCol, PosCol),
-      "deletes") { (path, cnt, size) =>
-      DeleteFile(path, cnt, size, seq = Snapshot.UnassignedSeq)
-    }
 
   /** Stage an EQUALITY delete: `keys` holds one row per deleted key over
     * `physCols` (the table's PHYSICAL column names, which is also the
     * column naming inside the staged parquet). No data scan happens here —
     * that is the whole point: an equality DELETE/upsert commits in O(keys)
     * regardless of table size; readers subtract matches with sequence
-    * ordering (only files older than this commit are affected). */
+    * ordering (only files older than this commit are affected). The file
+    * is written with [[LakeFileWriter]] into a staging dir, moved into
+    * `data/`, and the staging dir is always cleaned up. */
   def writeEqualityDeleteFiles(spark: SparkSession, store: SnapshotStore,
-      keys: DataFrame, physCols: Seq[String]): Seq[DeleteFile] =
-    stageDeleteFiles(spark, store,
-      keys.select(physCols.map(col): _*)
-        .distinct()
-        .coalesce(1), // key sets are small by design; one file per commit
-      "eq-deletes") { (path, cnt, size) =>
-      DeleteFile(path, cnt, size, kind = "equality",
-        equalityColumns = physCols, seq = Snapshot.UnassignedSeq)
-    }
+      keys: DataFrame, physCols: Seq[String]): Seq[DeleteFile] = {
+    val df = keys.select(physCols.map(col): _*)
+      .distinct()
+      .coalesce(1) // key sets are small by design; one file per commit
+    val staging = store.tableDir.resolve(s".staging-del-${UUID.randomUUID()}")
+    try {
+      LakeFileWriter(spark, df.schema, "-eq-deletes")
+        .writeFrame(df, staging, Seq.empty)
+        .map { f =>
+          store.io.publish(staging.resolve(f.name), store.dataDir.resolve(f.name))
+          DeleteFile(s"data/${f.name}", f.rowCount, f.sizeBytes, kind = "equality",
+            equalityColumns = physCols, seq = Snapshot.UnassignedSeq)
+        }
+    } finally store.io.deleteTree(staging)
+  }
 
   /** Sequence column names for the CDC equality match (collision-proofed
     * like the provenance columns). */
@@ -169,65 +134,22 @@ object PositionDeletes {
     else tup0
   }
 
-  /** Rewrite `deleteFiles` keeping only entries still needed over the
-    * surviving data files — called by commits that REMOVE data files (COW
-    * rewrites, compaction) so no dangling tuples accumulate and
-    * `Snapshot.totalRows`'s subtraction stays exact. A position tuple file
-    * whose footer name range covers no `replaced` file is kept as it is;
-    * the others are rewritten to their surviving tuple subset. Deletion
-    * vectors keep their blob form (replaced files' entries dropped by
-    * index surgery, surviving bitmaps byte-copied); an equality file
-    * survives as-is while ANY surviving data file is older than it (its
-    * keys may still mask rows there). Cheap by construction: delete files
-    * are small (else `rewrite_deletes` should have folded them in), and
-    * a commit that touches none of a file's data files leaves it alone —
-    * which also keeps the commit's delete edits narrow for
-    * [[Conflicts]]. Returns the replacement entries; the caller commits
-    * them. */
-  def retain(spark: SparkSession, store: SnapshotStore,
-      deleteFiles: Seq[DeleteFile],
-      survivingFiles: Seq[DataFile],
+  /** The entries of `deleteFiles` still needed once a commit removes
+    * `replacedFiles` and keeps `survivingFiles` (COW rewrites, compaction,
+    * overwrites), so no dangling vector accumulates and
+    * `Snapshot.totalRows`'s subtraction stays exact. A pure filter over
+    * snapshot metadata: a vector goes with the data file it refers to; an
+    * equality file survives while ANY surviving data file is older than it
+    * (its keys may still mask rows there). Entries are kept as they are,
+    * which also keeps the commit's delete edits narrow for [[Conflicts]]. */
+  def retain(deleteFiles: Seq[DeleteFile], survivingFiles: Seq[DataFile],
       replacedFiles: Seq[DataFile]): Seq[DeleteFile] = {
-    if (deleteFiles.isEmpty) return Seq.empty
-    val (eq, pos) = deleteFiles.partition(_.kind == "equality")
-    val (dvs, tupleFiles) = pos.partition(_.kind == DeletionVectors.Kind)
-    val survivingNames = survivingFiles.map(f => fileName(f.path)).toSet
-    val replacedNames = replacedFiles.map(f => fileName(f.path))
-    val (touched, untouched) = tupleFiles.partition { d =>
-      val (lo, hi) = nameRange(store, d)
-      replacedNames.exists(n => lo <= n && n <= hi)
+    val gone = replacedFiles.iterator.map(_.path).toSet
+    val oldest = survivingFiles.iterator.map(_.seq).minOption
+    deleteFiles.filter { d =>
+      if (d.kind == "equality") oldest.exists(_ < d.seq)
+      else !d.referencedDataFile.exists(gone)
     }
-    // touched tuple files: rewrite the surviving subset as tuple files
-    val tuplesKept =
-      if (touched.isEmpty) Seq.empty
-      else tuples(spark, store, touched) match {
-        case None => Seq.empty
-        case Some(t) =>
-          val kept = t.filter(col(NameCol).isin(survivingNames.toSeq: _*))
-            .select(concat(lit("data/"), col(NameCol)).as(FilePathCol),
-              col(RowPosCol).as(PosCol))
-          writeDeleteFiles(spark, store, kept)
-      }
-    // deletion vectors stay VECTORS: dropping a replaced file's deletes is
-    // index surgery — surviving entries' payloads byte-copy into a fresh
-    // blob (exact ranged reads, no bitmap decode), and a blob none of
-    // whose files were replaced is kept untouched. Exploding a dv back
-    // into tuple files here would undo rewrite_delete_vectors' O(1)-read
-    // consolidation on every compaction/COW commit.
-    val dvKept = dvs.flatMap { d =>
-      val entries = DeletionVectors.readIndex(store, d)
-      val keep = entries.filter(e => survivingNames.contains(e.name))
-      if (keep.isEmpty) None
-      else if (keep.size == entries.size) Some(d)
-      else {
-        val blob = store.tableDir.resolve(d.path).toString
-        Some(DeletionVectors.writeBlob(store, keep.map(e =>
-          (e.name, e.cardinality,
-            DeletionVectors.readPayload(blob, e.offset, e.length)))))
-      }
-    }
-    val eqKept = eq.filter(e => survivingFiles.exists(_.seq < e.seq))
-    untouched ++ tuplesKept ++ dvKept ++ eqKept
   }
 
   /** Rows live at `snap` that MATCH any equality tuple of `eqFiles` under
@@ -263,82 +185,44 @@ object PositionDeletes {
       .drop(GraftTable.FileCol, GraftTable.PosCol, FileSeqCol))
   }
 
-  /** Distinct data-file NAMES referenced by any position tuple — the
-    * metadata-scale planning question ("which files need a rewrite").
-    * Distributed distinct + collect of names only: driver memory is
-    * O(referenced FILES), never O(deleted rows), however large the
-    * backlog. */
-  def referencedFileNames(spark: SparkSession, store: SnapshotStore,
-      deleteFiles: Seq[DeleteFile]): Set[String] = {
-    val pos = deleteFiles.filter(_.kind == "position")
-    val fromTuples: Set[String] =
-      if (pos.isEmpty) Set.empty
-      else {
-        readTuples(spark, store, pos)
-          .select(element_at(split(col(FilePathCol), "/"), -1).as(NameCol))
-          .distinct()
-          .collect()
-          .map(_.getString(0))
-          .toSet
-      }
-    // a vector blob's INDEX is exactly this question, one small read
-    val fromDvs = deleteFiles.filter(_.kind == DeletionVectors.Kind)
-      .flatMap(d => DeletionVectors.readIndex(store, d).map(_.name))
-    fromTuples ++ fromDvs
+  /** The deletes a reader of each data file of `snap` applies: its vector
+    * (a lookup, no IO) and the equality files that may hold one of its
+    * keys. Loads equality key sets once, on the driver, with no Spark job.
+    * [[LakeScan]] plans with it. */
+  def refsFor(store: SnapshotStore, snap: Snapshot): DataFile => Seq[DeleteRef] = {
+    val byFile = vectors(snap)
+    val eqs = snap.deleteFiles.filter(_.kind == "equality")
+      .map(applicable(store, snap, _))
+    f => byFile.get(f.path).map(slice(store, _)).toSeq ++ eqs.flatMap(_(f))
   }
 
-  /** Plan-time (minName, maxName) range one position-delete file covers,
-    * from its parquet FOOTER (constant work, no data read). Valid because
-    * every tuple's `file_path` is the canonical relative `data/<name>`
-    * (writers join back to `DataFile.path`) and [[writeDeleteFiles]]
-    * sorts by it, so path order == name order. A footer without usable
-    * string bounds conservatively covers everything. */
-  def nameRange(store: SnapshotStore, f: DeleteFile): (String, String) = {
-    val (_, stats) = FooterStats.read(store.tableDir.resolve(f.path),
-      Seq(StructField(FilePathCol, StringType, nullable = false)))
-    stats.get(FilePathCol) match {
-      case Some(cs) if cs.min.isDefined && cs.max.isDefined =>
-        (fileName(cs.min.get), fileName(cs.max.get))
-      case _ => ("", "\uFFFF")
-    }
-  }
+  private def slice(store: SnapshotStore, d: DeleteFile): DvSlice =
+    DvSlice(store.tableDir.resolve(d.path).toString, d.contentOffset, d.sizeBytes.toInt)
 
-  /** Which data files delete file `d` may remove rows of, and how a reader
-    * applies it to one: None = no row of that file. Position files answer
-    * by their footer `file_path` range, deletion vectors by their index
-    * (with the file's exact slice), equality files by sequence order and
-    * their key values against the data file's stats. Loads `d`'s metadata
-    * once, on the driver, with no Spark job. [[LakeScan]] plans with it;
-    * [[Conflicts]] rule 3 asks it whether a concurrent delete touches
-    * what a statement read. */
+  /** Which data files delete entry `d` may remove rows of, and how a reader
+    * applies it to one: None = no row of that file. A vector answers by
+    * the data file it refers to, an equality file by sequence order and its
+    * key values against the data file's stats. [[Conflicts]] rule 3 asks
+    * it whether a concurrent delete touches what a statement read. */
   def applicable(store: SnapshotStore, snap: Snapshot,
-      d: DeleteFile): DataFile => Option[DeleteRef] = {
-    val path = store.tableDir.resolve(d.path).toString
-    d.kind match {
-      case "position" =>
-        val (lo, hi) = nameRange(store, d)
-        val ref = Some(TupleRef(path, d.sizeBytes, d.rowCount))
-        f => { val name = fileName(f.path); if (lo <= name && name <= hi) ref else None }
-      case DeletionVectors.Kind =>
-        val slices = DeletionVectors.readIndex(store, d)
-          .map(e => e.name -> DvSlice(path, e.offset, e.length)).toMap
-        f => slices.get(fileName(f.path))
-      case "equality" =>
-        val ks = keySchema(snap.schema, d.equalityColumns)
-        val types = ks.map(_.dataType)
-        val keys = EqDeleteTupleCache.get(path, d.sizeBytes, types,
-            ParquetScanBridge.rowReaderFactory(SparkSession.active, ks, ks))
-        // each key column's values, sorted once: a file whose stats hold
-        // none of one column's values holds no key tuple
-        val probes = ks.indices.flatMap(i =>
-          statsProbe(keys, i, d.equalityColumns(i), types(i)))
-        val ref = Some(EqRef(path, d.sizeBytes, d.equalityColumns))
-        f => if (f.seq < d.seq && !keys.isEmpty && probes.forall(_(f))) ref
-          else None
-      case other =>
-        throw new IllegalStateException(s"unknown delete-file kind '$other' (${d.path})")
+      d: DeleteFile): DataFile => Option[DeleteRef] =
+    if (d.kind != "equality") {
+      val ref = referenced(d)
+      f => Option.when(f.path == ref)(slice(store, d))
+    } else {
+      val path = store.tableDir.resolve(d.path).toString
+      val ks = keySchema(snap.schema, d.equalityColumns)
+      val types = ks.map(_.dataType)
+      val keys = EqDeleteTupleCache.get(path, d.sizeBytes, types,
+          ParquetScanBridge.rowReaderFactory(SparkSession.active, ks, ks))
+      // each key column's values, sorted once: a file whose stats hold
+      // none of one column's values holds no key tuple
+      val probes = ks.indices.flatMap(i =>
+        statsProbe(keys, i, d.equalityColumns(i), types(i)))
+      val ref = Some(EqRef(path, d.sizeBytes, d.equalityColumns))
+      f => if (f.seq < d.seq && !keys.isEmpty && probes.forall(_(f))) ref
+        else None
     }
-  }
 
   /** Can a data file's [min, max] stats of `col` hold one of the values
     * of key column `i` over `keys`? One binary search over the sorted

@@ -28,7 +28,6 @@ object Procedures {
 
   val Namespace: Array[String] = Array("system")
   val names: Seq[String] = Seq("compact", "rewrite_deletes",
-    "rewrite_delete_vectors",
     "expire_snapshots", "remove_orphan_files", "create_tag", "drop_tag",
     "rollback_to_version", "refresh_mv", "refresh_mv_groups",
     "set_partition_spec", "analyze",
@@ -95,20 +94,10 @@ object Procedures {
         }
       case "rewrite_deletes" =>
         simple(ident.name(),
-          "fold merge-on-read position deletes back into the data files",
+          "fold merge-on-read deletes back into the data files",
           Seq(ProcedureParameter.in("table", StringType).build())) { args =>
           val tbl = args.getUTF8String(0).toString
           val snap = Maintenance.rewriteDeletes(SparkSession.active, storeFor(tbl))
-          Seq(Row(tbl, snap.version, snap.deleteFiles.size.toLong))
-        }
-      case "rewrite_delete_vectors" =>
-        simple(ident.name(),
-          "consolidate stacked position deletes into one deletion-vector " +
-            "blob (no data rewrite)",
-          Seq(ProcedureParameter.in("table", StringType).build())) { args =>
-          val tbl = args.getUTF8String(0).toString
-          val snap = Maintenance.rewriteDeleteVectors(
-            SparkSession.active, storeFor(tbl))
           Seq(Row(tbl, snap.version, snap.deleteFiles.size.toLong))
         }
       case "changelog" =>

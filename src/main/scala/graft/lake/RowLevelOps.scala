@@ -97,18 +97,15 @@ final class GraftRowLevelOperation(
           val replaced = scannedFiles
           val replacedSet = replaced.map(_.path).toSet
           val surviving = base.files.filterNot(f => replacedSet.contains(f.path))
-          // MOR tuples for replaced files were applied by the rewrite scan
-          // (its readers skip them); keep only tuples that still
-          // reference a surviving file. A file the scan pruned holds no
-          // match and no concurrent delete can add one, so the replaced
-          // set is what this statement read.
+          // vectors of replaced files were applied by the rewrite scan
+          // (its readers skip their rows) and go with them. A file the
+          // scan pruned holds no match and no concurrent delete can add
+          // one, so the replaced set is what this statement read.
           val fp = Conflicts.Footprint(base, read = replaced,
               replaced = replaced, added = newFiles,
               filter = Some(scanFilters.toSeq.map(SchemaNames.renameFilter(
                 _, SchemaNames.renameMap(base.schema)))))
-            .retaining(PositionDeletes.retain(
-              org.apache.spark.sql.SparkSession.active, store,
-              base.deleteFiles, surviving, replaced))
+            .retaining(PositionDeletes.retain(base.deleteFiles, surviving, replaced))
           store.commit { prev =>
             Conflicts.rebase(store, cmd.name(), prev.getOrElse(base), fp).copy(
               operation = cmd.name().toLowerCase,

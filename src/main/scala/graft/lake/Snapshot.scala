@@ -49,36 +49,42 @@ final case class DataFile(
     // unsorted rewrite. Old snapshots default to empty = no claim.
     sortedBy: Seq[String] = Seq.empty)
 
-/** One immutable position-delete file (merge-on-read DELETE): a parquet
-  * file with columns `(file_path STRING, pos BIGINT)` naming rows of DATA
-  * files (by their snapshot-relative path + 0-based row index) that are
-  * deleted as of this snapshot. Readers skip these rows; data files
-  * themselves are untouched — the Iceberg v2 position-delete design
-  * (reference stack: Iceberg 1.4, `README.md:124` "new data files created,
-  * old ones marked deleted"). A 100 TB table deleting 100 rows writes one
-  * KB-sized file instead of rewriting TB of data. */
-/** Two kinds (Iceberg v2's two delete-file contents):
-  *  - `position` — tuples name exact (file, row-index) positions.
+/** One delete entry of a snapshot (merge-on-read). Two kinds:
+  *  - `dv` — a deletion vector: the deleted row positions of ONE data
+  *    file, `referencedDataFile` (its snapshot-relative path), as a
+  *    bitmap stored at bytes `[contentOffset, contentOffset + sizeBytes)`
+  *    of the blob at `path` ([[DeletionVectors]]). A table keeps at most
+  *    one vector per data file: a DELETE that hits a file with one writes
+  *    the union and replaces the entry (Iceberg v3 deletion vectors). Data
+  *    files themselves are untouched. One blob holds the vectors of every
+  *    file one DELETE hit, so an entry is identified by [[id]], not by
+  *    `path`; a blob lives while any entry names it.
   *  - `equality` — rows hold key VALUES over `equalityColumns` (physical
   *    names); a data row is deleted iff its key equals some tuple AND its
   *    file's commit sequence is strictly below `seq` (rows appended after
   *    the delete are new rows, not deleted ones). Writing one costs no
   *    scan at all — the O(1) DELETE/upsert primitive for streaming CDC.
   *
-  * `seq` is the commit sequence (== snapshot version) the file entered the
-  * table at; [[SnapshotStore.commit]] stamps [[Snapshot.UnassignedSeq]]
-  * placeholders with the final version, so writers never guess it. */
+  * `rowCount` is the vector's cardinality (a row count) or the equality
+  * file's key count (each key kills 0..N rows). `seq` is the commit
+  * sequence (== snapshot version) the entry entered the table at;
+  * [[SnapshotStore.commit]] stamps [[Snapshot.UnassignedSeq]] placeholders
+  * with the final version, so writers never guess it. */
 final case class DeleteFile(
-    path: String,      // relative to tableDir, e.g. "data/<uuid>-deletes.parquet"
-    rowCount: Long,    // number of tuples
-    sizeBytes: Long,
-    kind: String = "position", // position | equality | dv
+    path: String,      // relative to tableDir, e.g. "data/<uuid>-dv.bin"
+    rowCount: Long,
+    sizeBytes: Long,   // a vector's slice length; an equality file's size
+    kind: String,      // dv | equality
     equalityColumns: Seq[String] = Seq.empty, // physical names (equality kind)
-    seq: Long = 0L) {
-  /** Position-shaped deletes (each entry kills exactly one known row, so
-    * rowCount IS a row count): raw tuple files and consolidated deletion
-    * vectors. Equality deletes are key-shaped — one key kills 0..N rows. */
-  def positional: Boolean = kind == "position" || kind == "dv"
+    seq: Long = 0L,
+    referencedDataFile: Option[String] = None, // dv kind
+    contentOffset: Long = 0L) {                // dv kind
+  /** Position-shaped: each deleted position is exactly one row, so
+    * rowCount IS a row count. */
+  def positional: Boolean = kind == DeletionVectors.Kind
+
+  /** Identity of the entry: vectors of one blob share `path`. */
+  def id: (String, Option[String]) = (path, referencedDataFile)
 }
 
 /** GENERATED ... AS IDENTITY column: values assigned at ingest from a
@@ -158,13 +164,13 @@ final case class Snapshot(
   lazy val schema: StructType =
     DataType.fromJson(schemaJson).asInstanceOf[StructType]
 
-  /** Live row count: data-file rows minus position-delete tuples. Position
-    * delete files never hold duplicate or dangling tuples (deleteWhere
-    * matches only live rows before writing), so the
-    * subtraction is exact for them. Pending EQUALITY deletes are written
-    * without a scan, so their matched-row count is unknown — they are not
-    * subtracted, making this an upper bound until `rewrite_deletes` folds
-    * them in (same caveat as Iceberg's record_count with eq-deletes). */
+  /** Live row count: data-file rows minus deletion-vector cardinalities.
+    * A table keeps one vector per data file, and commits that remove a
+    * data file drop its vector, so the subtraction is exact for them.
+    * Pending EQUALITY deletes are written without a scan, so their
+    * matched-row count is unknown — they are not subtracted, making this
+    * an upper bound until `rewrite_deletes` folds them in (same caveat as
+    * Iceberg's record_count with eq-deletes). */
   def totalRows: Long =
     dataFileRows - deleteFiles.filter(_.positional).map(_.rowCount).sum
   def totalBytes: Long =

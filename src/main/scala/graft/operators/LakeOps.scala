@@ -224,10 +224,10 @@ object LakeOps {
   }
 
   /** Merge-on-read DELETE correctness end to end: customers loaded into a
-    * MOR table, two stacked DELETEs recorded as position-delete files (data
+    * MOR table, two stacked DELETEs recorded as deletion vectors (data
     * files untouched), then a full scan + aggregation — must hash-match
     * DuckDB computing the same deletes as WHERE complements. Exercises the
-    * tuple write path, the in-reader delete path, and their NULL semantics. */
+    * vector write path, the in-reader delete path, and their NULL semantics. */
   val qLakeMorDelete: Q = Q(
     "q_lake_mor_delete",
     """SELECT c_nationkey, count(*) AS n, CAST(round(sum(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS bal

@@ -202,6 +202,24 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(est == 10L, s"numRows estimate subtracted eq-delete tuples: $est")
   }
 
+  test("planner numRows subtracts only the planned files' deletion vectors") {
+    sql("""CREATE TABLE advreg.t.dvstats (k INT, v STRING) USING iceberg
+           PARTITIONED BY (v)
+           TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
+    sql("INSERT INTO advreg.t.dvstats SELECT CAST(id AS INT), 'a' FROM range(0, 100, 1, 1)")
+    sql("INSERT INTO advreg.t.dvstats SELECT CAST(id AS INT), 'b' FROM range(100, 110, 1, 1)")
+    // 90 of the 'a' file's rows deleted: more than the 'b' file holds
+    sql("DELETE FROM advreg.t.dvstats WHERE v = 'a' AND k >= 10")
+    val store = new SnapshotStore(Paths.get(wh, "t", "dvstats"))
+    val snap = store.head().get
+    def est(filters: Array[org.apache.spark.sql.sources.Filter]) =
+      new LakeScan(snap, store, snap.schema, filters)
+        .estimateStatistics().numRows().getAsLong
+    assert(est(Array(org.apache.spark.sql.sources.EqualTo("v", "b"))) == 10L)
+    assert(est(Array(org.apache.spark.sql.sources.EqualTo("v", "a"))) == 10L)
+    assert(est(Array.empty) == 20L)
+  }
+
   // --- round-4 ADVICE pins ---
 
   test("branch scans never compare equal to main-chain scans (scan reuse)") {

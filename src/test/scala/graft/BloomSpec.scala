@@ -113,10 +113,21 @@ class BloomSpec extends AnyFunSuite {
     val e = intercept[Exception] {
       spark.sql("INSERT INTO bl.t.badbits VALUES ('a')")
     }
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .flatMap(t => Option(t.getMessage)).toSeq
-    assert(msgs.exists(m => m.contains("graft.bloom-bits") && m.contains("'64k'")),
-      s"unnamed parse failure: $msgs")
+    def named(e: Throwable): Unit = {
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("graft.bloom-bits") && m.contains("'64k'")),
+        s"unnamed parse failure: $msgs")
+    }
+    named(e)
+    // `analyze` backfills blooms for files written without them and
+    // parses the same property
+    spark.sql("ALTER TABLE bl.t.badbits UNSET TBLPROPERTIES ('graft.bloom-columns')")
+    spark.sql("INSERT INTO bl.t.badbits VALUES ('a')")
+    spark.sql("ALTER TABLE bl.t.badbits SET TBLPROPERTIES ('graft.bloom-columns' = 'k')")
+    named(intercept[Exception] {
+      Maintenance.analyze(spark, new SnapshotStore(Paths.get(wh, "t", "badbits")))
+    })
   }
 
   test("a malformed graft.mor.broadcast-max-bytes fails naming the key and the value") {

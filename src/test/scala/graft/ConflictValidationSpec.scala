@@ -101,8 +101,8 @@ class ConflictValidationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(head.operation == op, s"head is ${head.operation}, expected $op")
     assert(st.read(head.version - 1).operation == rivalOp,
       "the rival's commit should sit right below the statement's")
-    val live = head.files.map(f => PositionDeletes.fileName(f.path)).toSet
-    val named = PositionDeletes.referencedFileNames(spark, st, head.deleteFiles)
+    val live = head.files.map(_.path).toSet
+    val named = head.deleteFiles.flatMap(_.referencedDataFile).toSet
     assert(named.subsetOf(live), s"delete files name missing data files: ${named -- live}")
     // exact while no equality delete is pending (then an upper bound)
     if (!head.deleteFiles.exists(_.kind == "equality"))
@@ -167,8 +167,43 @@ class ConflictValidationSpec extends AnyFunSuite with BeforeAndAfterAll {
     rebased(r, "mor2", "delete", rivalOp = "delete")
     assert(rows("mor2").map(_._2) == Seq(3, 4, 11, 12, 14))
     val head = store("mor2").head().get
-    assert(head.deleteFiles.count(_.kind == "position") == 2)
+    // one blob per DELETE, one vector per data file it hit
+    assert(head.deleteFiles.forall(_.kind == "dv") &&
+      head.deleteFiles.map(_.path).distinct.size == 2)
     assert(head.summary("total-records").toLong == head.totalRows)
+  }
+
+  /** MOR table whose p = 0 holds k 1, 2 in one data file and k 3, 4 in
+    * another. */
+  private def makeTwoFileTable(t: String): Unit = {
+    sql(s"DROP TABLE IF EXISTS cvplain.d.$t")
+    sql(s"""CREATE TABLE cvplain.d.$t (p INT, k INT, v INT) USING graft
+            PARTITIONED BY (p) $mor""")
+    Seq((1, 3), (3, 5)).foreach { case (lo, hi) =>
+      sql(s"INSERT INTO cvplain.d.$t SELECT 0, CAST(id AS INT), 0 FROM range($lo, $hi, 1, 1)")
+    }
+  }
+
+  test("rule 3: MOR DELETEs on different files of one partition rebase") {
+    makeTwoFileTable("mor3")
+    val r = race(sql("DELETE FROM cvrace.d.mor3 WHERE p = 0 AND k >= 1 AND k < 2"))(
+      sql("DELETE FROM cvplain.d.mor3 WHERE p = 0 AND k >= 4 AND k < 5"))
+    rebased(r, "mor3", "delete", rivalOp = "delete")
+    assert(rows("mor3").map(_._2) == Seq(2, 3))
+    val head = store("mor3").head().get
+    assert(head.deleteFiles.flatMap(_.referencedDataFile).distinct.size == 2)
+  }
+
+  test("rule 2: two MOR DELETEs on a file that has a vector serialize") {
+    makeTwoFileTable("mor4")
+    sql("DELETE FROM cvplain.d.mor4 WHERE p = 0 AND k >= 1 AND k < 2")
+    // both replace the vector of the file holding k 1, 2
+    val r = race(sql("DELETE FROM cvrace.d.mor4 WHERE p = 0 AND k >= 2 AND k < 3"))(
+      sql("DELETE FROM cvplain.d.mor4 WHERE p = 0 AND k >= 2 AND k < 3"))
+    aborted(r, "rule 2")
+    assert(rows("mor4").map(_._2) == Seq(3, 4))
+    val head = store("mor4").head().get
+    assert(head.deleteFiles.map(_.rowCount) == Seq(2L), s"${head.deleteFiles}")
   }
 
   test("rule 4: equality DELETE rebases over a non-matching append") {

@@ -48,7 +48,7 @@ class CrossProcessCommitSpec extends AnyFunSuite {
     sql("INSERT INTO xproc.d.xt SELECT id, 'seed', id FROM range(1, 51)")
     // one victim chunk per worker; each worker COW-deletes its own
     sql("INSERT INTO xproc.d.xt SELECT id, 'victim', 0 FROM range(9000, 9030)")
-    // phase-2 table: merge-on-read deletes + deletion-vector consolidation
+    // phase-2 table: merge-on-read deletes merging into deletion vectors
     // + orphan sweeps, all racing across the three processes
     sql("""CREATE TABLE xproc.d.mt (id INT, w STRING, v INT) USING iceberg
            TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
@@ -136,7 +136,7 @@ class CrossProcessCommitSpec extends AnyFunSuite {
     assert(head.totalRows == rows.length.toLong,
       s"totalRows=${head.totalRows} but table has ${rows.length} rows")
 
-    // ---- phase-2 table: MOR deletes under racing consolidation/sweeps ----
+    // ---- phase-2 table: MOR deletes under racing vector merges/sweeps ----
     val mtStore = new SnapshotStore(Paths.get(wh, "d", "mt"))
 
     // 9. linear gap-free chain there too
@@ -145,7 +145,7 @@ class CrossProcessCommitSpec extends AnyFunSuite {
       s"mt version chain has gaps: $mtVersions")
 
     // 10. exactly the surviving half of every batch, none resurrected,
-    // none over-deleted — deletes raced vector consolidation the whole run
+    // none over-deleted — deletes raced vector merges the whole run
     val mtRows = sql("SELECT id, w, v FROM xproc.d.mt").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
     val expectedMt = (for {
@@ -165,14 +165,13 @@ class CrossProcessCommitSpec extends AnyFunSuite {
         s"live file collected by a racing orphan sweep: $p")
     }
 
-    // 12. a quiescent consolidation folds the whole backlog to ≤1 vector
-    // and keeps row accounting exact
-    Maintenance.rewriteDeleteVectors(spark, mtStore)
-    val folded = mtStore.head().get
-    val kinds = folded.deleteFiles.map(_.kind)
-    assert(kinds.forall(_ == "dv") && kinds.size <= 1,
-      s"backlog did not fold: ${folded.deleteFiles}")
-    assert(folded.totalRows == expectedMt.size.toLong,
-      s"mt totalRows=${folded.totalRows}, want ${expectedMt.size}")
+    // 12. at most one vector per data file, and exact row accounting
+    val refs = mtHead.deleteFiles.map(d => d.kind -> d.referencedDataFile)
+    assert(refs.forall { case (k, r) => k == "dv" && r.isDefined },
+      s"not one vector per entry: ${mtHead.deleteFiles}")
+    assert(refs.distinct.size == refs.size,
+      s"two vectors for one data file: ${mtHead.deleteFiles}")
+    assert(mtHead.totalRows == expectedMt.size.toLong,
+      s"mt totalRows=${mtHead.totalRows}, want ${expectedMt.size}")
   }
 }

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lake._
 
 /** Pins the round-3 scale fix: COW rewrite planning never materializes
-  * delete tuples on the driver. InputPartitions carry the COVERING DELETE
-  * FILES (each reader loads its own positions executor-side); equality
-  * deletes apply by executor-side key probing. */
+  * deleted positions on the driver. InputPartitions carry each file's
+  * deletion-vector slice (each reader loads its own positions
+  * executor-side); equality deletes apply by executor-side key probing. */
 class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val wh = Files.createTempDirectory("graft-ddel-wh").toString
@@ -29,7 +29,7 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("above the cap, COW partitions carry delete files, not positions") {
-    // checks: the plan names covering delete files, never positions,
+    // checks: the plan names each file's vector slice, never positions,
     // and readers load their own positions
     sql("""CREATE TABLE ddel.t.cap (id INT, v STRING) USING iceberg
            TBLPROPERTIES ('graft.delete-mode'='merge-on-read')""")
@@ -39,18 +39,18 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = new SnapshotStore(Paths.get(wh, "t", "cap"))
     val snap = store.head().get
     assert(snap.deleteFiles.nonEmpty &&
-      snap.deleteFiles.forall(_.kind == "position"))
+      snap.deleteFiles.forall(_.kind == "dv"))
     val scan = new LakeScan(snap, store, snap.schema, Array.empty,
       fileFilter = true)
     val parts = scan.planInputPartitions()
       .map(_.asInstanceOf[GraftInputPartition])
-    // the plan must not hold a single tuple on the driver: partitions
-    // name delete FILES, never positions
-    assert(parts.forall(_.deletes.forall(_.isInstanceOf[TupleRef])),
-      "partition carries something other than covering tuple files")
-    // soundness: every file referenced by a tuple gets its delete files
-    val referenced =
-      PositionDeletes.referencedFileNames(spark, store, snap.deleteFiles)
+    // the plan must not hold a single position on the driver: partitions
+    // name vector slices, never positions
+    assert(parts.forall(_.deletes.forall(_.isInstanceOf[DvSlice])),
+      "partition carries something other than a vector slice")
+    // soundness: every file a vector refers to gets its slice
+    val referenced = snap.deleteFiles.flatMap(_.referencedDataFile)
+      .map(PositionDeletes.fileName).toSet
     val covered = parts
       .filter(_.deletes.nonEmpty)
       .map(p => PositionDeletes.fileName(p.filePath)).toSet
@@ -78,13 +78,13 @@ class DistributedDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mixed position + equality backlog: COW rewrite stays correct at cap 0") {
-    // checks: a rewrite over position tuples and an equality delete, with
+    // checks: a rewrite over a deletion vector and an equality delete, with
     // readers loading their own positions and probing keys
     import spark.implicits._
     sql("""CREATE TABLE ddel.t.mixed (k INT, v STRING) USING iceberg
            TBLPROPERTIES ('graft.delete-mode'='merge-on-read')""")
     sql("INSERT INTO ddel.t.mixed VALUES (1,'a'),(2,'b'),(3,'c'),(4,'d')")
-    sql("DELETE FROM ddel.t.mixed WHERE k = 1 OR k = 4") // positional tuples
+    sql("DELETE FROM ddel.t.mixed WHERE k = 1 OR k = 4") // deletion vector
     val store = new SnapshotStore(Paths.get(wh, "t", "mixed"))
     Upsert.into(spark, store, Seq((3, "c2")).toDF("k", "v"), Seq("k"))
     sql("UPDATE ddel.t.mixed SET v = concat(v, '+') WHERE k >= 0")

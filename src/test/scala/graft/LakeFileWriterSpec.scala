@@ -82,10 +82,10 @@ class LakeFileWriterSpec extends AnyFunSuite {
            TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
     sql("""INSERT INTO lfw.t.w VALUES
            (1, 'a', 'x'), (2, 'b', 'x'), (3, 'c', 'y'), (4, 'd', 'y'), (6, 'f', 'y')""")
-    sql("DELETE FROM lfw.t.w WHERE id >= 6")  // range: position deletes
+    sql("DELETE FROM lfw.t.w WHERE id >= 6")  // range: deletion vector
     sql("DELETE FROM lfw.t.w WHERE id IN (1)") // IN-list: equality deletes
     assert(store("w").head().get.deleteFiles.map(_.kind).toSet ==
-      Set("position", "equality"))
+      Set("dv", "equality"))
 
     def files = store("w").head().get.files
     val beforeUpdate = files.map(_.path).toSet

@@ -7,14 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake._
 
-/** Merge-on-read DELETE (position-delete files, Iceberg v2 design —
+/** Merge-on-read DELETE (deletion vectors, Iceberg v3 design —
   * SURVEY.md §2.2 row-level ops): a DELETE under
-  * `graft.delete-mode = merge-on-read` records (file, pos) tuples instead
-  * of rewriting data files. Covers: query results, data files untouched,
-  * NULL condition semantics, stacked deletes with no duplicate tuples,
-  * time travel, `rewrite_deletes` compaction, COW UPDATE/MERGE interplay
-  * (no resurrection), CDC changelog, partitioned tables, and overwrites
-  * dropping dangling tuples.
+  * `graft.delete-mode = merge-on-read` records the deleted positions of
+  * each data file it hits in that file's vector instead of rewriting data
+  * files. Covers: query results, data files untouched, NULL condition
+  * semantics, stacked deletes with no duplicate positions, time travel,
+  * `rewrite_deletes` compaction, COW UPDATE/MERGE interplay (no
+  * resurrection), CDC changelog, partitioned tables, and overwrites
+  * dropping dangling vectors.
   */
 class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -114,23 +115,20 @@ class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("COW UPDATE on a table with pending MOR deletes does not resurrect rows") {
     makeTable("t6")
-    // range term -> positional tuples (the test below reads them back)
+    // range term -> a deletion vector (the test below checks its reference)
     sql("DELETE FROM morspec.demo.t6 WHERE id = 2 AND v < 1000")
     // UPDATE rewrites whole files (COW): the rewrite read must skip pos 1
     sql("UPDATE morspec.demo.t6 SET v = 99 WHERE grp = 'a'")
     val rows = sql("SELECT id, v FROM morspec.demo.t6 ORDER BY id")
       .collect().map(r => (r.getInt(0), if (r.isNullAt(1)) -1 else r.getInt(1))).toSeq
     assert(rows == Seq((1, 99), (3, -1), (4, 40), (5, 50)))
-    // every surviving tuple must reference a CURRENT data file (a file the
-    // rewrite did not touch — runtime group filtering only rewrites files
-    // with live matches, so the deleted row's mask may legitimately remain)
+    // every surviving vector must reference a CURRENT data file (a file
+    // the rewrite did not touch — runtime group filtering only rewrites
+    // files with live matches, so the deleted row's mask may remain)
     val snap = store("t6").head().get
     val live = snap.files.map(_.path).toSet
-    val tuplePaths = snap.deleteFiles
-      .flatMap(df => spark.read
-        .parquet(store("t6").tableDir.resolve(df.path).toString)
-        .collect().map(_.getString(0)))
-    assert(tuplePaths.forall(live.contains), "no dangling tuples")
+    assert(snap.deleteFiles.flatMap(_.referencedDataFile).forall(live.contains),
+      "no dangling vectors")
   }
 
   test("MERGE into a MOR table treats deleted rows as absent") {
@@ -209,9 +207,9 @@ class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     sql("DELETE FROM morspec.demo.t13 WHERE id = 1 OR id = 3") // positional
     val st = store("t13")
     val vDelete = st.currentVersion().get
-    // compaction rewrites data files AND the surviving tuple set (retain):
+    // compaction rewrites data files and drops their vectors (retain):
     // the changelog for that commit must be EMPTY, not a replay of the
-    // v-delete tuples under their new file path
+    // v-delete positions under their new file path
     Maintenance.compact(spark, st, smallFileThresholdBytes = 1024 * 1024 * 64)
     val vCompact = st.currentVersion().get
     assert(vCompact > vDelete, "compact must have committed")

@@ -60,6 +60,7 @@ class MorPropertySpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.morprop.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS morprop.t")
     var caseId = 0
+    var vectorMerges = 0
     forAllSeeded(Gen.listOfN(7, genOp), cases = 6) { ops =>
       caseId += 1
       val tbl = s"morprop.t.c$caseId"
@@ -96,8 +97,19 @@ class MorPropertySpec extends SparkSpec {
           case Compact =>
             Maintenance.compact(spark, store)
           case Vectors =>
-            // consolidation changes no logical content (and must not)
-            Maintenance.rewriteDeleteVectors(spark, store)
+            // range DELETEs of two live keys of one data file: the second
+            // merges into the vector the first wrote
+            val twoKeys = spark.sql(s"SELECT k, _file FROM $tbl").collect()
+              .groupBy(_.getString(1)).values
+              .map(_.map(_.getInt(0)).distinct.sorted.toSeq)
+              .find(_.size >= 2)
+            twoKeys.foreach { ks =>
+              ks.take(2).foreach { k =>
+                spark.sql(s"DELETE FROM $tbl WHERE k >= $k AND k < ${k + 1}")
+                model = model.filterNot(_._1 == k)
+              }
+              vectorMerges += 1
+            }
         }
         check(op.getClass.getSimpleName)
       }
@@ -128,5 +140,6 @@ class MorPropertySpec extends SparkSpec {
         s"totalRows ${folded.totalRows} != model ${model.size} for $tbl")
       check("final rewrite_deletes")
     }
+    assert(vectorMerges > 0, "no DELETE merged into an existing vector")
   }
 }

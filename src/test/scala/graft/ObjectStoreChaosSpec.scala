@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lake._
 
 /** Chaos over object-store semantics: a random operation sequence
-  * (append / MOR delete / upsert / compact / vector-consolidate) runs
+  * (append / MOR delete / upsert / compact / vector merge) runs
   * while transient storage faults — 503s before the effect AND
   * lost-responses after a landed conditional PUT — are injected at
   * random into the write path. The caller retries failed statements,
@@ -93,6 +93,7 @@ class ObjectStoreChaosSpec extends AnyFunSuite {
     }
     var injected = 0
     var consumed = 0
+    var vectorMerges = 0
 
     steps.zipWithIndex.foreach { case ((fault, op), i) =>
       fault.foreach { case (opName, after) =>
@@ -122,8 +123,20 @@ class ObjectStoreChaosSpec extends AnyFunSuite {
           case Compact =>
             retrying(s"compact $i") { Maintenance.compact(spark, store) }
           case Vectors =>
-            retrying(s"vectors $i") {
-              Maintenance.rewriteDeleteVectors(spark, store)
+            // a range DELETE over rows of a file that already carries a
+            // vector: the merged vector is a new blob write under faults
+            val dvFiles = store.head().get.deleteFiles
+              .flatMap(_.referencedDataFile).map(PositionDeletes.fileName).toSet
+            val keys = sql("SELECT k, _file FROM oschaos.d.t").collect()
+              .filter(r => dvFiles.contains(PositionDeletes.fileName(r.getString(1))))
+              .map(_.getInt(0))
+            if (keys.nonEmpty) {
+              val lo = keys.min
+              retrying(s"vectors $i") {
+                sql(s"DELETE FROM oschaos.d.t WHERE k >= $lo AND k < ${lo + 3}")
+              }
+              model = model.filterNot { case (k, _) => k >= lo && k < lo + 3 }
+              vectorMerges += 1
             }
         }
       } finally {
@@ -140,6 +153,7 @@ class ObjectStoreChaosSpec extends AnyFunSuite {
     }
 
     // the chaos must have actually happened, not idled in the queue
+    assert(vectorMerges > 0, "no DELETE merged into an existing vector")
     assert(injected >= 8 && consumed >= injected / 2,
       s"fault injection vacuous: injected=$injected consumed=$consumed")
 

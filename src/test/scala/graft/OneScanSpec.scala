@@ -32,9 +32,8 @@ class OneScanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def sql(q: String) = spark.sql(q)
   private def store(t: String) = new SnapshotStore(Paths.get(wh, "d", t))
 
-  /** ids 0..29 in three one-file appends, then id 1, 2 deleted by position
-    * tuples folded into a deletion vector, 11, 12 by position tuples and
-    * 21 by an equality delete. */
+  /** ids 0..29 in three one-file appends, then id 1, 2 deleted by one
+    * deletion vector, 11, 12 by another and 21 by an equality delete. */
   private val deletedIds = Set(1, 2, 11, 12, 21)
   private val liveIds = (0 until 30).filterNot(deletedIds)
 
@@ -48,7 +47,6 @@ class OneScanSpec extends AnyFunSuite with BeforeAndAfterAll {
               FROM range(${b * 10}, ${b * 10 + 10}, 1, 1)""")
     }
     sql("DELETE FROM onescan.d.mixed WHERE id = 1 OR id = 2")
-    sql("CALL onescan.system.rewrite_delete_vectors('d.mixed')")
     sql("DELETE FROM onescan.d.mixed WHERE id = 11 OR id = 12")
     sql("DELETE FROM onescan.d.mixed WHERE id = 21")
   }
@@ -66,7 +64,7 @@ class OneScanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SELECT, _file and aggregates over tuples, a vector and an equality delete see live rows") {
     val kinds = store("mixed").head().get.deleteFiles.map(_.kind).toSet
-    assert(kinds == Set("dv", "position", "equality"), s"test setup: $kinds")
+    assert(kinds == Set("dv", "equality"), s"test setup: $kinds")
     assert(sql("SELECT id FROM onescan.d.mixed ORDER BY id")
       .collect().map(_.getInt(0)).toSeq == liveIds)
     val agg = sql("SELECT count(*), sum(id) FROM onescan.d.mixed").collect().head
@@ -79,35 +77,54 @@ class OneScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withFile.forall(r => r.getLong(2) == r.getInt(0) % 10))
   }
 
-  test("a tuple file too large to index yields the same positions through a file_path filter") {
-    val st = store("mixed")
-    val snap = st.head().get
-    val reader = org.apache.spark.sql.graftbridge.ParquetScanBridge.rowReaderFactory(
-      spark, PositionDeletes.tupleSchema, PositionDeletes.tupleSchema)
-    val tuples = snap.deleteFiles.filter(_.kind == "position")
-    assert(tuples.nonEmpty, "test setup: no position tuple file")
-    val deleted = for {
-      d <- tuples
-      f <- snap.files
-    } yield {
-      val path = st.tableDir.resolve(d.path).toString
-      val data = st.tableDir.resolve(f.path).toString
-      val indexed = TupleIndexCache.positions(TupleRef(path, d.sizeBytes, d.rowCount),
-        data, reader).toSeq
-      val filtered = TupleIndexCache.positions(
-        TupleRef(path, d.sizeBytes, TupleIndexCache.MaxFileTuples + 1), data, reader).toSeq
-      assert(indexed == filtered, s"${f.path}")
-      indexed.size
+  test("planning and the commit check read no delete bytes; the reader names a missing blob") {
+    sql("""CREATE TABLE onescan.d.noblob (id INT) USING iceberg
+           TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
+    sql("INSERT INTO onescan.d.noblob SELECT CAST(id AS INT) FROM range(0, 10, 1, 1)")
+    sql("INSERT INTO onescan.d.noblob SELECT CAST(id AS INT) FROM range(10, 20, 1, 1)")
+    val st = store("noblob")
+    val base = st.head().get
+    sql("DELETE FROM onescan.d.noblob WHERE id >= 2 AND id < 4")
+    val head = st.head().get
+    val dv = head.deleteFiles.head
+    val (hit, other) = head.files.partition(f => dv.referencedDataFile.contains(f.path))
+    Files.delete(st.tableDir.resolve(dv.path))
+
+    val df = sql("SELECT id FROM onescan.d.noblob")
+    assert(df.queryExecution.executedPlan.toString.contains("with-deletes=1"))
+    // rule 3 asks which files the new vector applies to: a lookup
+    assert(Conflicts.rebase(st, "test", head,
+      Conflicts.Footprint(base, read = other)).files == head.files)
+    val abort = intercept[IllegalStateException](Conflicts.rebase(st, "test", head,
+      Conflicts.Footprint(base, read = hit)))
+    assert(abort.getMessage.contains("rule 3"), abort.getMessage)
+    val e = intercept[Exception](df.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+    assert(msgs.contains(PositionDeletes.fileName(dv.path)), msgs)
+  }
+
+  test("a position delete entry is refused, naming its path") {
+    sql("CREATE TABLE onescan.d.legacy (id INT) USING iceberg")
+    sql("INSERT INTO onescan.d.legacy VALUES (1), (2)")
+    val st = store("legacy")
+    val ref = st.head().get.files.head.path
+    val legacy = "data/00000000-0000-0000-0000-000000000000-deletes.parquet"
+    // a tuple file, and a vector that names no data file
+    Seq(DeleteFile(legacy, 1, 100, kind = "position", referencedDataFile = Some(ref)),
+        DeleteFile(legacy, 1, 100, kind = "dv")).foreach { entry =>
+      st.commit(prev => prev.get.copy(deleteFiles = Seq(entry)))
+      val e = intercept[Exception](sql("SELECT * FROM onescan.d.legacy").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+      assert(msgs.contains(legacy) && msgs.contains(s"kind '${entry.kind}'"), msgs)
     }
-    assert(deleted.sum == tuples.map(_.rowCount).sum)
   }
 
   test("a partition-filtered SELECT whose files no delete touches plans columnar") {
     sql("""CREATE TABLE onescan.d.parts (id INT, p STRING) USING iceberg
            PARTITIONED BY (p)
            TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
-    // one file per insert: a position file covers a RANGE of file names,
-    // and over several 'a' files that range could take in a 'b' file
     sql("INSERT INTO onescan.d.parts SELECT CAST(id AS INT), 'a' FROM range(1, 4, 1, 1)")
     sql("INSERT INTO onescan.d.parts SELECT CAST(id AS INT), 'b' FROM range(4, 6, 1, 1)")
     sql("DELETE FROM onescan.d.parts WHERE id = 1 OR id = 2")

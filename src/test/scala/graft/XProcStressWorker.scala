@@ -99,11 +99,12 @@ object XProcStressWorker {
     }
 
     // phase 2 — the merge-on-read table: every worker appends then MOR-
-    // deletes half of each batch (position tuples); worker 1 interleaves
-    // deletion-vector consolidation (head-pinned, retried on contention);
-    // worker 2 interleaves the age-guarded orphan sweep, which races
-    // everyone's publish→commit windows and must never collect a file a
-    // commit is about to reference
+    // deletes half of each batch (deletion vectors); on odd batches worker
+    // 1 deletes that half in two statements, the second merging into the
+    // vector the first wrote (retried on contention); worker 2
+    // interleaves the age-guarded orphan sweep, which races everyone's
+    // publish→commit windows and must never collect a file a commit is
+    // about to reference
     val mtStore = new SnapshotStore(Paths.get(wh, "d", "mt"))
     (0 until appendBatches).foreach { b =>
       val base = 50000 * (wid + 1) + b * 20
@@ -112,11 +113,13 @@ object XProcStressWorker {
       retrying(s"mt append w$wid b$b") {
         spark.sql(s"INSERT INTO xp.d.mt VALUES $values")
       }
+      val merge = wid == 1 && b % 2 == 1
       retrying(s"mt delete w$wid b$b") {
-        spark.sql(s"DELETE FROM xp.d.mt WHERE id BETWEEN $base AND ${base + 4}")
+        val hi = if (merge) base + 2 else base + 4
+        spark.sql(s"DELETE FROM xp.d.mt WHERE id BETWEEN $base AND $hi")
       }
-      if (wid == 1 && b % 2 == 1) retrying(s"mt dv w$wid b$b") {
-        Maintenance.rewriteDeleteVectors(spark, mtStore)
+      if (merge) retrying(s"mt dv w$wid b$b") {
+        spark.sql(s"DELETE FROM xp.d.mt WHERE id BETWEEN ${base + 3} AND ${base + 4}")
       }
       if (wid == 2 && b % 2 == 0) Maintenance.removeOrphanFiles(mtStore)
     }
