@@ -12,7 +12,9 @@ import org.apache.spark.sql.types._
   *
   * Partitioned tables: the partition VALUE is computed into synthetic
   * `__gp<i>` STRING columns and rows are sorted within tasks on them, so
-  * each task writes one file per partition tuple, whose value strings are
+  * each task writes one file per partition tuple. Small driver-held
+  * inputs (INSERT ... VALUES, local frames) are written by ONE task, so
+  * such an append adds exactly one file per tuple. Tuple value strings are
   * recorded as they are (an empty string stays ''). The synthetic columns
   * are not written; all ORIGINAL columns (including the transform's
   * source column) stay in the data file, so reads need no
@@ -55,7 +57,11 @@ object GraftWriter {
         .toIndexedSeq: _*)
 
       val partCols = spec.zipWithIndex.map { case (f, i) => s"$PartColPrefix$i" }
-      val withParts = spec.zipWithIndex.foldLeft(aligned) { case (d, (f, i)) =>
+      // Driver-held rows are split into defaultParallelism slices by
+      // LocalTableScanExec, and each slice would write its own file per
+      // tuple: a small local write goes through one task instead.
+      val input = if (smallLocalInput(spark, df)) aligned.coalesce(1) else aligned
+      val withParts = spec.zipWithIndex.foldLeft(input) { case (d, (f, i)) =>
         d.withColumn(s"$PartColPrefix$i",
           coalesce(PartitionTransforms.valueColumn(f), lit("__null__")))
       }
@@ -214,6 +220,25 @@ object GraftWriter {
           sortedBy = plainSortCols)
       }
     } finally store.io.deleteTree(staging)
+  }
+
+  /** True when `df` holds only driver-side rows — every leaf of its
+    * optimized plan is a `LocalRelation` (INSERT ... VALUES, a local Seq
+    * frame) — of at most one read split (`spark.sql.files.maxPartitionBytes`)
+    * in estimated size. The analyzed plan's leaves rule out scans before
+    * anything is optimized; a VALUES list becomes a `LocalRelation` only
+    * in the optimizer. */
+  private def smallLocalInput(spark: SparkSession, df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.analysis.ResolvedInlineTable
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case _: LocalRelation | _: ResolvedInlineTable => true
+      case _ => false
+    } && {
+      val opt = df.queryExecution.optimizedPlan
+      opt.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+        opt.stats.sizeInBytes <= spark.sessionState.conf.filesMaxPartitionBytes
+    }
   }
 
   /** Parse a whole-number `graft.*` setting (a table property or a

@@ -185,10 +185,10 @@ object Maintenance {
     val expiredRefs: Set[String] =
       expire.map(store.read).flatMap(allPaths).toSet
     (expiredRefs -- referenced).foreach { rel =>
-      Files.deleteIfExists(store.tableDir.resolve(rel))
+      store.io.delete(store.tableDir.resolve(rel))
     }
     expire.foreach { v =>
-      Files.deleteIfExists(store.tableDir.resolve("metadata").resolve(s"v$v.json"))
+      store.io.delete(store.tableDir.resolve("metadata").resolve(s"v$v.json"))
     }
     expire
   }

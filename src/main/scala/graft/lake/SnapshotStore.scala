@@ -17,9 +17,11 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
   * Commit protocol (§3.3 of SURVEY.md): write `v<N+1>.json` exclusively
   * (fails if a concurrent committer won the race), then swap the hint
   * atomically. A reader that catches the store between the two steps still
-  * resolves the head by scanning for max N — the hint is a hint, not the
-  * source of truth. Losing a race retries the commit function on the new
-  * head (optimistic concurrency). All file operations route through
+  * finds the head: it probes forward from the hint for later versions, and
+  * lists the directory when the hint is missing, unparsable or names a
+  * missing version — the hint is a hint, not the source of truth. Losing
+  * a race retries the commit function on the new head (optimistic
+  * concurrency). All file operations route through
   * [[MetaIO]]; on an object store `createExclusive` maps to conditional
   * PUT (if-none-match) — same protocol, different primitive.
   */
@@ -79,18 +81,22 @@ final class SnapshotStore(val tableDir: Path,
     io.mkdirs(dataDir)
   }
 
-  /** Head version by hint, verified/corrected by directory listing. */
+  /** Head version: the hint, then a forward probe for `v<h+1>`, `v<h+2>`,
+    * ... (commits that landed past a stale hint — a crash between the two
+    * commit steps, or a failed hint swap). The directory is listed only
+    * when the hint is missing, unparsable or names a missing version, so
+    * resolving the head of a healthy table costs one read and two probes
+    * however long its chain (Iceberg's `HadoopTableOperations` shape). */
   def currentVersion(): Option[Long] = {
     val hinted =
-      if (io.exists(hintFile))
-        scala.util.Try(io.readString(hintFile).trim.toLong).toOption
-      else None
-    // Trust the hint only if that snapshot exists; otherwise (or if newer
-    // snapshots exist past the hint — a crash between steps) scan.
-    val scanned = listVersions().maxOption
-    (hinted, scanned) match {
-      case (Some(h), Some(s)) => Some(math.max(h, s))
-      case (_, s)             => s
+      try Some(io.readString(hintFile).trim.toLong)
+      catch { case _: java.io.IOException | _: NumberFormatException => None }
+    hinted.filter(h => io.exists(versionFile(h))) match {
+      case Some(h) =>
+        var v = h
+        while (io.exists(versionFile(v + 1))) v += 1
+        Some(v)
+      case None => listVersions().maxOption
     }
   }
 
@@ -104,7 +110,8 @@ final class SnapshotStore(val tableDir: Path,
       .sorted
 
   def read(version: Long): Snapshot =
-    materialize(Snapshot.fromJson(io.readString(versionFile(version))))
+    materialize(SnapshotStore.parse(metaDir, version,
+      io.readString(versionFile(version))))
 
   /** Back a sharded snapshot's `files` with a LAZY seq: no chunk is read
     * until something actually walks the file list. Metadata answers
@@ -221,9 +228,9 @@ final class SnapshotStore(val tableDir: Path,
     throw new IllegalStateException("unreachable")
   }
 
-  /** The hint is ADVISORY — `currentVersion` always corrects it against
-    * the listing — so a hint-write failure after a LANDED commit must not
-    * fail the statement. */
+  /** The hint is ADVISORY — `currentVersion` probes past a stale one —
+    * so a hint-write failure after a LANDED commit must not fail the
+    * statement. */
   private def trySwapHint(v: Long): Unit =
     try swapHint(v) catch { case _: java.io.IOException => () }
 
@@ -426,6 +433,35 @@ object SnapshotStore {
   /** Max files per manifest chunk: bounds both chunk-write size and the
     * unit of parallel load. */
   val ManifestChunkFiles = 10000
+
+  /** The last parsed snapshot of one metadata dir, with the exact JSON it
+    * was parsed from. */
+  private final case class Parsed(version: Long, json: String, snapshot: Snapshot)
+
+  private val ParsedMax = 64
+  private val lastParsed = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, Parsed](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Parsed]): Boolean =
+        size() > ParsedMax
+    })
+
+  /** `Snapshot.fromJson(json)`, memoized per metadata dir: one statement
+    * resolves its table's head several times, and each resolution reads
+    * the same `v<N>.json`. The entry is reused only when the version AND
+    * the file's exact content match — DROP + CREATE at one path reuses
+    * version numbers, and a commit through another store instance or
+    * process shows up as a new version or new content. */
+  private def parse(metaDir: Path, version: Long, json: String): Snapshot = {
+    val key = metaDir.toAbsolutePath.toString
+    val hit = lastParsed.get(key)
+    if (hit != null && hit.version == version && hit.json == json) hit.snapshot
+    else {
+      val s = Snapshot.fromJson(json)
+      lastParsed.put(key, Parsed(version, json, s))
+      s
+    }
+  }
 
   private val ChunkCacheMax = 256
   // access-ordered LRU (like BloomProbe / EqDeleteTupleCache): a table

@@ -34,15 +34,18 @@ object Streams {
     * silently read micros as nanos and compress a month of event time
     * 1000-fold. */
   private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, StructType]
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), StructType]
 
-  private def rawSchema(spark: SparkSession, sfDir: String): StructType =
-    // one footer probe per fixture dir per JVM (r12): the probe is a
+  private[graft] def rawSchema(spark: SparkSession, sfDir: String): StructType = {
+    // one footer probe per fixture FILE per JVM (r12): the probe is a
     // driver-side parquet footer read, and q_stream_dedup alone paid it
-    // twice per run (two stream legs) — the physical ts type of a fixture
-    // file cannot change under a running session
-    schemaCache.getOrElseUpdate(sfDir, {
-      val tsType = spark.read.parquet(s"$sfDir/events.parquet")
+    // twice per run (two stream legs). Keyed on the file's path, size and
+    // mtime, so a fixture rewritten in place is probed again
+    val fixture = java.nio.file.Paths.get(sfDir, "events.parquet")
+    val key = (fixture.toAbsolutePath.toString, Files.size(fixture),
+      Files.getLastModifiedTime(fixture).toMillis)
+    schemaCache.getOrElseUpdate(key, {
+      val tsType = spark.read.parquet(fixture.toString)
         .schema("ts").dataType
       StructType(Seq(
         StructField("event_id", LongType),
@@ -52,6 +55,7 @@ object Streams {
         StructField("value", DoubleType),
         StructField("props", StringType)))
     })
+  }
 
   /** File-based stream over the events parquet: each file = a micro-batch
     * (the snapshot-log streaming pattern: commits arrive as new files).

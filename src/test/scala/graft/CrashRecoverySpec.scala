@@ -60,6 +60,24 @@ class CrashRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().head.getLong(0) == 2)
   }
 
+  test("DROP + CREATE + INSERT at one path never returns the dropped table's snapshot") {
+    sql("CREATE TABLE crspec.demo.dc (id INT) USING graft")
+    sql("INSERT INTO crspec.demo.dc VALUES (1), (2)")
+    val st = store("dc")
+    val old = st.head().get
+    sql("DROP TABLE crspec.demo.dc")
+    sql("CREATE TABLE crspec.demo.dc (id INT, s STRING) USING graft")
+    sql("INSERT INTO crspec.demo.dc VALUES (3, 'x')")
+    // the new chain reuses the dropped chain's version numbers
+    val now = st.head().get
+    assert(now.version == old.version)
+    assert(now.schema.fieldNames.toSeq == Seq("id", "s"))
+    assert(st.read(old.version).totalRows == 1L)
+    val rows = sql("SELECT id, s FROM crspec.demo.dc").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(rows == Seq((3, "x")))
+  }
+
   test("stale staging dirs are cleaned; fresh ones and live data survive") {
     sql("CREATE TABLE crspec.demo.c2 (id INT) USING graft")
     sql("INSERT INTO crspec.demo.c2 VALUES (1), (2)")

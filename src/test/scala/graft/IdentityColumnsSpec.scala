@@ -43,6 +43,19 @@ class IdentityColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(snap.identity("id").lastValue.contains(ids.max))
   }
 
+  test("a many-row VALUES insert into an IDENTITY table keeps its ids unique") {
+    sql("""CREATE TABLE idspec.demo.tv
+           (id BIGINT GENERATED ALWAYS AS IDENTITY, v INT) USING graft""")
+    val values = (1 to 40).map(i => s"($i)").mkString(", ")
+    sql(s"INSERT INTO idspec.demo.tv (v) VALUES $values")
+    sql(s"INSERT INTO idspec.demo.tv (v) VALUES $values")
+    val ids = sql("SELECT id FROM idspec.demo.tv").collect().map(_.getLong(0)).toSeq
+    assert(ids.size == 80 && ids.distinct.size == 80, s"ids not unique: $ids")
+    // driver-held rows are written by one task: one file per INSERT
+    val st = new SnapshotStore(Paths.get(wh, "demo", "tv"))
+    assert(st.head().get.files.size == 2)
+  }
+
   test("START WITH / INCREMENT BY are respected") {
     sql("""CREATE TABLE idspec.demo.t2
            (id BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 100 INCREMENT BY 5),

@@ -124,8 +124,9 @@ class LakeFileWriterSpec extends AnyFunSuite {
     spark.conf.set(key, "INT96")
     try {
       sql("CREATE TABLE lfw.t.ts (id INT, ts TIMESTAMP) USING iceberg")
-      sql("""INSERT INTO lfw.t.ts VALUES
-             (1, TIMESTAMP '2024-01-02 03:04:05'), (2, TIMESTAMP '2024-06-01 00:00:00')""")
+      // one INSERT per file
+      sql("INSERT INTO lfw.t.ts VALUES (1, TIMESTAMP '2024-01-02 03:04:05')")
+      sql("INSERT INTO lfw.t.ts VALUES (2, TIMESTAMP '2024-06-01 00:00:00')")
       sql("UPDATE lfw.t.ts SET id = 3 WHERE id = 2") // the rewrite writer too
       assert(spark.conf.get(key) == "INT96", "the session setting was changed")
 

@@ -43,14 +43,18 @@ class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     sql("CREATE NAMESPACE IF NOT EXISTS morspec.demo")
   }
 
-  private def makeTable(name: String, extraProps: String = ""): Unit = {
+  /** Five rows in one data file, or in five (`filePerRow`: one INSERT
+    * per row). */
+  private def makeTable(name: String, extraProps: String = "",
+      filePerRow: Boolean = false): Unit = {
     sql(s"DROP TABLE IF EXISTS morspec.demo.$name")
     sql(s"""CREATE TABLE morspec.demo.$name (id INT, grp STRING, v INT)
             USING graft
             TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read'$extraProps)""")
-    sql(s"""INSERT INTO morspec.demo.$name VALUES
-            (1, 'a', 10), (2, 'a', 20), (3, 'b', NULL),
-            (4, 'b', 40), (5, 'c', 50)""")
+    val rows = Seq("(1, 'a', 10)", "(2, 'a', 20)", "(3, 'b', NULL)",
+      "(4, 'b', 40)", "(5, 'c', 50)")
+    if (filePerRow) rows.foreach(r => sql(s"INSERT INTO morspec.demo.$name VALUES $r"))
+    else sql(s"INSERT INTO morspec.demo.$name VALUES ${rows.mkString(", ")}")
   }
 
   test("MOR DELETE removes rows without touching data files") {
@@ -203,7 +207,7 @@ class MorDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CDC does not re-emit old deletes when retain() rewrites tuple files") {
-    makeTable("t13")
+    makeTable("t13", filePerRow = true)
     sql("DELETE FROM morspec.demo.t13 WHERE id = 1 OR id = 3") // positional
     val st = store("t13")
     val vDelete = st.currentVersion().get

@@ -203,4 +203,24 @@ class ObjectStoreLakeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sql("SELECT id FROM osc.d.fcopy ORDER BY id")
       .collect().map(_.getInt(0)).toSeq == Seq(1, 2))
   }
+
+  test("expire_snapshots deletes through the MetaIO seam") {
+    sql("CREATE TABLE osc.d.exp (id INT) USING iceberg")
+    sql("INSERT INTO osc.d.exp VALUES (1)")
+    sql("INSERT INTO osc.d.exp VALUES (2)")
+    sql("INSERT OVERWRITE osc.d.exp VALUES (3)")
+    // v1 create, v2 and v3 one file each, v4 the overwrite's one file
+    val shared = store("d", "exp")
+    val dropped = shared.read(3L).files.map(_.path)
+    assert(dropped.size == 2, dropped)
+    // a private backend instance counts this call's operations only
+    val own = new ObjectStoreMetaIO()
+    val st = new SnapshotStore(shared.tableDir, io = own)
+    assert(Maintenance.expireSnapshots(st, keepLast = 1) == Seq(1L, 2L, 3L))
+    // two unreferenced data files + three version files
+    assert(own.opCounts.get("DELETE").get() == 5L, own.opCounts)
+    dropped.foreach(p => assert(!Files.exists(st.tableDir.resolve(p)), p))
+    assert(st.listVersions() == Seq(4L))
+    assert(sql("SELECT id FROM osc.d.exp").collect().map(_.getInt(0)).toSeq == Seq(3))
+  }
 }

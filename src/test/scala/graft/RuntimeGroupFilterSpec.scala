@@ -33,14 +33,15 @@ class RuntimeGroupFilterSpec extends AnyFunSuite {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS rgf.t")
     spark.sql("""CREATE TABLE rgf.t.target (id INT, v STRING, part INT)
                  USING iceberg PARTITIONED BY (part)""")
-    spark.sql("""INSERT INTO rgf.t.target VALUES
-                 (1,'a',1),(2,'b',1),(3,'c',2),(4,'d',2),(5,'e',3)""")
+    // one INSERT per row: one data file per row
+    Seq("(1,'a',1)", "(2,'b',1)", "(3,'c',2)", "(4,'d',2)", "(5,'e',3)")
+      .foreach(r => spark.sql(s"INSERT INTO rgf.t.target VALUES $r"))
     spark.sql("CREATE TABLE rgf.t.src (id INT, v STRING) USING iceberg")
     spark.sql("INSERT INTO rgf.t.src VALUES (3,'C3'),(4,'D4')")
 
     val store = new SnapshotStore(Paths.get(wh, "t", "target"))
     val before = store.head().get
-    assert(before.files.size == 5) // one file per row at this insert shape
+    assert(before.files.size == 5)
 
     spark.sql("""MERGE INTO rgf.t.target t USING rgf.t.src s
                  ON t.id = s.id

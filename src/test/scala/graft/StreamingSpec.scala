@@ -42,6 +42,33 @@ class StreamingSpec extends SparkSpec {
     assert(closed.head.end_micros == micros(10))
   }
 
+  test("the events schema probe follows a fixture rewritten at the same path") {
+    val dir = Files.createTempDirectory("graft-events-fixture")
+    def writeFixture(tsType: String): Unit = {
+      val out = Files.createTempDirectory("graft-events-out")
+      spark.range(3).selectExpr("id AS event_id",
+          s"CAST(TIMESTAMP '2024-01-02 03:04:05' AS $tsType) AS ts",
+          "id AS user_id", "'view' AS event_type", "1.0D AS value",
+          "'{}' AS props")
+        .coalesce(1).write.mode("overwrite").parquet(out.resolve("p").toString)
+      val part = Files.list(out.resolve("p")).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val fixture = dir.resolve("events.parquet")
+      val before = if (Files.exists(fixture))
+        Some(Files.getLastModifiedTime(fixture).toMillis) else None
+      Files.copy(part, fixture, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // a rewrite within the clock's resolution still moves the mtime
+      before.foreach(t => Files.setLastModifiedTime(fixture,
+        java.nio.file.attribute.FileTime.fromMillis(t + 2000)))
+    }
+    writeFixture("TIMESTAMP")
+    assert(Streams.rawSchema(spark, dir.toString)("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    writeFixture("TIMESTAMP_NTZ")
+    assert(Streams.rawSchema(spark, dir.toString)("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+  }
+
   test("windowed aggregation: stream result equals batch result") {
     val streamed = StreamingOpsAccess.runWindow(spark, sf)
     val batch = Tables.events(spark, sf)

@@ -76,4 +76,37 @@ class WriteDistributionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = sql("SELECT id, p FROM distspec.demo.hashed ORDER BY id").collect()
     assert(a.toSeq == b.toSeq)
   }
+
+  test("a multi-row VALUES insert over 3 partition values commits exactly 3 files") {
+    sql("""CREATE TABLE distspec.demo.vals (id INT, p STRING)
+           USING graft PARTITIONED BY (p)""")
+    val rows = (1 to 30).map(i => s"($i, '${"abc"(i % 3)}')").mkString(", ")
+    sql(s"INSERT INTO distspec.demo.vals VALUES $rows")
+    val head = store("vals").head().get
+    assert(head.files.size == 3, s"got ${head.files.map(_.partitionValues)}")
+    assert(head.files.map(_.partitionValues("p")).sorted == Seq("a", "b", "c"))
+    assert(head.files.map(_.rowCount).sum == 30L)
+    // a local frame takes the same path; unpartitioned, it is one file
+    sql("CREATE TABLE distspec.demo.flat (id INT, p STRING) USING graft")
+    import spark.implicits._
+    (1 to 30).map(i => (i, "x")).toDF("id", "p")
+      .writeTo("distspec.demo.flat").append()
+    assert(store("flat").head().get.files.size == 1)
+    assert(sql("SELECT count(*) FROM distspec.demo.vals")
+      .collect().head.getLong(0) == 30L)
+  }
+
+  test("an 8-partition non-local source still fans out per task x value") {
+    sql("""CREATE TABLE distspec.demo.wide (id INT, p INT)
+           USING graft PARTITIONED BY (p)""")
+    spark.range(0, 200, 1, 8)
+      .selectExpr("CAST(id AS INT) AS id", "CAST(id % 4 AS INT) AS p")
+      .createOrReplaceTempView("dist_src_wide")
+    sql("INSERT INTO distspec.demo.wide SELECT * FROM dist_src_wide")
+    // each of the 8 tasks holds 25 consecutive ids, so all 4 values
+    val files = store("wide").head().get.files
+    assert(files.size == 32, s"expected 8 tasks x 4 values, got ${files.size}")
+    assert(sql("SELECT count(*) FROM distspec.demo.wide")
+      .collect().head.getLong(0) == 200L)
+  }
 }

@@ -37,7 +37,13 @@ class MetaIOSpec extends AnyFunSuite {
       require(v != null, s"no staged object at $src")
       objects.put(key(dst), v)
     }
+    /** Calls of `list` from outside this backend. */
+    val lists = new java.util.concurrent.atomic.AtomicLong()
     override def list(dir: Path): Seq[Path] = {
+      lists.incrementAndGet()
+      children(dir)
+    }
+    private def children(dir: Path): Seq[Path] = {
       // one entry per immediate child — synthesizing "directory" entries
       // for deeper keys, like an S3 delimiter listing's CommonPrefixes
       val prefix = key(dir) + "/"
@@ -56,7 +62,7 @@ class MetaIOSpec extends AnyFunSuite {
     }
     // a key-value store has no directories: directory-ness is "any key
     // under the prefix", which is exactly how S3 listings behave
-    override def isDirectory(p: Path): Boolean = list(p).nonEmpty ||
+    override def isDirectory(p: Path): Boolean = children(p).nonEmpty ||
       listTree(p).nonEmpty
     override def isFile(p: Path): Boolean = objects.containsKey(key(p))
     override def exists(p: Path): Boolean = isFile(p) || isDirectory(p)
@@ -150,5 +156,89 @@ class MetaIOSpec extends AnyFunSuite {
     assert(v2.manifests.take(3).map(_.path) == v1.manifests.map(_.path),
       "append rewrote the parent's chunks")
     assert(store.read(2L).files.size == n1 + 100)
+  }
+
+  private def appendOne(store: SnapshotStore, name: String): Snapshot =
+    store.commit(prev => snap(prev.map(_.files).getOrElse(Seq.empty) :+
+      DataFile(s"data/$name.parquet", 1, 10, Map.empty, Map.empty,
+        seq = Snapshot.UnassignedSeq)))
+
+  private val hint = Paths.get("/mem/h/metadata/version-hint.text")
+
+  test("head() on a table whose hint is valid issues no list") {
+    val io = new InMemoryMetaIO
+    val store = new SnapshotStore(Paths.get("/mem/h"), io = io)
+    store.init()
+    (1 to 5).foreach(i => appendOne(store, s"f$i"))
+    io.lists.set(0)
+    assert(store.head().map(_.version).contains(5L))
+    assert(store.head().get.files.size == 5)
+    assert(io.lists.get() == 0L, s"${io.lists.get()} list calls")
+  }
+
+  test("a stale hint is probed forward; a garbage or dangling hint resolves by listing") {
+    val io = new InMemoryMetaIO
+    val store = new SnapshotStore(Paths.get("/mem/h"), io = io)
+    store.init()
+    (1 to 3).foreach(i => appendOne(store, s"f$i"))
+    // stale: commits landed past the hint (crash between the two steps)
+    io.replaceAtomic(hint, "1")
+    io.lists.set(0)
+    assert(store.currentVersion().contains(3L))
+    assert(io.lists.get() == 0L, "a stale hint is probed forward, not listed")
+    // garbage, a hint naming a missing version, and no hint at all: listed
+    for (bad <- Seq("not-a-version", "", "7", "-1")) {
+      io.replaceAtomic(hint, bad)
+      io.lists.set(0)
+      assert(store.currentVersion().contains(3L), s"hint '$bad'")
+      assert(store.head().get.files.size == 3, s"hint '$bad'")
+      assert(io.lists.get() > 0L, s"hint '$bad' resolved without a listing")
+    }
+    io.delete(hint)
+    assert(store.currentVersion().contains(3L))
+    // the next commit continues the chain and repairs the hint
+    assert(appendOne(store, "f4").version == 4L)
+    assert(io.readString(hint) == "4")
+  }
+
+  test("a commit through another store instance is seen by the next head()") {
+    val io = new InMemoryMetaIO
+    val store = new SnapshotStore(Paths.get("/mem/h"), io = io)
+    store.init()
+    appendOne(store, "a")
+    assert(store.head().get.files.map(_.path) == Seq("data/a.parquet"))
+    // a second store on a second backend instance over the same objects
+    // (another process, as far as the first store can tell)
+    val otherIo = new InMemoryMetaIO
+    otherIo.objects.putAll(io.objects)
+    val other = new SnapshotStore(Paths.get("/mem/h"), io = otherIo)
+    appendOne(other, "b")
+    io.objects.putAll(otherIo.objects)
+    val h = store.head().get
+    assert(h.version == 2L)
+    assert(h.files.map(_.path) == Seq("data/a.parquet", "data/b.parquet"))
+  }
+
+  test("a table re-created at one path never returns the dropped table's snapshot") {
+    val io = new InMemoryMetaIO
+    val store = new SnapshotStore(Paths.get("/mem/h"), io = io)
+    store.init()
+    appendOne(store, "old1")
+    appendOne(store, "old2")
+    assert(store.head().get.files.size == 2)
+    // another process drops the table and re-creates it with the same
+    // version numbers; nothing in this process parses the new chain
+    store.drop()
+    def file(name: String) =
+      DataFile(s"data/$name.parquet", 1, 10, Map.empty, Map.empty, seq = 1L)
+    io.createExclusive(Paths.get("/mem/h/metadata/v1.json"),
+      Snapshot.toJson(snap(Seq(file("new1"))).copy(version = 1L)))
+    io.createExclusive(Paths.get("/mem/h/metadata/v2.json"),
+      Snapshot.toJson(snap(Seq(file("new1"), file("new2")))
+        .copy(version = 2L, parentVersion = Some(1L))))
+    io.replaceAtomic(hint, "2")
+    assert(store.head().get.files.map(_.path) ==
+      Seq("data/new1.parquet", "data/new2.parquet"))
+    assert(store.read(1L).files.map(_.path) == Seq("data/new1.parquet"))
   }
 }
